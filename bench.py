@@ -281,17 +281,13 @@ def main() -> int:
     # per dimension refresh, like the dims above). The ingest bench
     # measures that exact posture: the timed region is the per-batch
     # work (view bind + spark.sql + execution); the once-per-refresh
-    # text build sits outside it, like dim prep. The DataFrame-path
-    # equivalent (label_flows -> split -> fan-out -> summing_aggregate)
-    # is pinned row-identical by tests/test_flowsql.py.
+    # text build sits outside it, like dim prep.
     from kubenetmon_spark.flowsql import (
         collect_lpm_segments,
         flow_batch_sql,
         register_flow_dim_views,
-        supports_sql_path,
     )
 
-    assert supports_sql_path(DEMO_CFG, prepared)
     _views = register_flow_dim_views(spark, prepared, dim, tag="bench")
     _segments = collect_lpm_segments(dim)
     _ingest_sql = flow_batch_sql(

@@ -43,7 +43,7 @@ def build_cloud_prefixes(raw: DataFrame) -> DataFrame:
     parts = F.split(F.col("prefix"), "/")
     df = (
         raw.withColumn("prefix_len", parts.getItem(1).cast("int"))
-        .withColumn("net_start", ip_to_long(parts.getItem(0)))
+        .withColumn("net_start", ip_to_long("split(prefix, '/')[0]"))
         .withColumn(
             "net_end",
             F.col("net_start")

@@ -1,4 +1,10 @@
-"""IPv4 helpers as pure Column expressions (no UDFs).
+"""IP helpers: each expression is defined ONCE as SQL text, and the
+Column helper wraps that text in ``F.expr`` (no UDFs, no regex in the
+v4 path).
+
+The labeler (flowsql.py) embeds the ``*_sql`` forms in its one query
+text; DataFrame callers use the Column forms. Both therefore evaluate
+the same expression tree.
 
 The reference carries IPv4 as big-endian uint32 in the protobuf
 (reference pkg/grpc/flow_handler.proto:34, pkg/collector/collector.go:252-255)
@@ -14,51 +20,60 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def ip_to_long(ip: Column | str) -> Column:
-    """Dotted-quad string -> numeric (big-endian uint32 as long).
+def _sql_arg(c: Column | str) -> str:
+    """A helper argument as SQL text. A ``str`` is a column name or a
+    SQL expression. A Column must be a plain column reference or an
+    ``F.expr`` column (e.g. another helper's result); anything else has
+    no faithful SQL rendering, so pass its SQL text instead."""
+    if isinstance(c, str):
+        return c
+    node = c._jc.node()
+    if node.getClass().getSimpleName() not in (
+        "UnresolvedAttribute",
+        "SqlExpression",
+    ):
+        raise TypeError(
+            "pass a column name, an F.col reference or an F.expr column"
+        )
+    return f"({node.sql()})"
 
-    Pure expression: split + fold, stays in codegen. Total function:
-    non-dotted-quad input (a v6 string in mixed-family streams,
-    garbage) yields NULL via try_cast rather than an ANSI cast error —
-    the caller's miss/reject path handles null, a thrown cast would
-    kill the whole task for one bad row.
+
+def ip_to_long_sql(ip: str) -> str:
+    """Dotted-quad SQL expression -> numeric (big-endian uint32 as
+    long), as SQL text.
+
+    Total function: NULL unless there are exactly four octets, each an
+    integer in 0-255 (so a v6 string, '1.2.3', '1.2.3.4.5' or
+    '1.2.3.999' all yield NULL instead of a wrong address). The fold
+    starts from a leading 1: after k valid octets the accumulator is in
+    [256^k, 2*256^k), so ``acc >= 2^32`` means exactly four, and a
+    fifth octet or an out-of-range one nulls the fold. try_cast keeps a
+    garbage octet from raising an ANSI cast error.
     """
-    col = F.col(ip) if isinstance(ip, str) else ip
-    return F.aggregate(
-        F.transform(F.split(col, r"\."), lambda x: x.try_cast("long")),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc * 256 + x,
+    return (
+        f"aggregate(transform(split({ip}, '\\\\.'), x -> try_cast(x AS LONG)), "
+        "CAST(1 AS LONG), (acc, x) -> CASE WHEN acc < 4294967296 "
+        "AND x BETWEEN 0 AND 255 THEN acc * 256 + x END, "
+        "acc -> CASE WHEN acc >= 4294967296 THEN acc - 4294967296 END)"
     )
+
+
+def ip_to_long(ip: Column | str) -> Column:
+    """Column form of :func:`ip_to_long_sql`."""
+    return F.expr(ip_to_long_sql(_sql_arg(ip)))
+
+
+def long_to_ip_sql(num: str) -> str:
+    """Numeric -> dotted-quad string, as SQL text."""
+    octets = ", ".join(
+        f"shiftright({num}, {s}) & 255" for s in (24, 16, 8)
+    )
+    return f"format_string('%d.%d.%d.%d', {octets}, {num} & 255)"
 
 
 def long_to_ip(num: Column | str) -> Column:
-    """Numeric -> dotted-quad string."""
-    col = F.col(num) if isinstance(num, str) else num
-    return F.format_string(
-        "%d.%d.%d.%d",
-        F.shiftright(col, 24).bitwiseAND(F.lit(255)),
-        F.shiftright(col, 16).bitwiseAND(F.lit(255)),
-        F.shiftright(col, 8).bitwiseAND(F.lit(255)),
-        col.bitwiseAND(F.lit(255)),
-    )
-
-
-def is_private_ip_num(num: Column) -> Column:
-    """RFC1918 + loopback + link-local predicate on the numeric form.
-
-    Mirrors the reference's private-IP short-circuit that bypasses the
-    cloud-prefix LPM lookup (reference pkg/labeler/remote.go:131-140:
-    ``IsPrivate() || IsLocal() || IsLoopback()`` — site-local RFC1918,
-    link-local 169.254/16, loopback, and the unspecified address).
-    """
-    return (
-        ((num >= _N("10.0.0.0")) & (num <= _N("10.255.255.255")))
-        | ((num >= _N("172.16.0.0")) & (num <= _N("172.31.255.255")))
-        | ((num >= _N("192.168.0.0")) & (num <= _N("192.168.255.255")))
-        | ((num >= _N("127.0.0.0")) & (num <= _N("127.255.255.255")))
-        | ((num >= _N("169.254.0.0")) & (num <= _N("169.254.255.255")))
-        | (num == F.lit(0))  # unspecified 0.0.0.0
-    )
+    """Column form of :func:`long_to_ip_sql`."""
+    return F.expr(long_to_ip_sql(_sql_arg(num)))
 
 
 def py_ip_to_long(ip: str) -> int:
@@ -66,8 +81,35 @@ def py_ip_to_long(ip: str) -> int:
     return int(ipaddress.IPv4Address(ip))
 
 
-def _N(ip: str) -> Column:
-    return F.lit(py_ip_to_long(ip))
+_PRIVATE_V4 = [
+    ("10.0.0.0", "10.255.255.255"),
+    ("172.16.0.0", "172.31.255.255"),
+    ("192.168.0.0", "192.168.255.255"),
+    ("127.0.0.0", "127.255.255.255"),
+    ("169.254.0.0", "169.254.255.255"),
+]
+
+
+def is_private_ip_num_sql(num: str) -> str:
+    """RFC1918 + loopback + link-local predicate on the numeric form,
+    as SQL text.
+
+    Mirrors the reference's private-IP short-circuit that bypasses the
+    cloud-prefix LPM lookup (reference pkg/labeler/remote.go:131-140:
+    ``IsPrivate() || IsLocal() || IsLoopback()`` — site-local RFC1918,
+    link-local 169.254/16, loopback, and the unspecified address).
+    """
+    parts = [
+        f"({num} >= {py_ip_to_long(a)} AND {num} <= {py_ip_to_long(b)})"
+        for a, b in _PRIVATE_V4
+    ]
+    parts.append(f"{num} = 0")  # unspecified 0.0.0.0
+    return "(" + " OR ".join(parts) + ")"
+
+
+def is_private_ip_num(num: Column | str) -> Column:
+    """Column form of :func:`is_private_ip_num_sql`."""
+    return F.expr(is_private_ip_num_sql(_sql_arg(num)))
 
 
 def ipv6_pair_to_string(hi, lo):
@@ -77,7 +119,6 @@ def ipv6_pair_to_string(hi, lo):
     no UDF; the :: compression is presentation sugar readers don't
     need and engines disagree on, so the canonical form is fixed-width.
     """
-    from pyspark.sql import functions as F
 
     def grp(col, shift):
         return F.lpad(
@@ -92,84 +133,95 @@ def ipv6_pair_to_string(hi, lo):
     return F.concat_ws(":", *parts)
 
 
-def is_private_ipv6_pair(hi, lo):
-    """v6 analogue of is_private_ip_num (labeler J6 short-circuit,
-    reference pkg/labeler/remote.go:131-140): true for ULA fc00::/7,
-    link-local fe80::/10, and loopback ::1 — the ranges that must
-    bypass the cloud-prefix LPM and classify as INTRA_VPC/local.
-    Pure bit tests on the hi64; loopback checks both halves.
+def is_private_ipv6_pair_sql(hi: str, lo: str) -> str:
+    """v6 analogue of :func:`is_private_ip_num_sql` (labeler J6
+    short-circuit, reference pkg/labeler/remote.go:131-140), as SQL
+    text: true for ULA fc00::/7, link-local fe80::/10, and loopback
+    ::1 — the ranges that must bypass the cloud-prefix LPM and classify
+    as INTRA_VPC/local. Pure bit tests on the hi64; loopback checks
+    both halves.
     """
-    from pyspark.sql import functions as F
+    return (
+        f"(shiftrightunsigned({hi}, 57) = {0x7E}"  # fc00::/7
+        f" OR shiftrightunsigned({hi}, 54) = {0x3FA}"  # fe80::/10
+        f" OR ({hi} = 0 AND {lo} = 1))"  # ::1
+    )
 
-    ula = F.shiftrightunsigned(hi, 57) == F.lit(0x7E)    # fc00::/7
-    link_local = F.shiftrightunsigned(hi, 54) == F.lit(0x3FA)  # fe80::/10
-    loopback = (hi == F.lit(0)) & (lo == F.lit(1))
-    return ula | link_local | loopback
+
+def is_private_ipv6_pair(hi: Column | str, lo: Column | str) -> Column:
+    """Column form of :func:`is_private_ipv6_pair_sql`."""
+    return F.expr(is_private_ipv6_pair_sql(_sql_arg(hi), _sql_arg(lo)))
 
 
-def ipv6_groups(col: Column | str) -> Column:
+_HEXG = "[0-9a-f]{1,4}"
+
+
+def ipv6_groups_sql(ip: str) -> str:
     """IPv6 string (full or ``::``-compressed) -> validated 8-element
     hex-group array, or NULL for out-of-contract forms (dotted-quad
-    tails, zone ids, multi-``::``, wrong group counts).
+    tails, zone ids, multi-``::``, wrong group counts), as SQL text.
 
     ONE whole-string regex per form decides validity (not a per-group
     regex — this expression runs per FACT ROW in the labeler, so the
     regex count is the cost driver), then array ops expand the ``::``.
-    Stage this into a real column and feed :func:`ipv6_pair_from_groups`
-    so the parse is evaluated once per row, not once per consumer of
-    the pair."""
-    c = F.lower(F.col(col) if isinstance(col, str) else col)
-    hexg = "[0-9a-f]{1,4}"
-    full_ok = c.rlike(f"^{hexg}(:{hexg}){{7}}$")
-    comp_ok = c.rlike(f"^({hexg}(:{hexg})*)?::({hexg}(:{hexg})*)?$")
-    has_dc = c.contains("::")
-    parts = F.split(c, "::")
-    left = parts.getItem(0)
-    right = F.when(F.size(parts) == 2, parts.getItem(1))
-    lg = F.filter(F.split(left, ":"), lambda x: x != "")
-    rg = F.filter(F.split(right, ":"), lambda x: x != "")
-    pad = F.lit(8) - F.size(lg) - F.size(rg)
-    expanded = F.concat(
-        lg, F.array_repeat(F.lit("0"), pad.cast("int")), rg
+    Stage this into a real column and feed :func:`ipv6_pair_sql` so the
+    parse is evaluated once per row, not once per consumer of the
+    pair. ``pad >= 1``: '::' must stand for AT LEAST one zero group
+    ('1:2:3:4:5:6:7::8' is RFC-invalid and must null, not parse)."""
+    c = f"lower({ip})"
+    full_ok = f"{c} RLIKE '^{_HEXG}(:{_HEXG}){{7}}$'"
+    comp_ok = f"{c} RLIKE '^({_HEXG}(:{_HEXG})*)?::({_HEXG}(:{_HEXG})*)?$'"
+    parts = f"split({c}, '::')"
+    lg = f"filter(split({parts}[0], ':'), x -> x != '')"
+    rg = (
+        f"filter(split(CASE WHEN size({parts}) = 2 THEN {parts}[1] END, ':'),"
+        " x -> x != '')"
     )
-    # pad >= 1: '::' must stand for AT LEAST one zero group
-    # ('1:2:3:4:5:6:7::8' is RFC-invalid and must null, not parse)
+    pad = f"(8 - size({lg}) - size({rg}))"
     return (
-        F.when(~has_dc & full_ok, F.split(c, ":"))
-        .when(has_dc & comp_ok & (pad >= 1), expanded)
+        f"CASE WHEN NOT contains({c}, '::') AND {full_ok} THEN split({c}, ':') "
+        f"WHEN contains({c}, '::') AND {comp_ok} AND {pad} >= 1 "
+        f"THEN concat({lg}, array_repeat('0', CAST({pad} AS INT)), {rg}) END"
     )
 
 
-def ipv6_pair_from_groups(groups: Column) -> tuple[Column, Column]:
-    """Validated group array (:func:`ipv6_groups`, ideally staged as a
-    column) -> signed int64 ``(hi, lo)``. ``conv`` + ``shiftleft`` wrap
-    top-bit addresses into the signed int64 exactly like the
-    dimension\'s split128; a NULL array yields a NULL pair."""
-    g = [F.conv(groups.getItem(i), 16, 10).cast("long") for i in range(8)]
-    hi = (
-        F.shiftleft(g[0], 48)
-        .bitwiseOR(F.shiftleft(g[1], 32))
-        .bitwiseOR(F.shiftleft(g[2], 16))
-        .bitwiseOR(g[3])
-    )
-    lo = (
-        F.shiftleft(g[4], 48)
-        .bitwiseOR(F.shiftleft(g[5], 32))
-        .bitwiseOR(F.shiftleft(g[6], 16))
-        .bitwiseOR(g[7])
-    )
-    return hi, lo
+def ipv6_groups(col: Column | str) -> Column:
+    """Column form of :func:`ipv6_groups_sql`."""
+    return F.expr(ipv6_groups_sql(_sql_arg(col)))
+
+
+def ipv6_pair_sql(groups: str) -> tuple[str, str]:
+    """Validated group array (:func:`ipv6_groups_sql`, ideally staged
+    as a column) -> signed int64 ``(hi, lo)`` as two SQL texts.
+    ``conv`` + ``shiftleft`` wrap top-bit addresses into the signed
+    int64 exactly like the dimension's split128; a NULL array yields a
+    NULL pair."""
+    g = [f"CAST(conv({groups}[{i}], 16, 10) AS BIGINT)" for i in range(8)]
+
+    def word(gs):
+        return (
+            f"(shiftleft({gs[0]}, 48) | shiftleft({gs[1]}, 32)"
+            f" | shiftleft({gs[2]}, 16) | {gs[3]})"
+        )
+
+    return word(g[:4]), word(g[4:])
+
+
+def ipv6_pair_from_groups(groups: Column | str) -> tuple[Column, Column]:
+    """Column form of :func:`ipv6_pair_sql`."""
+    hi, lo = ipv6_pair_sql(_sql_arg(groups))
+    return F.expr(hi), F.expr(lo)
 
 
 def ipv6_string_to_pair(col: Column | str) -> tuple[Column, Column]:
     """IPv6 string (full or ``::``-compressed hex groups) -> signed
     int64 ``(hi, lo)`` pair — the 128-bit form the v6 LPM joins on
-    (operators/lpm.py). Pure Column expressions, no UDF.
+    (operators/lpm.py). Pure SQL expressions, no UDF.
 
     Parse contract: hex groups (any case), at most one ``::``;
     dotted-quad tails, zone ids, and malformed group counts yield a
     NULL pair, which the labeler turns into a per-row reject (fail
     loud, never misclassify). Hot paths should stage
-    :func:`ipv6_groups` into a column and use
-    :func:`ipv6_pair_from_groups` (one parse per row)."""
-    return ipv6_pair_from_groups(ipv6_groups(col))
+    :func:`ipv6_groups_sql` into a column and use
+    :func:`ipv6_pair_sql` (one parse per row)."""
+    return ipv6_pair_from_groups(f"({ipv6_groups_sql(_sql_arg(col))})")

@@ -424,11 +424,10 @@ def k_hop_reachability(
     ``seeds`` is a 1-column DataFrame named ``node``. Returns
     ``(node, hops)``, hops in [0, k], one row per reached node.
 
-    ``edges_are_distinct=True`` skips the defensive edge dedup — the
-    ``prefixes_are_disjoint`` pattern: when the caller PROVES the edge
-    list is duplicate-free (e.g. built from a distinct on narrower
-    pre-projection keys), the full-width edge shuffle disappears and
-    only the materialization remains. Duplicate edges would not change
+    ``edges_are_distinct=True`` skips the defensive edge dedup: when
+    the caller PROVES the edge list is duplicate-free (e.g. built from
+    a distinct on narrower pre-projection keys), the full-width edge
+    shuffle disappears and only the materialization remains. Duplicate edges would not change
     the result (BFS reachability is idempotent over parallel edges) —
     the dedup exists to bound the per-level join fan-out, so only skip
     it when duplicates genuinely cannot occur.

@@ -1,53 +1,33 @@
 """The flow labeler: raw observations -> enriched, classified flow rows.
 
-Re-expresses the reference's `Labeler.LabelFlow`
-(reference pkg/labeler/labeler.go:236-377) plus the agent-side filters
-(reference pkg/collector/collector.go:228-244) as one declarative
-DataFrame transform. Where the Go code returns typed errors per
-observation, we carry a ``reject_reason`` column and split the stream —
-the reference's error taxonomy (reference cmd/server/server.go:100-117)
-becomes a dead-letter predicate, preserving observability.
+The labeling itself is ONE SQL text (flowsql.labeled_sql — the
+reference's `Labeler.LabelFlow`, reference pkg/labeler/labeler.go:236-377,
+plus the agent-side filters); this module derives the dimensions it
+joins against and binds DataFrames to it:
 
-Operator map (SURVEY.md §2): F1-F7 filters, J1-J7 joins, P1-P10
-projections, all in here; X1/A1/A2 live in operators/flows.py.
-
-Endpoint resolution and NAT: conntrack's reply tuple is the un-NAT'd
-truth — the real remote of a flow is ``reply_src`` (who answers), the
-real local is ``orig_src`` (who initiated). This single rule covers all
-four NAT shapes in the reference's conformance tests (egress NAT where
-reply comes back to the node IP, Azure-style reply to the pod IP, service
-VIPs resolving to a backend pod, and plain pod-to-pod;
-reference pkg/labeler/labeler_test.go:323-1177, endpoints 1775-2010).
+- :func:`label_flows` — one call, one lazy ``spark.sql`` over fresh
+  dims (batch and streaming DataFrames alike);
+- :func:`prepare_label_dims` — long-lived callers (the streaming jobs)
+  derive and persist the dims once per refresh and collect the small
+  node dims to in-plan literals.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+import uuid
+
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from kubenetmon_spark.config import RuntimeConfig
 from kubenetmon_spark.dims import pods_with_ambiguity
-from kubenetmon_spark.functions.ip import ip_to_long, is_private_ip_num
-from kubenetmon_spark.operators.lpm import disjoint_prefixes, lpm_lookup, lpm_lookup_disjoint
-
-_POD_FIELDS = ["name", "namespace", "node_name", "label_app", "label_k8s_app", "label_control_plane_id"]
-
-
-def _reject(cond: Column, reason: str, current: Column) -> Column:
-    """First reject reason wins (mirrors the Go early-return order)."""
-    return F.when(current.isNotNull(), current).when(cond, F.lit(reason)).otherwise(F.lit(None))
-
-
-def _sql_lit(s: str) -> str:
-    """A config string as a safe SQL string literal — backslash-escaped
-    for Spark's DEFAULT parser mode (verified: both ``\\'`` and ``''``
-    un-escape there; with legacy ``spark.sql.parser.escapedStringLiterals``
-    NOTHING un-escapes, so embedded quotes are unrepresentable in that
-    mode — the engine's session factory never enables it). cfg values
-    are trusted deployment config; this only guarantees a stray quote
-    corrupts nothing."""
-    return "'" + str(s).replace("\\", "\\\\").replace("'", "\\'") + "'"
-
+from kubenetmon_spark.flowsql import labeled_sql
+from kubenetmon_spark.operators.lpm import (
+    band_segments,
+    disjoint_prefixes,
+    disjoint_prefixes6,
+    lpm6_sides,
+)
 
 # Above this many nodes, the node-IP set / zone map stay broadcast
 # JOINS instead of in-plan literals (an IN-set / map literal of ~10k
@@ -56,94 +36,19 @@ def _sql_lit(s: str) -> str:
 LITERAL_NODE_DIM_LIMIT = 10_000
 
 
-def _pick(local_side: str, remote_side: str, col: str, alias: str) -> str:
-    """P4 orientation CASE (reference labeler.go:276-331): toPodOnNode
-    flips which endpoint is 'local' and which counters flow 'out'."""
-    return (
-        f"CASE WHEN flow_type = 'toPodOnNode' THEN {remote_side}_{col} "
-        f"ELSE {local_side}_{col} END AS {alias}"
+def _node_dims(nodes: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(node_ips, zones): the distinct node IPs for the node-flow
+    filter, and one zone per node name for the AZ lookup. One row per
+    name is ENFORCED (min zone — deterministic), not assumed: k8s
+    guarantees name uniqueness at any instant, but a stale/concatenated
+    dim snapshot with duplicate names would silently MULTIPLY fact rows
+    in the zone join — corrupting every downstream sum — where the
+    reference's map-keyed cache just takes the last write."""
+    node_ips = nodes.select(F.col("internal_ip").alias("_nip")).distinct()
+    zones = nodes.groupBy(F.col("name").alias("_zn")).agg(
+        F.min("zone").alias("_zz")
     )
-
-
-def p4_select_exprs() -> list[str]:
-    """The P4 local/remote normalization block as SQL expression strings
-    — shared verbatim by the DataFrame path below and the per-batch
-    SQL-text path (flowsql.py), so both orient endpoints and counters
-    identically by construction."""
-    sel = [
-        _pick("src", "dst", "ip", "local_ip"),
-        _pick("src", "dst", "port", "local_port"),
-        _pick("dst", "src", "ip", "remote_ip"),
-        _pick("dst", "src", "port", "remote_port"),
-        # bytes_out: toPodOnNode -> reply counters, else orig (and the
-        # mirror for bytes_in) — remote_side is the THEN branch
-        _pick("orig", "reply", "bytes", "bytes_out"),
-        _pick("reply", "orig", "bytes", "bytes_in"),
-        _pick("orig", "reply", "packets", "packets_out"),
-        _pick("reply", "orig", "packets", "packets_in"),
-    ]
-    for f in _POD_FIELDS:
-        sel.append(_pick("src", "dst", f"pod_{f}", f"local_pod_{f}"))
-        sel.append(_pick("dst", "src", f"pod_{f}", f"remote_pod_{f}"))
-    return sel
-
-
-def zone_map_sql(zone_map: dict) -> str:
-    """The zone lookup as ONE SQL map-literal string (the reference's
-    in-memory Go map, labeler.go:341-346) — shared by label_flows'
-    literal path and flowsql.py."""
-    if zone_map:
-        entries = ", ".join(
-            f"{_sql_lit(k)}, " + ("NULL" if v is None else _sql_lit(v))
-            for k, v in sorted(zone_map.items())
-        )
-        return f"map({entries})"
-    return "CAST(map() AS MAP<STRING,STRING>)"
-
-
-def final_select_exprs(cfg: RuntimeConfig, reject_col: str = "_r") -> list[str]:
-    """P5/P9/P2 output projection as SQL expression strings — shared by
-    the DataFrame path and flowsql.py so the output schema and every
-    coalesce/fallback rule stay identical by construction."""
-    return [
-        "ts",
-        f"{reject_col} AS reject_reason",
-        "flow_type",
-        f"{_sql_lit(cfg.environment)} AS environment",
-        f"{_sql_lit(cfg.cluster)} AS cluster",
-        "_flags AS connectionFlags",
-        f"{_sql_lit(cfg.cloud)} AS localCloud",
-        f"{_sql_lit(cfg.region)} AS localRegion",
-        "'' AS localCell",
-        "local_az AS localAvailabilityZone",
-        "coalesce(local_pod_node_name, '') AS localNode",
-        "coalesce(local_pod_label_control_plane_id, '') AS localInstanceID",
-        "coalesce(local_pod_namespace, '') AS localNamespace",
-        "coalesce(local_pod_name, '') AS localPod",
-        "coalesce(local_pod_label_app, local_pod_label_k8s_app, '') AS localApp",
-        "local_ip AS localIPv4",
-        "local_port AS localPort",
-        "CASE WHEN proto = 6 THEN 'TCP' WHEN proto = 17 THEN 'UDP' "
-        "ELSE CAST(proto AS STRING) END AS proto",
-        "connection_class AS connectionClass",
-        "remote_cloud AS remoteCloud",
-        "remote_region AS remoteRegion",
-        "'' AS remoteCell",
-        "remote_az AS remoteAvailabilityZone",
-        "'UNKNOWN' AS remoteCluster",  # reference labeler.go:375
-        "coalesce(remote_pod_node_name, '') AS remoteNode",
-        "coalesce(remote_pod_label_control_plane_id, '') AS remoteInstanceID",
-        "coalesce(remote_pod_namespace, '') AS remoteNamespace",
-        "coalesce(remote_pod_name, '') AS remotePod",
-        "coalesce(remote_pod_label_app, remote_pod_label_k8s_app, '') AS remoteApp",
-        "remote_ip AS remoteIPv4",
-        "remote_port AS remotePort",
-        "remote_service AS remoteService",
-        "bytes_out",
-        "bytes_in",
-        "packets_out",
-        "packets_in",
-    ]
+    return node_ips, zones
 
 
 def prepare_label_dims(pods: DataFrame, nodes: DataFrame) -> dict:
@@ -152,10 +57,9 @@ def prepare_label_dims(pods: DataFrame, nodes: DataFrame) -> dict:
     its ambiguity guard, the node-IP set for the node-flow filter, and
     the zone-by-node-name lookup. Without this every micro-batch
     re-runs three small aggregations before it can broadcast — pure
-    fixed cost at high trigger rates (the same hoisting
-    ``prefixes_are_disjoint`` already does for the LPM dimension).
-    Pass the returned dict to ``label_flows(..., prepared=...)``;
-    release with ``release_label_dims`` on dimension refresh.
+    fixed cost at high trigger rates. Pass the returned dict to
+    flowsql.register_flow_dim_views / labeled_sql; release with
+    ``release_label_dims`` on dimension refresh.
 
     The node-keyed dims additionally collect to driver-side LITERALS
     (IP set, zone map) up to :data:`LITERAL_NODE_DIM_LIMIT` rows —
@@ -177,17 +81,14 @@ def prepare_label_dims(pods: DataFrame, nodes: DataFrame) -> dict:
     # keep the node-dim DataFrames out of every plan, so
     # persisting+counting them was two pure-overhead jobs per
     # dimension refresh (~0.8s measured warm at local[32]). Only the
-    # >LITERAL_NODE_DIM_LIMIT fallback, where label_flows
-    # broadcast-joins them per batch, persists. (A coalesce(1) on the
-    # tiny dims was tried here and in disjoint_prefixes and REVERTED:
-    # a single-task stage over a parallelized local relation stalls
-    # ~6s/stage at local[32] — measured, see OPTIMIZATION_r07.md.)
+    # >LITERAL_NODE_DIM_LIMIT case, where the text broadcast-joins
+    # them per batch, persists. (A coalesce(1) on the tiny dims was
+    # tried here and in disjoint_prefixes and REVERTED: a single-task
+    # stage over a parallelized local relation stalls ~6s/stage at
+    # local[32] — measured, see OPTIMIZATION_r07.md.)
     # r8: the pod-dim materializing count and the node-literal
     # collects are independent tiny jobs — overlap them (guide §2.6).
-    node_ips = nodes.select(F.col("internal_ip").alias("_nip")).distinct()
-    zones = nodes.groupBy(F.col("name").alias("_zn")).agg(
-        F.min("zone").alias("_zz")
-    )
+    node_ips, zones = _node_dims(nodes)
     from concurrent.futures import ThreadPoolExecutor
 
     with ThreadPoolExecutor(max_workers=2) as _pool:
@@ -211,8 +112,8 @@ def prepare_label_dims(pods: DataFrame, nodes: DataFrame) -> dict:
 
 def _collect_node_literals(node_ips: DataFrame, zones: DataFrame) -> dict:
     """{"node_ip_set": frozenset|None, "zone_map": dict|None} — None
-    when the dim exceeds :data:`LITERAL_NODE_DIM_LIMIT` (fall back to
-    the broadcast joins)."""
+    when the dim exceeds :data:`LITERAL_NODE_DIM_LIMIT` (the text then
+    joins against it)."""
     ips = node_ips.limit(LITERAL_NODE_DIM_LIMIT + 1).collect()
     zs = zones.limit(LITERAL_NODE_DIM_LIMIT + 1).collect()
     out: dict = {"node_ip_set": None, "zone_map": None}
@@ -240,12 +141,7 @@ def label_flows(
     nodes: DataFrame,
     prefixes: DataFrame,
     cfg: RuntimeConfig,
-    extra_flags: dict[str, Column] | None = None,
-    lpm_mode: str = "disjoint",
-    prefixes_are_disjoint: bool = False,
     prefixes6: DataFrame | None = None,
-    prefixes6_are_disjoint: bool = False,
-    prepared: dict | None = None,
 ) -> DataFrame:
     """Observations (OBSERVATION_SCHEMA) -> labeled flows.
 
@@ -254,400 +150,66 @@ def label_flows(
     ``reject_reason`` column (null = accepted). Feed accepted rows to
     operators.flows.to_flow_rows for the 2-row direction fan-out.
 
+    Lazy and streaming-legal: the dims and ``observations`` bind to the
+    flowsql text under temp views that are dropped before returning
+    (the analyzed plan already holds them), and every dimension lookup
+    is a broadcast join, so a streaming ``observations`` stays a
+    streaming plan with no stateful operator. ``prefixes`` may be the
+    raw cloud-prefix dim or an already-flattened
+    lpm.disjoint_prefixes result (read from the schema: ``seg_start``);
+    likewise ``prefixes6`` (``s_hi``, lpm.disjoint_prefixes6).
+
     IPv6 (``cfg.ignore_ipv6=False`` — beyond-reference mode; the
     reference drops v6 at F5): v6 observations flow through the same
-    pipeline. Endpoints coalesce to the v6 string columns; the remote
+    text. Endpoints coalesce to the v6 string columns; the remote
     parses to a 128-bit (hi, lo) pair in-plan (functions/ip.py, no
-    UDF) and classifies through ``prefixes6``
-    (net_hi/net_lo/end_hi/end_lo dimension, see
-    lpm.prefixes6_from_cidrs) via one extra broadcast join — still
-    zero fact-side shuffle, still streaming-legal. ULA/link-local/
-    loopback short-circuit as private (INTRA_VPC). Unparseable v6
-    strings (dotted-quad tails, zone ids) reject per-row as
-    ``ipv6_parse_error`` — never a silent misclassification. Pod and
-    node dimension joins stay string-equality, so v6 pod IPs label
-    when the dim carries the same string form the agent reports. The
-    output ``localIPv4``/``remoteIPv4`` columns carry the v6 string in
-    this mode (schema-stable; the name keeps reference parity).
+    UDF) and classifies through ``prefixes6`` (see
+    lpm.prefixes6_from_cidrs) via two more broadcast joins.
+    ULA/link-local/loopback short-circuit as private (INTRA_VPC).
+    Unparseable remotes reject per-row as ``ipv6_parse_error`` /
+    ``ipv4_parse_error`` — never a silent misclassification. The output
+    ``localIPv4``/``remoteIPv4`` columns carry the v6 string in this
+    mode (schema-stable; the name keeps reference parity).
     """
-    obs = observations
-    r = F.lit(None).cast("string")
-
-    # --- Agent-side filters (would run before the wire in the reference) ---
-    # F1 zero counters (reference pkg/collector/collector.go:228-231)
-    all_zero = (
-        (F.coalesce("orig_bytes", F.lit(0)) == 0)
-        & (F.coalesce("orig_packets", F.lit(0)) == 0)
-        & (F.coalesce("reply_bytes", F.lit(0)) == 0)
-        & (F.coalesce("reply_packets", F.lit(0)) == 0)
+    disjoint = (
+        prefixes
+        if "seg_start" in prefixes.columns
+        else disjoint_prefixes(prefixes)
     )
-    r = _reject(all_zero, "zero_counters", r)
-    # F2 protocol (reference collector.go:233-236)
-    r = _reject(~F.col("proto").isin(6, 17), "unsupported_proto", r)
-    # F3 localhost (reference collector.go:238-244)
-    lo = F.lit("127.0.0.1")
-    r = _reject(
-        (F.col("orig_src_ip") == lo)
-        | (F.col("orig_dst_ip") == lo)
-        | (F.col("reply_src_ip") == lo)
-        | (F.col("reply_dst_ip") == lo),
-        "localhost",
-        r,
-    )
-    # --- Server-side filters ---
-    # F4 UDP ignore (reference pkg/labeler/labeler.go:183-188, 237-239)
-    if cfg.ignore_udp:
-        r = _reject(F.col("proto") == 17, "udp_ignored", r)
-    # F5 IPv6 (reference labeler.go:243-247, 379-405); with
-    # cfg.ignore_ipv6=False the reject is skipped and v6 rows label
-    # through the v6 LPM below (this engine's metering extension).
-    if cfg.ignore_ipv6:
-        r = _reject(
-            F.col("orig_src_v6").isNotNull()
-            | F.col("orig_dst_v6").isNotNull()
-            | F.col("reply_src_v6").isNotNull()
-            | F.col("reply_dst_v6").isNotNull(),
-            "ipv6",
-            r,
-        )
-    # P8 flags, evaluated HERE so extra_flags expressions can reference the
-    # raw observation columns (the reference annotates flags from the flow
-    # record, reference pkg/labeler/labeler.go:120-123); the map rides along
-    # to the output projection.
-    flags_expr = F.map_from_arrays(
-        F.array(*[F.lit(k) for k in (extra_flags or {})]),
-        F.array(*list((extra_flags or {}).values())),
-    ).cast("map<string,boolean>")
-
-    # P1 endpoint extraction with NAT resolution (see module docstring).
-    # v6 mode: conntrack tuples are single-family per flow, so the v6
-    # string column fills in exactly when the v4 one is absent.
-    if cfg.ignore_ipv6:
-        src_ip_e, dst_ip_e = F.col("orig_src_ip"), F.col("reply_src_ip")
-    else:
-        src_ip_e = F.coalesce("orig_src_ip", "orig_src_v6")
-        dst_ip_e = F.coalesce("reply_src_ip", "reply_src_v6")
-    # ONE select for the reject column, the flags map, and the endpoint
-    # extraction: every withColumn/select call pays a JVM plan-analysis
-    # roundtrip, and this function builds once per micro-batch in the
-    # streaming jobs — folding consecutive column additions into single
-    # selects measurably cuts the per-trigger fixed cost.
-    obs = obs.select(
-        "*",
-        r.alias("_r"),
-        flags_expr.alias("_flags"),
-        src_ip_e.alias("src_ip"),
-        F.col("orig_src_port").alias("src_port"),
-        dst_ip_e.alias("dst_ip"),
-        F.col("reply_src_port").alias("dst_port"),
-    )
-
-    # F6 node-flow filter (reference labeler.go:249-253, 407-427): traffic
-    # sourced from a node IP (hostNetwork) is ambiguous — reject. The
-    # reference holds the node-IP set as an in-memory Go map; with a
-    # ``prepared`` dict carrying the collected set (bounded by
-    # LITERAL_NODE_DIM_LIMIT) the check is an in-plan IN-set — two
-    # broadcast joins fewer per micro-batch. Otherwise two broadcast
-    # lookups; J2 in SURVEY §2 calls for a left-anti join, the
-    # reject-column variant keeps the row for the dead-letter stream.
-    node_ip_set = prepared.get("node_ip_set") if prepared is not None else None
-    if node_ip_set is not None:
-        hit1 = (
-            F.col("orig_src_ip").isin(*sorted(node_ip_set))
-            if node_ip_set
-            else F.lit(False)
-        )
-        hit2 = (
-            F.col("reply_src_ip").isin(*sorted(node_ip_set))
-            if node_ip_set
-            else F.lit(False)
-        )
-        # same null semantics as the left joins: a null endpoint never
-        # matches (isin over a null yields null -> coalesce false)
-        obs = obs.select(
-            "*",
-            F.coalesce(hit1, F.lit(False)).alias("_nip_hit"),
-            F.coalesce(hit2, F.lit(False)).alias("_nip2_hit"),
-        )
-    else:
-        node_ips = (
-            prepared["node_ips"]
-            if prepared is not None
-            else nodes.select(F.col("internal_ip").alias("_nip")).distinct()
-        )
-        node_ips2 = node_ips.select(F.col("_nip").alias("_nip2"))
-        obs = obs.join(
-            F.broadcast(node_ips), obs["orig_src_ip"] == F.col("_nip"), "left"
-        )
-        obs = obs.join(
-            F.broadcast(node_ips2), obs["reply_src_ip"] == F.col("_nip2"), "left"
-        )
-        obs = obs.select(
-            *[c for c in obs.columns if c not in ("_nip", "_nip2")],
-            F.col("_nip").isNotNull().alias("_nip_hit"),
-            F.col("_nip2").isNotNull().alias("_nip2_hit"),
-        )
-
-    # J1 pod-by-IP lookups for both endpoints (broadcast left outer joins;
-    # reference labeler.go:432-472, watcher.go:123-143). The multi-match
-    # error becomes an `ambiguous` flag from dims.pods_with_ambiguity.
-    pod_dim = F.broadcast(
-        prepared["pod_dim"] if prepared is not None else pods_with_ambiguity(pods)
-    )
-    for side in ("src", "dst"):
-        pd = pod_dim.select(
-            F.col("pod_ip").alias(f"_{side}_pod_ip"),
-            F.col("ambiguous").alias(f"{side}_pod_ambiguous"),
-            *[F.col(f"pod.{f}").alias(f"{side}_pod_{f}") for f in _POD_FIELDS],
-        )
-        obs = obs.join(pd, obs[f"{side}_ip"] == F.col(f"_{side}_pod_ip"), "left")
-
-    # ONE select folds F6/J1's reject updates, P3 flow-type, and F7 —
-    # the reject ORDER (node_flow -> ambiguous_pod -> unknown_direction,
-    # first reason wins) mirrors the Go early-return order exactly as
-    # the old per-withColumn chain did; the expressions are simply
-    # composed instead of landed one plan node at a time.
-    # P3 flow-type classification (reference labeler.go:149-161,
-    # 475-499): which endpoint is local to the observing node.
-    src_on_node = F.col("src_pod_name").isNotNull() & (F.col("src_pod_node_name") == F.col("node_name"))
-    dst_on_node = F.col("dst_pod_name").isNotNull() & (F.col("dst_pod_node_name") == F.col("node_name"))
-    flow_type_e = (
-        F.when(src_on_node & dst_on_node, "betweenPodsOnNode")
-        .when(src_on_node, "fromPodOnNode")
-        .when(dst_on_node, "toPodOnNode")
-        .otherwise("unknown")
-    )
-    # F6 node-flow reject (the two node-IP hits, join or IN-set form)
-    r = _reject(
-        F.col("_nip_hit") | F.col("_nip2_hit"),
-        "node_flow",
-        F.col("_r"),
-    )
-    r = _reject(
-        F.coalesce("src_pod_ambiguous", F.lit(False))
-        | F.coalesce("dst_pod_ambiguous", F.lit(False)),
-        "ambiguous_pod",
-        r,
-    )
-    # F7 unknown-direction drop (reference labeler.go:319-331) — a warning,
-    # not an error, in the reference; same dead-letter treatment here.
-    r = _reject(flow_type_e == "unknown", "unknown_direction", r)
-    obs = obs.select(
-        *[
-            c
-            for c in obs.columns
-            if c
-            not in ("_r", "_nip_hit", "_nip2_hit", "_src_pod_ip", "_dst_pod_ip")
-        ],
-        r.alias("_r"),
-        flow_type_e.alias("flow_type"),
-    )
-
-    # P4 local/remote normalization + counter orientation
-    # (reference labeler.go:276-331): orig counters measure src->dst.
-    # SQL-string projection, ONE py4j roundtrip for the whole block:
-    # plan construction runs once per micro-batch in the streaming jobs,
-    # and per-Column building cost (a JVM roundtrip per op) was ~30% of
-    # a small batch's trigger time — selectExpr moves the parse JVM-side.
-    obs = obs.selectExpr(
-        "node_name", "ts", "proto", "flow_type", "_r", "_flags",
-        *p4_select_exprs(),
-    )
-
-    # J6 private-IP short-circuit + J5 LPM + J7 classification
-    # (reference pkg/labeler/remote.go:131-175). The LPM join runs only
-    # over DISTINCT non-private remote IPs — the same work-avoidance as the
-    # reference's short-circuit, plus dedup so the per-IP reduce is tiny
-    # relative to fact rows.
-    if cfg.ignore_ipv6:
-        # v4 path: fold the ip-num and private-flag into ONE select
-        # (see the plan-analysis note above)
-        num = ip_to_long("remote_ip")
-        obs = obs.select(
-            "*",
-            num.alias("remote_ip_num"),
-            is_private_ip_num(num).alias("_remote_private"),
-        )
-    else:
-        obs = obs.withColumn("remote_ip_num", ip_to_long("remote_ip"))
-        # v6 remotes: parse to the 128-bit pair in-plan; a v6 string
-        # that fails the parse contract rejects per-row (never a
-        # silent PUBLIC_INTERNET misclassification). The group parse
-        # (the regex work) is STAGED into one column so it evaluates
-        # once per row; hi/lo derive from the staged array with
-        # conv+shift only.
-        from kubenetmon_spark.functions.ip import (
-            ipv6_groups,
-            ipv6_pair_from_groups,
-            is_private_ipv6_pair,
-        )
-
-        is_v6 = F.col("remote_ip").contains(":")
-        obs = obs.withColumn(
-            "_r6_groups", F.when(is_v6, ipv6_groups(F.col("remote_ip")))
-        )
-        hi6, lo6 = ipv6_pair_from_groups(F.col("_r6_groups"))
-        obs = (
-            obs.withColumn("_r6_hi", hi6)
-            .withColumn("_r6_lo", lo6)
-            .withColumn("_remote_is_v6", is_v6)
-            .drop("_r6_groups")
-        )
-        obs = obs.withColumn(
-            "_r",
-            _reject(
-                F.col("_remote_is_v6") & F.col("_r6_hi").isNull(),
-                "ipv6_parse_error",
-                F.col("_r"),
-            ),
-        )
-        obs = obs.withColumn(
-            "_remote_private",
-            F.when(
-                F.col("_remote_is_v6"),
-                is_private_ipv6_pair(F.col("_r6_hi"), F.col("_r6_lo")),
-            ).otherwise(is_private_ip_num(F.col("remote_ip_num"))),
-        )
-    if lpm_mode == "disjoint":
-        # The dimension is flattened to disjoint intervals at build time, so
-        # the per-row LPM is a single broadcast equi+range join: no distinct,
-        # no per-IP reduce, no shuffle of fact rows — and streaming-safe
-        # (no stateful op), which lets the whole labeler run inside the
-        # Structured Streaming DSL (streaming/job.py).
-        # ``prefixes_are_disjoint`` lets long-lived callers (the streaming
-        # jobs) flatten + persist the dimension ONCE instead of re-running
-        # the boundary sweep (a global sort over ~2x the prefix count) in
-        # every micro-batch.
-        disjoint = prefixes if prefixes_are_disjoint else disjoint_prefixes(prefixes)
-        obs = lpm_lookup_disjoint(obs, disjoint, "remote_ip_num")
-    elif lpm_mode == "searchsorted":
-        # Broadcast interval table + vectorized binary search (the
-        # reference's per-worker trie shape); same disjoint dimension,
-        # same results, different physical strategy — see lpm.py.
-        from kubenetmon_spark.operators.lpm import lpm_lookup_searchsorted
-
-        disjoint = prefixes if prefixes_are_disjoint else disjoint_prefixes(prefixes)
-        obs = lpm_lookup_searchsorted(obs, disjoint, "remote_ip_num")
-    else:
-        # "reduce" mode: classic distinct -> banded reduce -> join back.
-        # Kept for comparison; the private-IP rows skip the lookup entirely
-        # (the reference's short-circuit work-avoidance, remote.go:135-140).
-        public_ips = obs.filter(~F.col("_remote_private")).select("remote_ip_num").distinct()
-        matched = lpm_lookup(public_ips, prefixes, "remote_ip_num")
-        obs = obs.join(matched.withColumnRenamed("remote_ip_num", "_mip"),
-                       obs["remote_ip_num"] == F.col("_mip"), "left").drop("_mip")
-
+    node_ips, zones = _node_dims(nodes)
+    frames = {
+        "obs": observations,
+        "pods": pods_with_ambiguity(pods),
+        "banded": band_segments(disjoint),
+        "node_ips": node_ips,
+        "zones": zones,
+    }
     if not cfg.ignore_ipv6 and prefixes6 is not None:
-        # J5v6: one more broadcast join on the (hi, lo) pair — v4 rows
-        # carry null pairs and match nothing; the v6 attributes
-        # coalesce into the same lpm_* columns, so J7's CASE is
-        # family-agnostic from here down.
-        from kubenetmon_spark.operators.lpm import (
-            disjoint_prefixes6,
-            lpm_lookup6,
-        )
-
         d6 = (
             prefixes6
-            if prefixes6_are_disjoint
+            if "s_hi" in prefixes6.columns
             else disjoint_prefixes6(prefixes6)
         )
-        obs = lpm_lookup6(
-            obs, prefixes6, hi_col="_r6_hi", lo_col="_r6_lo",
-            out_prefix="_v6lpm_", disjoint=d6,
-        )
-        for attr in ("cloud", "region", "service"):
-            obs = obs.withColumn(
-                f"lpm_{attr}",
-                F.coalesce(f"lpm_{attr}", f"_v6lpm_{attr}"),
-            ).drop(f"_v6lpm_{attr}")
-        obs = obs.drop("_v6lpm_prefix_len")
-
-    same_cloud = F.col("lpm_cloud") == F.lit(cfg.cloud)
-    cls = (
-        F.when(F.col("_remote_private"), "INTRA_VPC")
-        .when(F.col("lpm_cloud").isNull(), "PUBLIC_INTERNET")  # trie miss
-        .when(~same_cloud, "PUBLIC_INTERNET")  # other/unknown cloud
-        .when(F.col("lpm_region") == "global", "INTRA_REGION")  # anycast assumption
-        .when(F.col("lpm_region") == cfg.region, "INTRA_REGION")
-        .when(F.col("lpm_region") == "", "UNKNOWN")  # error branch (remote.go:148-152)
-        .otherwise("INTER_REGION")
-    )
-    # J7's classification, its reject, and the remote_* projections fold
-    # into ONE select (plan-analysis note above); `cls` is reused as an
-    # expression inside the reject instead of landing as a column first.
-    obs = obs.select(
-        *[c for c in obs.columns if c != "_r"],
-        cls.alias("connection_class"),
-        _reject(cls == "UNKNOWN", "remote_label_error", F.col("_r")).alias(
-            "_r"
-        ),
-        F.when(F.col("_remote_private"), F.lit(cfg.cloud))
-        .otherwise(F.coalesce("lpm_cloud", F.lit("")))
-        .alias("remote_cloud"),
-        F.when(F.col("_remote_private"), F.lit(cfg.region))
-        .when(F.col("lpm_region") == "global", F.lit(cfg.region))  # anycast -> local region
-        .otherwise(F.coalesce("lpm_region", F.lit("")))
-        .alias("remote_region"),
-        F.coalesce("lpm_service", F.lit("")).alias("remote_service"),
-    )
-
-    # P6 AZ lookup via the node dimension (reference labeler.go:341-346,
-    # 360-366): pod's node name -> zone label. One row per name is
-    # ENFORCED (min zone — deterministic), not assumed: k8s guarantees
-    # name uniqueness at any instant, but a stale/concatenated dim
-    # snapshot with duplicate names would silently MULTIPLY fact rows
-    # here — corrupting every downstream sum — where the reference's
-    # map-keyed cache just takes the last write. node_ips above already
-    # guards the same way (distinct).
-    zone_map = prepared.get("zone_map") if prepared is not None else None
-    if zone_map is not None:
-        # In-plan literal map (the reference's Go map cache): one
-        # element_at per side instead of two broadcast joins. Built as
-        # a single SQL string — ONE py4j roundtrip however many nodes.
-        zmap_sql = zone_map_sql(zone_map)
-        obs = obs.selectExpr(
-            "*",
-            f"coalesce(element_at({zmap_sql}, local_pod_node_name), '')"
-            " AS local_az",
-            f"coalesce(element_at({zmap_sql}, remote_pod_node_name), '')"
-            " AS remote_az",
-        )
-    else:
-        zones = F.broadcast(
-            prepared["zones"]
-            if prepared is not None
-            else nodes.groupBy(F.col("name").alias("_zn")).agg(
-                F.min("zone").alias("_zz")
+        frames["lpm6_narrow"], frames["lpm6_wide"] = lpm6_sides(d6)
+    tag = uuid.uuid4().hex
+    views = {k: f"_label_{k}_{tag}" for k in frames}
+    # no node literals: the node dims join against their views
+    prepared = {"node_ip_view": views["node_ips"], "zone_view": views["zones"]}
+    if "lpm6_narrow" in views:
+        prepared["lpm6_narrow_view"] = views["lpm6_narrow"]
+        prepared["lpm6_wide_view"] = views["lpm6_wide"]
+    spark = observations.sparkSession
+    try:
+        for k, df in frames.items():
+            df.createOrReplaceTempView(views[k])
+        return spark.sql(
+            labeled_sql(
+                cfg, prepared, views["obs"], views["pods"], views["banded"]
             )
         )
-        zones2 = zones.select(
-            F.col("_zn").alias("_zn2"), F.col("_zz").alias("_zz2")
-        )
-        obs = obs.join(
-            zones, obs["local_pod_node_name"] == F.col("_zn"), "left"
-        )
-        obs = obs.join(
-            F.broadcast(zones2),
-            obs["remote_pod_node_name"] == F.col("_zn2"),
-            "left",
-        )
-        obs = obs.select(
-            *[
-                c
-                for c in obs.columns
-                if c not in ("_zn", "_zz", "_zn2", "_zz2")
-            ],
-            F.coalesce("_zz", F.lit("")).alias("local_az"),
-            F.coalesce("_zz2", F.lit("")).alias("remote_az"),
-        )
-
-    # P5 pod metadata projection with app-label fallback
-    # (reference labeler.go:334-373), P9 runtime constants,
-    # P2 proto rendering. SQL-string projection (one roundtrip, see the
-    # P4 note); cfg-derived literals go through _sql_lit so a quote in
-    # a config value cannot break out of the string literal.
-    return obs.selectExpr(*final_select_exprs(cfg))
+    finally:
+        for v in views.values():
+            spark.catalog.dropTempView(v)
 
 
 def split_rejected(labeled: DataFrame) -> tuple[DataFrame, DataFrame]:

@@ -20,8 +20,8 @@ join* —
    the only shuffle is the final per-IP reduce.
 
 At 100 TB the probe side should be ``.select(ip).distinct()`` first
-(the labeler does exactly that) so the reduce is over distinct IPs, not
-fact rows.
+so the reduce is over distinct IPs, not fact rows. The labeler
+(flowsql.py) uses the shuffle-free disjoint-interval form instead.
 """
 
 from __future__ import annotations
@@ -96,6 +96,21 @@ def disjoint_prefixes(prefixes: DataFrame) -> DataFrame:
     )
 
 
+def band_segments(disjoint: DataFrame) -> DataFrame:
+    """A :func:`disjoint_prefixes` dimension exploded into the /16
+    bands each segment covers — the build side of the banded
+    equi+range join."""
+    return disjoint.withColumn(
+        "band",
+        F.explode(
+            F.sequence(
+                F.shiftright(F.col("seg_start"), BAND_SHIFT),
+                F.shiftright(F.col("seg_end"), BAND_SHIFT),
+            )
+        ),
+    ).select("band", "seg_start", "seg_end", *MATCH_COLS)
+
+
 def lpm_lookup_disjoint(
     ips: DataFrame,
     disjoint: DataFrame,
@@ -105,17 +120,7 @@ def lpm_lookup_disjoint(
     """LPM against a :func:`disjoint_prefixes` dimension: one broadcast
     equi+range left join, zero shuffles on the probe side, streaming-safe.
     """
-    banded = F.broadcast(
-        disjoint.withColumn(
-            "band",
-            F.explode(
-                F.sequence(
-                    F.shiftright(F.col("seg_start"), BAND_SHIFT),
-                    F.shiftright(F.col("seg_end"), BAND_SHIFT),
-                )
-            ),
-        ).select("band", "seg_start", "seg_end", *MATCH_COLS)
-    )
+    banded = F.broadcast(band_segments(disjoint))
     joined = ips.join(
         banded,
         (F.shiftright(F.col(ip_num_col), BAND_SHIFT) == banded["band"])
@@ -165,74 +170,6 @@ def lpm_lookup(
     return ips.join(best, ips[ip_num_col] == best["_ip"], "left").drop("_ip")
 
 
-def lpm_lookup_searchsorted(
-    ips: DataFrame,
-    disjoint: DataFrame,
-    ip_num_col: str = "ip_num",
-    out_prefix: str = "lpm_",
-) -> DataFrame:
-    """LPM via a broadcast in-memory interval table + vectorized binary
-    search — the reference's "trie in every worker" shape
-    (reference pkg/labeler/remote.go:23-26) done the NumPy way.
-
-    The :func:`disjoint_prefixes` intervals (~87k rows) are collected
-    once to the driver, shipped to executors inside the closure, and
-    probed with ``np.searchsorted`` per Arrow batch: O(log n) per row,
-    no join operator at all. Trade-off vs ``lpm_lookup_disjoint``: every
-    probe column crosses the JVM<->Arrow boundary, so prefer this form
-    when the probe projection is narrow (e.g. distinct IPs) or when the
-    equi+range broadcast join's band filter is the bottleneck; prefer
-    the join form when rows are wide or Python workers are scarce.
-    """
-    import numpy as np
-
-    from pyspark.sql.types import StructType
-
-    rows = (
-        disjoint.select("seg_start", "seg_end", *MATCH_COLS)
-        .orderBy("seg_start")
-        .collect()
-    )
-    starts = np.array([r.seg_start for r in rows], dtype=np.int64)
-    ends = np.array([r.seg_end for r in rows], dtype=np.int64)
-    attrs = {
-        c: np.array([r[c] for r in rows], dtype=object) for c in MATCH_COLS
-    }
-    plen = np.array(
-        [r.prefix_len if r.prefix_len is not None else -1 for r in rows],
-        dtype=np.int64,
-    )
-
-    out_schema = StructType(
-        list(ips.schema.fields)
-        + [
-            type(f)(out_prefix + f.name, f.dataType, True)
-            for f in disjoint.schema.fields
-            if f.name in MATCH_COLS
-        ]
-    )
-
-    def probe(batches):
-        for b in batches:
-            ip = b[ip_num_col].to_numpy(dtype=np.int64, na_value=0)
-            idx = np.searchsorted(starts, ip, side="right") - 1
-            safe = np.clip(idx, 0, None)
-            hit = (idx >= 0) & (ip <= ends[safe]) & b[ip_num_col].notna().to_numpy()
-            for c in MATCH_COLS:
-                col = attrs[c][safe]
-                if c == "prefix_len":
-                    vals = plen[safe].astype(object)
-                    vals[~hit] = None
-                    b[out_prefix + c] = vals
-                else:
-                    col = col.copy()
-                    col[~hit] = None
-                    b[out_prefix + c] = col
-            yield b
-
-    return ips.mapInPandas(probe, out_schema)
-
-
 # --- IPv6 longest-prefix match -----------------------------------------
 #
 # The reference DROPS IPv6 flows outright (pkg/labeler/labeler.go:243-247
@@ -246,14 +183,17 @@ def lpm_lookup_searchsorted(
 _SIGN = -(2**63)
 
 
-def _ux(c):
-    return c.bitwiseXOR(F.lit(_SIGN))
+def ux_sql(c: str) -> str:
+    """``c`` with its sign bit flipped, as SQL text: signed order of
+    the result is unsigned order of ``c``."""
+    return f"({c} ^ {_SIGN}L)"
 
 
-def _pair_lte(a_hi, a_lo, b_hi, b_lo):
-    """unsigned (a_hi, a_lo) <= (b_hi, b_lo)"""
-    return (_ux(a_hi) < _ux(b_hi)) | (
-        (a_hi == b_hi) & (_ux(a_lo) <= _ux(b_lo))
+def pair_lte_sql(a_hi: str, a_lo: str, b_hi: str, b_lo: str) -> str:
+    """unsigned (a_hi, a_lo) <= (b_hi, b_lo), as SQL text"""
+    return (
+        f"({ux_sql(a_hi)} < {ux_sql(b_hi)}"
+        f" OR ({a_hi} = {b_hi} AND {ux_sql(a_lo)} <= {ux_sql(b_lo)}))"
     )
 
 
@@ -310,8 +250,9 @@ _BAND6_MAX_SPAN = 4096
 _MATCH6 = ["prefix_len", "cloud", "service", "region"]
 
 
-def _band6(hi):
-    return F.shiftrightunsigned(_ux(hi), _BAND6_SHIFT)
+def band6_sql(hi: str) -> str:
+    """The /32-of-hi band of ``hi``, as SQL text."""
+    return f"shiftrightunsigned({ux_sql(hi)}, {_BAND6_SHIFT})"
 
 
 def disjoint_prefixes6(prefixes6: DataFrame) -> DataFrame:
@@ -355,7 +296,7 @@ def disjoint_prefixes6(prefixes6: DataFrame) -> DataFrame:
         )
         .distinct()
     )
-    w = Window.orderBy(_ux(F.col("pt_hi")), _ux(F.col("pt_lo")))
+    w = Window.orderBy(F.expr(ux_sql("pt_hi")), F.expr(ux_sql("pt_lo")))
     nxt_hi = F.lead("pt_hi").over(w)
     nxt_lo = F.lead("pt_lo").over(w)
     # segment end = next boundary - 1 (128-bit decrement with borrow);
@@ -377,15 +318,14 @@ def disjoint_prefixes6(prefixes6: DataFrame) -> DataFrame:
     p = F.broadcast(prefixes6)
     cand = segs.alias("s").join(
         p.alias("p"),
-        _pair_lte(
-            F.col("p.net_hi"), F.col("p.net_lo"), F.col("s.s_hi"), F.col("s.s_lo")
-        )
-        & _pair_lte(
-            F.col("s.s_hi"), F.col("s.s_lo"), F.col("p.end_hi"), F.col("p.end_lo")
+        F.expr(
+            pair_lte_sql("p.net_hi", "p.net_lo", "s.s_hi", "s.s_lo")
+            + " AND "
+            + pair_lte_sql("s.s_hi", "s.s_lo", "p.end_hi", "p.end_lo")
         ),
         "inner",
     )
-    not_ux = lambda c: _ux(c).bitwiseXOR(F.lit(-1))
+    not_ux = lambda c: F.expr(f"~{ux_sql(c)}")
     return (
         cand.groupBy("s_hi", "s_lo", "e_hi", "e_lo")
         .agg(
@@ -393,8 +333,8 @@ def disjoint_prefixes6(prefixes6: DataFrame) -> DataFrame:
                 F.struct(*_MATCH6),
                 F.struct(
                     F.col("prefix_len"),
-                    not_ux(F.col("net_hi")),
-                    not_ux(F.col("net_lo")),
+                    not_ux("net_hi"),
+                    not_ux("net_lo"),
                 ),
             ).alias("_m")
         )
@@ -440,12 +380,39 @@ def lpm_lookup6(
     plan test asserts the probe side stays exchange-free.
     """
     d = disjoint if disjoint is not None else disjoint_prefixes6(prefixes6)
-    span = _band6(F.col("e_hi")) - _band6(F.col("s_hi"))
+    narrow, wide = lpm6_sides(d)
+    step1 = ips.join(
+        F.broadcast(narrow),
+        F.expr(lpm6_narrow_on_sql(hi_col, lo_col, "_band", "s_hi", "s_lo", "e_hi", "e_lo")),
+        "left",
+    ).drop("_band", "s_hi", "s_lo", "e_hi", "e_lo")
+    step2 = step1.join(
+        F.broadcast(wide),
+        F.expr(lpm6_wide_on_sql(hi_col, lo_col, "_w_s_hi", "_w_s_lo", "_w_e_hi", "_w_e_lo")),
+        "left",
+    )
+    return step2.select(
+        *[F.col(c) for c in ips.columns],
+        *[
+            F.coalesce(F.col(f"_n_{c}"), F.col(f"_w_{c}")).alias(
+                f"{out_prefix}{c}"
+            )
+            for c in _MATCH6
+        ],
+    )
+
+
+def lpm6_sides(disjoint6: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The two broadcast sides of the v6 LPM over a
+    :func:`disjoint_prefixes6` dimension: ``narrow`` (segments of at
+    most ``_BAND6_MAX_SPAN`` bands, exploded per band, attributes as
+    ``_n_*``) and ``wide`` (the rest, columns ``_w_*``)."""
+    span = F.expr(f"{band6_sql('e_hi')} - {band6_sql('s_hi')}")
     narrow = (
-        d.filter(span <= _BAND6_MAX_SPAN)
+        disjoint6.filter(span <= _BAND6_MAX_SPAN)
         .withColumn(
             "_band",
-            F.explode(F.sequence(_band6(F.col("s_hi")), _band6(F.col("e_hi")))),
+            F.explode(F.expr(f"sequence({band6_sql('s_hi')}, {band6_sql('e_hi')})")),
         )
         .select(
             "_band",
@@ -456,34 +423,26 @@ def lpm_lookup6(
             *[F.col(c).alias(f"_n_{c}") for c in _MATCH6],
         )
     )
-    wide = d.filter(span > _BAND6_MAX_SPAN).select(
+    wide = disjoint6.filter(span > _BAND6_MAX_SPAN).select(
         F.col("s_hi").alias("_w_s_hi"),
         F.col("s_lo").alias("_w_s_lo"),
         F.col("e_hi").alias("_w_e_hi"),
         F.col("e_lo").alias("_w_e_lo"),
         *[F.col(c).alias(f"_w_{c}") for c in _MATCH6],
     )
-    f_hi, f_lo = F.col(hi_col), F.col(lo_col)
-    step1 = ips.join(
-        F.broadcast(narrow),
-        (_band6(f_hi) == F.col("_band"))
-        & _pair_lte(F.col("s_hi"), F.col("s_lo"), f_hi, f_lo)
-        & _pair_lte(f_hi, f_lo, F.col("e_hi"), F.col("e_lo")),
-        "left",
-    ).drop("_band", "s_hi", "s_lo", "e_hi", "e_lo")
-    step2 = step1.join(
-        F.broadcast(wide),
-        _pair_lte(F.col("_w_s_hi"), F.col("_w_s_lo"), f_hi, f_lo)
-        & _pair_lte(f_hi, f_lo, F.col("_w_e_hi"), F.col("_w_e_lo")),
-        "left",
+    return narrow, wide
+
+
+def lpm6_narrow_on_sql(hi, lo, band, s_hi, s_lo, e_hi, e_lo) -> str:
+    """Join condition of a probe (hi, lo) against the narrow side: the
+    band equi key plus the unsigned range test, as SQL text."""
+    return (
+        f"{band6_sql(hi)} = {band} AND {pair_lte_sql(s_hi, s_lo, hi, lo)}"
+        f" AND {pair_lte_sql(hi, lo, e_hi, e_lo)}"
     )
-    out = step2.select(
-        *[F.col(c) for c in ips.columns],
-        *[
-            F.coalesce(F.col(f"_n_{c}"), F.col(f"_w_{c}")).alias(
-                f"{out_prefix}{c}"
-            )
-            for c in _MATCH6
-        ],
-    )
-    return out
+
+
+def lpm6_wide_on_sql(hi, lo, s_hi, s_lo, e_hi, e_lo) -> str:
+    """Join condition against the wide side: the range test only (a
+    nested-loop join over a handful of rows), as SQL text."""
+    return f"{pair_lte_sql(s_hi, s_lo, hi, lo)} AND {pair_lte_sql(hi, lo, e_hi, e_lo)}"

@@ -284,7 +284,7 @@ def build_prefixes_from_feeds(
         .withColumn("_rn2", F.row_number().over(w_cross))
         .filter(F.col("_rn2") == 1)
         .withColumn("prefix_len", parts.getItem(1).cast("int"))
-        .withColumn("net_start", ip_to_long(parts.getItem(0)))
+        .withColumn("net_start", ip_to_long("split(prefix, '/')[0]"))
         .withColumn(
             "net_end",
             F.col("net_start")

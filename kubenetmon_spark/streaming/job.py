@@ -46,7 +46,6 @@ from pyspark.sql.streaming import StreamingQuery
 from kubenetmon_spark import fs as _fsm
 from kubenetmon_spark.config import RuntimeConfig
 from kubenetmon_spark.functions.flags import canonical_flags_json
-from kubenetmon_spark.operators.flows import summing_aggregate, to_flow_rows
 from kubenetmon_spark.operators.label import label_flows, split_rejected
 from kubenetmon_spark.operators.lpm import disjoint_prefixes
 from kubenetmon_spark.schema import DIM_COLS, OBSERVATION_SCHEMA
@@ -175,26 +174,21 @@ def start_flow_stream(
         flows_agg_sql,
         labeled_sql,
         register_flow_dim_views,
-        supports_sql_path,
     )
     from kubenetmon_spark.operators.label import (
         prepare_label_dims,
         release_label_dims,
     )
 
-    # r8 (guide §5, VERDICT r07 #1): for the configuration this job
-    # actually runs, the whole per-batch computation is rendered to SQL
-    # text HERE — once per dimension refresh — so each trigger re-binds
-    # only the batch source (temp view + one spark.sql) instead of
-    # re-building ~2,700 py4j plan-construction roundtrips (~0.4 s of
-    # driver time per trigger, measured). Falls back to the DataFrame
-    # path for configs the text doesn't cover.
+    # The whole per-batch computation is rendered to SQL text HERE —
+    # once per dimension refresh — so each trigger re-binds only the
+    # batch source (temp view + one spark.sql) instead of re-building
+    # ~2,700 py4j plan-construction roundtrips (~0.4 s of driver time
+    # per trigger, measured).
     _tag = "".join(c if c.isalnum() else "_" for c in query_name)
     obs_view = f"_flow_obs_{_tag}"
 
-    def _build_sql(prepared, disjoint) -> dict | None:
-        if not supports_sql_path(cfg, prepared):
-            return None
+    def _build_sql(prepared, disjoint) -> dict:
         spark = pods.sparkSession
         # A small LPM dimension inlines as a CASE chain (one broadcast
         # build fewer per micro-batch); larger dims keep the join.
@@ -230,8 +224,6 @@ def start_flow_stream(
         disjoint = _fd.result()
         prepared = _fp.result()
     dims = {
-        "pods": pods,
-        "nodes": nodes,
         "disjoint": disjoint,
         "prepared": prepared,
         "sql": _build_sql(prepared, disjoint),
@@ -262,57 +254,33 @@ def start_flow_stream(
                     fresh_prepared = _fp.result()
                 dims["disjoint"].unpersist()
                 release_label_dims(dims["prepared"])
-                dims.update(
-                    pods=new_pods,
-                    nodes=new_nodes,
-                    disjoint=fresh,
-                    prepared=fresh_prepared,
-                )
+                dims.update(disjoint=fresh, prepared=fresh_prepared)
                 dims["sql"] = _build_sql(fresh_prepared, fresh)
         spark = batch_df.sparkSession
         sqltexts = dims["sql"]
-        if sqltexts is not None:
-            batch_df.createOrReplaceTempView(obs_view)
+        batch_df.createOrReplaceTempView(obs_view)
+        if dead_letter_path is None:
             labeled = None
-            if dead_letter_path is not None:
-                labeled = spark.sql(sqltexts["labeled"])
+            flows = spark.sql(sqltexts["flows"])
         else:
-            labeled = label_flows(
-                batch_df,
-                dims["pods"],
-                dims["nodes"],
-                dims["disjoint"],
-                cfg,
-                prefixes_are_disjoint=True,
-                prepared=dims["prepared"],
-            )
-        # Persist only when a second consumer (the dead-letter write)
-        # exists: with one consumer, materializing all 40 labeled
-        # columns into the cache is pure per-batch overhead.
-        if labeled is not None and dead_letter_path is not None:
-            labeled = labeled.persist()
+            # Persist only when a second consumer (the dead-letter
+            # write) exists: with one consumer, materializing all 40
+            # labeled columns into the cache is pure per-batch overhead.
+            labeled = spark.sql(sqltexts["labeled"]).persist()
         try:
-            if sqltexts is not None:
-                if dead_letter_path is not None:
-                    # Aggregate over the PERSISTED labeled frame (the
-                    # cache-manager matches the view's subtree), so the
-                    # labeler still executes once per batch.
-                    lview = f"_flow_labeled_{_tag}"
-                    labeled.createOrReplaceTempView(lview)
-                    dead = labeled.filter(
-                        F.col("reject_reason").isNotNull()
+            if labeled is not None:
+                # Aggregate over the PERSISTED labeled frame (the
+                # cache-manager matches the view's subtree), so the
+                # labeler still executes once per batch.
+                lview = f"_flow_labeled_{_tag}"
+                labeled.createOrReplaceTempView(lview)
+                dead = labeled.filter(F.col("reject_reason").isNotNull())
+                flows = spark.sql(
+                    flows_agg_sql(
+                        f"(SELECT * FROM {lview} "
+                        "WHERE reject_reason IS NULL)"
                     )
-                    flows = spark.sql(
-                        flows_agg_sql(
-                            f"(SELECT * FROM {lview} "
-                            "WHERE reject_reason IS NULL)"
-                        )
-                    )
-                else:
-                    flows = spark.sql(sqltexts["flows"])
-            else:
-                accepted, dead = split_rejected(labeled)
-                flows = summing_aggregate(to_flow_rows(accepted))
+                )
             # Publish per-date append intents before writing so a
             # concurrent compaction/retention of the same partition
             # either waits for this batch or this batch waits for it —
@@ -344,7 +312,7 @@ def start_flow_stream(
                     .parquet(dead_letter_path)
                 )
         finally:
-            if dead_letter_path is not None:
+            if labeled is not None:
                 labeled.unpersist()
         fs.mkdirs(markers)
         fs.write_bytes_atomic(marker, b"")
@@ -378,8 +346,9 @@ def streaming_network_flows(
 
     Returns an unstarted streaming DataFrame with the NETWORK_FLOWS
     column set; start it with ``start_windowed_flow_stream`` (or any
-    writeStream). Requires ``lpm_mode='disjoint'`` labeling, which keeps
-    the plan free of stateful ops before the single window aggregation.
+    writeStream). The labeler's lookups are all broadcast joins, which
+    keeps the plan free of stateful ops before the single window
+    aggregation.
     """
     # Flatten once and persist: the static side of a stream-static join is
     # re-evaluated every micro-batch, so caching the interval sweep matters
@@ -391,8 +360,6 @@ def streaming_network_flows(
         nodes,
         disjoint,
         cfg,
-        lpm_mode="disjoint",
-        prefixes_are_disjoint=True,
     )
     if observe_metrics:
         from kubenetmon_spark.observability import with_ingest_observation

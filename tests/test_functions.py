@@ -23,6 +23,32 @@ def test_ip_roundtrip(spark):
         assert row.back == row.ip
 
 
+def test_ip_to_long_rejects_non_dotted_quads(spark):
+    # exactly four octets, each 0-255, or NULL — a short, long or
+    # out-of-range form must never fold to some other address
+    bad = ["1.2.3", "10.0.0", "1.2.3.4.5", "1.2.3.999", "256.0.0.1",
+           "1.2.-3.4", "1..2.3", "1.2.3.4.", "", "a.b.c.d", "2600:1f14::1"]
+    df = spark.createDataFrame([(ip,) for ip in bad] + [(None,)], "ip string")
+    got = {r.ip: r.n for r in df.select("ip", ip_to_long("ip").alias("n")).collect()}
+    assert got == {ip: None for ip in bad + [None]}
+
+
+def test_ip_to_long_accepts_column_arguments(spark):
+    import pytest
+
+    df = spark.createDataFrame([("1.2.3.4/8", 167772161)], "p string, n long")
+    row = df.select(
+        ip_to_long("split(p, '/')[0]").alias("a"),
+        ip_to_long(long_to_ip(ip_to_long("split(p, '/')[0]"))).alias("b"),
+        is_private_ip_num(F.col("n")).alias("c"),
+    ).first()
+    assert row.a == row.b == py_ip_to_long("1.2.3.4")
+    assert row.c is True  # 10.0.0.1
+    # no faithful SQL rendering: pass the SQL text instead
+    with pytest.raises(TypeError):
+        ip_to_long(F.split("p", "/").getItem(0))
+
+
 def test_is_private(spark):
     cases = {
         "10.1.2.3": True,

@@ -19,42 +19,6 @@ def labeled(spark):
     return out
 
 
-def test_prepared_literal_dims_identical(spark, labeled):
-    # r7: with prepare_label_dims the node-IP set and zone map run as
-    # in-plan literals (IN-set / map literal) instead of four broadcast
-    # joins. Every scenario row — accepts, rejects incl. node_flow, AZ
-    # labels from the zone map — must be IDENTICAL to the join path.
-    from kubenetmon_spark.operators.label import (
-        prepare_label_dims,
-        release_label_dims,
-    )
-
-    prefixes = build_cloud_prefixes(raw_prefixes_df(spark))
-    prepared = prepare_label_dims(pods_df(spark), nodes_df(spark))
-    assert prepared["node_ip_set"] is not None  # literal path engaged
-    assert prepared["zone_map"] is not None
-    try:
-        lit = label_flows(
-            observations_df(spark),
-            pods_df(spark),
-            nodes_df(spark),
-            prefixes,
-            CFG,
-            prepared=prepared,
-        )
-        key = [c for c in labeled.columns if c != "connectionFlags"]
-
-        def snap(df):
-            return sorted(
-                map(tuple, df.select(*key).collect()),
-                key=lambda t: tuple((x is None, str(x)) for x in t),
-            )
-
-        assert snap(lit) == snap(labeled)
-    finally:
-        release_label_dims(prepared)
-
-
 def _one(labeled, port):
     rows = labeled.filter(F.col("localPort") == port).collect()
     assert len(rows) == 1, f"expected 1 row for port {port}, got {len(rows)}"

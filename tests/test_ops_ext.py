@@ -136,22 +136,6 @@ def test_signlsh_query_finds_itself(vectors):
     assert len(rows) <= 5
 
 
-def test_labeler_extra_flags(spark):
-    from kubenetmon_spark.demo import DEMO_CFG, build_flow_inputs
-    from kubenetmon_spark.operators.label import label_flows
-
-    obs, pods, nodes, prefixes = build_flow_inputs(spark, "/root/testdata/sf0.001")
-    flagged = label_flows(
-        obs.limit(3), pods, nodes, prefixes, DEMO_CFG,
-        extra_flags={"sampled": F.lit(True), "big": F.col("orig_bytes") > 500},
-    )
-    rows = flagged.collect()
-    assert rows
-    for r in rows:
-        assert set(r.connectionFlags) == {"sampled", "big"}
-        assert r.connectionFlags["sampled"] is True
-
-
 def test_media_features_match_hashlib(spark):
     df = spark.createDataFrame([(1, "hello world"), (2, "x")], "doc_id long, text string")
     feats = {r.media_id: r for r in extract_media_features(media_from_text(df)).collect()}

@@ -12,7 +12,6 @@ from pyspark.sql import functions as F
 
 from kubenetmon_spark.demo import DEMO_CFG, build_flow_inputs, build_network_flows
 from kubenetmon_spark.operators.flows import summing_aggregate
-from kubenetmon_spark.operators.label import label_flows
 from kubenetmon_spark.operators.lpm import disjoint_prefixes, lpm_lookup, lpm_lookup_disjoint
 from kubenetmon_spark.schema import OBSERVATION_SCHEMA
 from kubenetmon_spark.sink import compact, read_flows
@@ -24,7 +23,6 @@ from kubenetmon_spark.streaming import (
     start_windowed_flow_stream,
     streaming_network_flows,
 )
-from tests.fixtures import CFG, nodes_df, observations_df, pods_df, raw_prefixes_df
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -77,20 +75,6 @@ def test_disjoint_lpm_equals_reduce_lpm(spark):
     assert got[10 * 2**24 + 2**16 + 2 * 256 + 7] == "10.1.2.0/24"
     assert got[10 * 2**24 + 2**16 + 3 * 256] == "10.1.0.0/16"
     assert got[11 * 2**24] is None
-
-
-def test_label_flows_disjoint_equals_reduce(spark):
-    from kubenetmon_spark.dims import build_cloud_prefixes
-
-    obs, pods, nodes, prefixes = (
-        observations_df(spark),
-        pods_df(spark),
-        nodes_df(spark),
-        build_cloud_prefixes(raw_prefixes_df(spark)),
-    )
-    a = _sorted_rows(label_flows(obs, pods, nodes, prefixes, CFG, lpm_mode="disjoint"))
-    b = _sorted_rows(label_flows(obs, pods, nodes, prefixes, CFG, lpm_mode="reduce"))
-    assert a == b
 
 
 # ---------------------------------------------------------------------------
@@ -242,20 +226,6 @@ def test_windowed_stream_drops_late_data(spark, stream_inputs, tmp_path):
     after = after_df.agg(F.sum("bytes"), F.count(F.lit(1))).collect()[0]
     assert tuple(after) == tuple(before)  # nothing new emitted
     assert after_df.filter(F.col("localPort") == 59999).count() == 0
-
-
-def test_searchsorted_lpm_equals_disjoint_lpm(spark):
-    from kubenetmon_spark.demo import DEMO_CFG, build_flow_inputs
-    from kubenetmon_spark.operators.label import label_flows
-
-    obs, pods, nodes, prefixes = build_flow_inputs(spark, "/root/testdata/sf0.001")
-    key = ["ts", "localIPv4", "remoteIPv4", "localPort", "remotePort"]
-    a = label_flows(obs, pods, nodes, prefixes, DEMO_CFG, lpm_mode="disjoint")
-    b = label_flows(obs, pods, nodes, prefixes, DEMO_CFG, lpm_mode="searchsorted")
-    cols = sorted(set(a.columns) & set(b.columns))
-    ra = sorted([tuple(r[c] for c in cols) for r in a.select(*cols).collect()])
-    rb = sorted([tuple(r[c] for c in cols) for r in b.select(*cols).collect()])
-    assert ra == rb
 
 
 def test_dead_letter_reasons_match_batch(spark, stream_inputs, tmp_path):

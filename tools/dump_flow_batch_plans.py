@@ -1,11 +1,7 @@
 #!/usr/bin/env python
-"""Dump the flow stream's PER-MICRO-BATCH physical plan both ways:
-
-- before: the DataFrame path (label_flows -> split -> fan-out ->
-  summing_aggregate), what every trigger re-built from Python pre-r8;
-- after: the prebuilt-SQL-text path (flowsql.flow_batch_sql), what
-  start_flow_stream now runs per trigger (one temp-view bind + one
-  spark.sql).
+"""Dump the flow stream's PER-MICRO-BATCH physical plan: the
+prebuilt-SQL-text path (flowsql.flow_batch_sql), what start_flow_stream
+runs per trigger (one temp-view bind + one spark.sql).
 
 The streaming gates' (q34/q267) final read-back plan is a trivial
 scan+agg that never changed; the per-batch plan IS the plan the r8
@@ -33,17 +29,8 @@ def main() -> int:
         collect_lpm_segments,
         flow_batch_sql,
         register_flow_dim_views,
-        supports_sql_path,
     )
-    from kubenetmon_spark.operators.flows import (
-        summing_aggregate,
-        to_flow_rows,
-    )
-    from kubenetmon_spark.operators.label import (
-        label_flows,
-        prepare_label_dims,
-        split_rejected,
-    )
+    from kubenetmon_spark.operators.label import prepare_label_dims
     from kubenetmon_spark.operators.lpm import disjoint_prefixes
     from kubenetmon_spark.session import get_spark
 
@@ -61,26 +48,7 @@ def main() -> int:
         path.write_text(f"-- {header}\n" + buf.getvalue())
         print("dumped", path)
 
-    # before: the per-trigger DataFrame chain (still the fallback path)
-    labeled = label_flows(
-        obs,
-        pods,
-        nodes,
-        disjoint,
-        DEMO_CFG,
-        prefixes_are_disjoint=True,
-        prepared=prepared,
-    )
-    accepted, _ = split_rejected(labeled)
-    dump(
-        summing_aggregate(to_flow_rows(accepted)),
-        outdir / "q34_flow_batch_before.txt",
-        "per-micro-batch plan, DataFrame path (pre-r8: rebuilt from "
-        "Python every trigger, ~2.6k py4j roundtrips)",
-    )
-
-    # after: the prebuilt SQL text bound to the same batch source
-    assert supports_sql_path(DEMO_CFG, prepared)
+    # the prebuilt SQL text bound to the batch source
     views = register_flow_dim_views(spark, prepared, disjoint, tag="dump")
     segments = collect_lpm_segments(disjoint)
     obs.createOrReplaceTempView("_dump_obs")

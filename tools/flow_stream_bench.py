@@ -2,10 +2,8 @@
 """Standalone flow-stream steady-state throughput (the bench.py
 streaming block, isolated for A/B work). Usage:
 
-  python tools/flow_stream_bench.py [sf_dir] [df|sql]
+  python tools/flow_stream_bench.py [sf_dir]
 
-``df`` forces the DataFrame per-batch path by disabling the SQL text
-path (baseline); ``sql`` (default) leaves the engine as-is.
 Prints one JSON line with steady-state obs/s (bench.py methodology:
 rows/s over the batches after the first, triggerExecution time only).
 """
@@ -22,12 +20,6 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-    mode = sys.argv[2] if len(sys.argv) > 2 else "sql"
-
-    if mode == "df":
-        import kubenetmon_spark.flowsql as flowsql
-
-        flowsql.supports_sql_path = lambda cfg, prepared: False
 
     from kubenetmon_spark.demo import DEMO_CFG, build_flow_inputs
     from kubenetmon_spark.session import get_spark
@@ -66,7 +58,6 @@ def main() -> int:
     print(
         json.dumps(
             {
-                "mode": mode,
                 "flow_obs_per_sec": round(rows / (ms / 1000.0)) if ms else None,
                 "batches": len(progress),
                 "n_obs": n_obs,

@@ -136,7 +136,7 @@ obs, pods, nodes, prefixes = build_flow_inputs(spark, sf_dir)
 dim = disjoint_prefixes(prefixes).persist()
 dim.count()
 accepted, _ = split_rejected(
-    label_flows(obs, pods, nodes, dim, DEMO_CFG, prefixes_are_disjoint=True)
+    label_flows(obs, pods, nodes, dim, DEMO_CFG)
 )
 flows = summing_aggregate(to_flow_rows(accepted)).persist()
 n_batch = flows.count()

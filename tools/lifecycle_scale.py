@@ -63,7 +63,7 @@ def main() -> int:
     dim = disjoint_prefixes(prefixes).persist()
     dim.count()
     accepted, _ = split_rejected(
-        label_flows(obs, pods, nodes, dim, DEMO_CFG, prefixes_are_disjoint=True)
+        label_flows(obs, pods, nodes, dim, DEMO_CFG)
     )
     flows = summing_aggregate(to_flow_rows(accepted)).persist()
     n_flow_rows = flows.count()

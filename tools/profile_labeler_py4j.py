@@ -1,14 +1,19 @@
 #!/usr/bin/env python
-"""Profile the flow-labeler's PER-MICRO-BATCH driver-side cost:
-py4j roundtrips + wall-clock of plan CONSTRUCTION (label_flows ->
-split_rejected -> to_flow_rows -> summing_aggregate), separated from
-execution. This is the measurement VERDICT r07 #1 keys on ("py4j
-roundtrips per batch halved, re-profile with the same cProfile
-method").
+"""Profile the flow labeler's driver-side plan-construction cost: py4j
+roundtrips + wall-clock of building the plan, separated from execution,
+for the two ways the engine binds the labeler's SQL text:
+
+- ``label_flows``: one call over fresh dims (batch callers, q319,
+  backfill, the windowed stream) — dim derivation, view binds and one
+  ``spark.sql``;
+- ``flow_batch_sql``: one micro-batch of start_flow_stream — the text
+  is prebuilt once per dimension refresh, so a batch is one temp-view
+  bind + one ``spark.sql``.
 
 Usage: python tools/profile_labeler_py4j.py [sf_dir]
-Prints one JSON line: {"roundtrips": N, "plan_construct_s": ...,
-"plan_construct_best_s": ..., "exec_s": ...}.
+Prints one JSON line with, per form: {"roundtrips": N,
+"plan_construct_s": ..., "plan_construct_best_s": ..., "exec_best_s":
+...}.
 """
 
 from __future__ import annotations
@@ -25,15 +30,12 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 
     from kubenetmon_spark.demo import DEMO_CFG, build_flow_inputs
-    from kubenetmon_spark.operators.flows import (
-        summing_aggregate,
-        to_flow_rows,
+    from kubenetmon_spark.flowsql import (
+        collect_lpm_segments,
+        flow_batch_sql,
+        register_flow_dim_views,
     )
-    from kubenetmon_spark.operators.label import (
-        label_flows,
-        prepare_label_dims,
-        split_rejected,
-    )
+    from kubenetmon_spark.operators.label import label_flows, prepare_label_dims
     from kubenetmon_spark.operators.lpm import disjoint_prefixes
     from kubenetmon_spark.session import get_spark
 
@@ -46,41 +48,30 @@ def main() -> int:
     dim = disjoint_prefixes(prefixes).persist()
     dim.count()
     prepared = prepare_label_dims(pods, nodes)
-
-    from kubenetmon_spark.flowsql import (
-        flow_batch_sql,
-        register_flow_dim_views,
+    views = register_flow_dim_views(spark, prepared, dim, tag="prof")
+    sql_text = flow_batch_sql(
+        DEMO_CFG, prepared, "_prof_obs", *views, collect_lpm_segments(dim)
     )
 
-    views = register_flow_dim_views(spark, prepared, dim, tag="prof")
-    sql_text = flow_batch_sql(DEMO_CFG, prepared, "_prof_obs", *views)
+    def one_batch():
+        obs.createOrReplaceTempView("_prof_obs")
+        return spark.sql(sql_text)
 
-    mode = sys.argv[2] if len(sys.argv) > 2 else "df"
+    out = {
+        "label_flows": _profile(
+            lambda: label_flows(obs, pods, nodes, prefixes, DEMO_CFG)
+        ),
+        "flow_batch_sql": _profile(one_batch),
+        "sf_dir": sf_dir,
+    }
+    print(json.dumps(out))
+    spark.stop()
+    return 0
 
-    if mode == "sql":
 
-        def build_plan():
-            obs.createOrReplaceTempView("_prof_obs")
-            return spark.sql(sql_text)
-
-    else:
-
-        def build_plan():
-            labeled = label_flows(
-                obs,
-                pods,
-                nodes,
-                dim,
-                DEMO_CFG,
-                prefixes_are_disjoint=True,
-                prepared=prepared,
-            )
-            accepted, _ = split_rejected(labeled)
-            return summing_aggregate(to_flow_rows(accepted))
-
+def _profile(build_plan) -> dict:
     # Warm (classloading, analysis caches, codegen)
-    plan = build_plan()
-    plan.write.format("noop").mode("overwrite").save()
+    build_plan().write.format("noop").mode("overwrite").save()
 
     # Count py4j roundtrips during ONE plan construction by wrapping the
     # gateway client's send_command (every synchronous JVM call goes
@@ -95,11 +86,12 @@ def main() -> int:
         return orig(self, *a, **kw)
 
     jg.GatewayClient.send_command = counting
-    t0 = time.perf_counter()
-    build_plan()
-    construct_s = time.perf_counter() - t0
-    roundtrips = counter["n"]
-    jg.GatewayClient.send_command = orig
+    try:
+        t0 = time.perf_counter()
+        build_plan()
+        construct_s = time.perf_counter() - t0
+    finally:
+        jg.GatewayClient.send_command = orig
 
     # Best-of-5 wall clock for plan construction (no instrumentation)
     best = None
@@ -117,22 +109,12 @@ def main() -> int:
         plan.write.format("noop").mode("overwrite").save()
         dt = time.perf_counter() - t0
         exec_best = dt if exec_best is None else min(exec_best, dt)
-
-    print(
-        json.dumps(
-            {
-                "roundtrips": roundtrips,
-                "plan_construct_s": round(construct_s, 3),
-                "plan_construct_best_s": round(best, 3),
-                "exec_best_s": round(exec_best, 3),
-                "mode": mode,
-                "sf_dir": sf_dir,
-            }
-        )
-    )
-    spark.stop()
-    return 0
-
+    return {
+        "roundtrips": counter["n"],
+        "plan_construct_s": round(construct_s, 3),
+        "plan_construct_best_s": round(best, 3),
+        "exec_best_s": round(exec_best, 3),
+    }
 
 if __name__ == "__main__":
     raise SystemExit(main())

@@ -43,7 +43,7 @@ def main() -> int:
     dim = disjoint_prefixes(prefixes).persist()
     dim.count()
     accepted, _ = split_rejected(
-        label_flows(obs, pods, nodes, dim, DEMO_CFG, prefixes_are_disjoint=True)
+        label_flows(obs, pods, nodes, dim, DEMO_CFG)
     )
     uniform = to_flow_rows(accepted).persist()
     n = uniform.count()
@@ -103,9 +103,7 @@ def main() -> int:
     def label_best3(o):
         def run():
             acc, _ = split_rejected(
-                label_flows(
-                    o, pods, nodes, dim, DEMO_CFG, prefixes_are_disjoint=True
-                )
+                label_flows(o, pods, nodes, dim, DEMO_CFG)
             )
             summing_aggregate(to_flow_rows(acc)).write.format("noop").mode(
                 "overwrite"

@@ -186,7 +186,7 @@ def main() -> int:
     }
     dim = disjoint_prefixes(prefixes)
     accepted, _ = split_rejected(
-        label_flows(obs, pods, nodes, dim, DEMO_CFG, prefixes_are_disjoint=True)
+        label_flows(obs, pods, nodes, dim, DEMO_CFG)
     )
     batch_ans = {
         (r.connectionClass, r.direction): (r.bytes, r.packets)
