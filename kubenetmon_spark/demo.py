@@ -37,10 +37,8 @@ DEMO_CFG = RuntimeConfig(
 
 
 def _local_dim(spark: SparkSession, data, schema: str) -> DataFrame:
-    """A tiny driver-side dimension as a ONE-slice DataFrame (see
-    tables.local_df — the shared helper; a later ``coalesce(1)`` over
-    the default 32-slice layout was measured ~13s (!) because the one
-    task serializes 32 Python-worker round-trips)."""
+    """A tiny driver-side dimension as a one-partition, JVM-scanned
+    DataFrame (tables.local_df, the shared helper)."""
     return local_df(spark, data, schema)
 
 

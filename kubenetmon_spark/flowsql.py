@@ -315,7 +315,9 @@ def labeled_sql(
 
     # --- F6 node-flow hits (reference labeler.go:249-253, 407-427):
     # IN-set literals (null-safe via coalesce, a null endpoint never
-    # matches) or two broadcast left joins against the node-IP view ---
+    # matches) or two broadcast left joins against the node-IP view.
+    # Both joins rename the view column, so their builds canonicalize
+    # equal and the second reuses the first's broadcast ---
     s1_nip = ""
     s3_hints, s3_nip, s3_joins = "", "", ""
     if node_ip_set is not None:
@@ -330,12 +332,12 @@ def labeled_sql(
         nv = prepared["node_ip_view"]
         s3_hints = ", BROADCAST(nsrc), BROADCAST(ndst)"
         s3_nip = (
-            ",\n    nsrc._nip IS NOT NULL AS _nip_hit,"
+            ",\n    nsrc._nip1 IS NOT NULL AS _nip_hit,"
             " ndst._nip2 IS NOT NULL AS _nip2_hit"
         )
         s3_joins = (
-            f"\n  LEFT JOIN (SELECT _nip FROM {nv}) nsrc"
-            " ON _s1.orig_src_ip = nsrc._nip"
+            f"\n  LEFT JOIN (SELECT _nip AS _nip1 FROM {nv}) nsrc"
+            " ON _s1.orig_src_ip = nsrc._nip1"
             f"\n  LEFT JOIN (SELECT _nip AS _nip2 FROM {nv}) ndst"
             " ON _s1.reply_src_ip = ndst._nip2"
         )

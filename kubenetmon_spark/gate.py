@@ -16984,7 +16984,7 @@ def q313(spark, sf_dir):
     "(operators/curation.py::ngram_novelty — the memorization / "
     "new-source audit): docs from the single-digit sources are scored "
     "against the gram set of the double-digit sources; distinct "
-    "3-gram shingles via the shared Arrow shingler, reference "
+    "3-gram shingles via the shared JVM shingler, reference "
     "collapses to DISTINCT grams once, one gram-key equi-join (the "
     "q101 span-audit shape), exact-integer novelty_bp",
 )

@@ -14,8 +14,8 @@ not billions — so its shingle set is broadcast and the corpus-side scan
 joins against it with **zero corpus shuffle**; the only exchange is the
 per-(corpus doc, benchmark doc) count aggregation over rows that
 actually matched a benchmark shingle (rare by construction). The
-shingling itself reuses ``shingle_set`` (Arrow-batched; identical
-shingle bytes to the dedup/oracle convention).
+shingling itself reuses ``shingle_set`` (JVM-side; identical shingle
+bytes to the dedup/oracle convention).
 """
 
 from __future__ import annotations

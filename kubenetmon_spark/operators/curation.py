@@ -860,7 +860,7 @@ def ngram_novelty(
     Output: (id, total_grams, novel_grams, novelty_bp) with
     ``novelty_bp = novel*10000 // total`` exact-integer.
 
-    Scale posture: both sides shingle via the Arrow-batched
+    Scale posture: both sides shingle via the JVM-side
     ``shingle_set`` (byte-identical grams to the dedup/oracle
     convention); the reference collapses to DISTINCT grams once and
     the probe is a single gram-key equi-join (one shuffle each side,

@@ -1,9 +1,12 @@
 """Deduplication operators for large-scale text/training-data pipelines.
 
-All pure DataFrame/built-in-function implementations (JVM-side, codegen-
-friendly) — no Python UDFs. Determinism is a design goal: every hash is
-md5 over an explicit string, so results are reproducible across engines
-and runs (and checkable against a SQL oracle).
+Shingling and everything built on it (``shingle_set``, ``jaccard_pairs``,
+``minhash_lsh_pairs``, ``minhash_dedup_incremental``) runs in the JVM:
+built-in expressions plus ML's compiled ``NGram`` transformer, no Python
+worker. ``duplicate_span_fraction`` (integral ids) and ``semantic_dedup``
+use Arrow-batched Python stages. Determinism is a design goal: every hash
+is md5 over an explicit string, so results are reproducible across
+engines and runs (and checkable against a SQL oracle).
 
 Scale notes (100 TB posture):
 - ``exact_*``: one hash-shuffle on the fingerprint; map-side combine
@@ -11,39 +14,20 @@ Scale notes (100 TB posture):
 - ``shingle`` joins: hot shingles (stopword runs) create join skew; cap
   them with ``max_df`` (drop shingles appearing in more than ``max_df``
   docs — standard MinHash/LSH practice) or rely on AQE skew splitting.
-- ``minhash_lsh_pairs``: candidate generation is an equi-join on band
-  keys (shuffle bounded by #bands x #docs), the verify join touches only
-  candidate pairs. This is the scale path; exact ``jaccard_pairs`` is the
-  small-scale/oracle path.
+- ``minhash_lsh_pairs``: signatures come from one row per document (no
+  shuffle); candidate generation is an equi-join on band keys (shuffle
+  bounded by #bands x #docs); verification joins each candidate pair to
+  its two per-document shingle arrays. This is the scale path; exact
+  ``jaccard_pairs`` is the small-scale/oracle path.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from kubenetmon_spark.tables import fanout
-
-
-def _tokens(text: Column) -> Column:
-    return F.split(F.trim(text), r"\s+")
-
-
-def word_shingles(text: Column, n: int = 3) -> Column:
-    """Distinct word n-gram shingles of a text column (array<string>).
-
-    Texts with fewer than n tokens yield an empty array (sequence() would
-    reject a 0 > -1 range, so guard explicitly).
-    """
-    toks = _tokens(text)
-    grams = F.transform(
-        F.sequence(F.lit(0), F.size(toks) - n),
-        lambda i: F.concat_ws(" ", *[F.element_at(toks, i + j + 1) for j in range(n)]),
-    )
-    return F.array_distinct(
-        F.when(F.size(toks) >= n, grams).otherwise(F.array().cast("array<string>"))
-    )
 
 
 def exact_duplicate_groups(
@@ -71,73 +55,57 @@ def drop_exact_duplicates(df: DataFrame, id_col: str, text_col: str, normalize: 
     )
 
 
+def _doc_shingles(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
+    """(_id, sh): one row per input row with a non-NULL text, ``sh`` its
+    distinct word n-grams in first-occurrence order.
+
+    Tokens are ``split(trim(text), '\\s+')`` (Java ``\\s``, i.e. ASCII
+    ``[ \\t\\n\\x0B\\f\\r]``: U+00A0 and other Unicode spaces stay
+    inside a token); the n-grams come from ML's ``NGram`` transformer, a
+    compiled JVM function, so no row leaves the JVM. Texts with fewer
+    than n tokens get an empty array. ``NGram`` throws on a NULL array,
+    so NULL texts are filtered first (they have no shingles).
+
+    ``_id`` is the id cast to LongType. A non-integral id column would
+    cast to NULL (every downstream anti-join/dedup would then no-op —
+    silent data corruption for safety-critical consumers like
+    decontaminate), so it is refused instead.
+    """
+    from pyspark.ml.feature import NGram
+
+    id_dtype = df.schema[id_col].dataType.simpleString()
+    if id_dtype not in ("bigint", "int", "smallint", "tinyint"):
+        raise ValueError(
+            f"shingle_set: id column {id_col!r} has type {id_dtype}; "
+            "need an integral id — derive a surrogate first, e.g. "
+            f".withColumn({id_col!r}, F.xxhash64({id_col!r}))"
+        )
+    toks = df.filter(F.col(text_col).isNotNull()).select(
+        F.col(id_col).cast("long").alias("_id"),
+        F.split(F.trim(F.col(text_col)), r"\s+").alias("_toks"),
+    )
+    grams = NGram(n=n, inputCol="_toks", outputCol="_grams").transform(toks)
+    return grams.select("_id", F.array_distinct("_grams").alias("sh"))
+
+
 def shingle_set(
     df: DataFrame,
     id_col: str,
     text_col: str,
     n: int = 3,
     max_df: int | None = None,
-    method: str = "arrow",
 ) -> DataFrame:
-    """(id, shingle) distinct pairs; optionally drop shingles with document
-    frequency > max_df (skew/recall tradeoff at scale).
+    """(_id, shingle) rows, each input row's distinct word n-grams;
+    optionally drop shingles with document frequency > max_df
+    (skew/recall tradeoff at scale).
 
-    ``method='arrow'`` (default): tokenize + shingle in an Arrow-batched
-    Python stage — Spark's higher-order lambdas are interpreted, so the
-    per-gram concat in ``word_shingles`` dominates the whole dedup pipeline
-    (~10s of the ~18s q22 at sf0.1); C-speed string split is ~20x faster
-    and produces byte-identical shingles (whitespace-run split of the
-    space-trimmed text, like ``split(trim(text), '\\s+')``).
-    ``method='sql'``: pure built-in expressions.
+    Tokenization, the NULL-text and integral-id rules are those of
+    :func:`_doc_shingles`; the whole stage is JVM expressions plus one
+    ``explode`` — no Python worker.
     """
-    if method == "arrow":
-        import re
-
-        from pyspark.sql.types import LongType, StringType, StructField, StructType
-
-        # The Arrow stage carries _id as LongType; a non-integral id
-        # column would silently CAST to NULL (every downstream
-        # anti-join/dedup would then no-op — silent data corruption for
-        # safety-critical consumers like decontaminate). Refuse instead.
-        id_dtype = df.schema[id_col].dataType.simpleString()
-        if id_dtype not in ("bigint", "int", "smallint", "tinyint"):
-            raise ValueError(
-                f"shingle_set: id column {id_col!r} has type {id_dtype}; "
-                "need an integral id — derive a surrogate first, e.g. "
-                f".withColumn({id_col!r}, F.xxhash64({id_col!r}))"
-            )
-
-        out_schema = StructType(
-            [StructField("_id", LongType(), True), StructField("shingle", StringType(), True)]
-        )
-        ws = re.compile(r"\s+")
-
-        def gen(batches):
-            import pandas as pd
-
-            for b in batches:
-                ids, shingles = [], []
-                for _id, text in zip(b[id_col], b[text_col]):
-                    if text is None:
-                        continue
-                    toks = ws.split(text.strip(" "))
-                    seen = set()
-                    for i in range(len(toks) - n + 1):
-                        s = " ".join(toks[i : i + n])
-                        if s not in seen:
-                            seen.add(s)
-                            ids.append(_id)
-                            shingles.append(s)
-                yield pd.DataFrame({"_id": ids, "shingle": shingles})
-
-        sh = df.select(F.col(id_col).cast("long").alias(id_col), text_col).mapInPandas(
-            gen, out_schema
-        )
-    else:
-        sh = df.select(
-            F.col(id_col).alias("_id"),
-            F.explode(word_shingles(F.col(text_col), n)).alias("shingle"),
-        ).distinct()
+    sh = _doc_shingles(df, id_col, text_col, n).select(
+        "_id", F.explode("sh").alias("shingle")
+    )
     if max_df is not None:
         hot = sh.groupBy("shingle").count().filter(F.col("count") > max_df).select("shingle")
         sh = sh.join(hot, "shingle", "left_anti")
@@ -195,8 +163,8 @@ def jaccard_pairs(
             )
     # Materialize the shingle set once — it is scanned three times below
     # (sizes + both sides of the self-join). fanout: a single-split
-    # corpus otherwise serializes the Arrow shingle stage and the join
-    # map sides on one core (tables.fanout — no-op at scale).
+    # corpus otherwise serializes the shingle stage and the join map
+    # sides on one core (tables.fanout — no-op at scale).
     sh = shingle_set(fanout(df), id_col, text_col, n, max_df).localCheckpoint(eager=True)
     sizes = sh.groupBy("_id").agg(F.count(F.lit(1)).alias("sz"))
     a = sh.select(F.col("_id").alias("id_1"), "shingle")
@@ -223,20 +191,26 @@ def jaccard_pairs(
     return out
 
 
-def minhash_signatures(
-    df: DataFrame, id_col: str, text_col: str, num_hashes: int = 8, n: int = 3
-) -> DataFrame:
-    """(id, h, minhash) — deterministic MinHash: hash_h(s) = md5(h ':' s).
-
-    md5-based hashing makes the signature engine-independent (the SQL
-    oracle computes the identical signature), unlike seeded-random
-    permutations.
-    """
-    sh = shingle_set(fanout(df), id_col, text_col, n)
-    hashed = sh.withColumn("h", F.explode(F.sequence(F.lit(0), F.lit(num_hashes - 1)))).withColumn(
-        "hv", F.md5(F.concat_ws(":", F.col("h"), F.col("shingle")))
-    )
-    return hashed.groupBy("_id", "h").agg(F.min("hv").alias("minhash"))
+def _band_rows(per_doc: DataFrame, num_hashes: int, bands: int, *keep: str) -> DataFrame:
+    """(_id, *keep, band, band_key) — ``bands`` rows per document from its
+    ``_mh<h>`` MinHash columns: band b's key is the sorted ``h=minhash``
+    strings of its num_hashes // bands rows joined with '|'."""
+    rows_per_band = num_hashes // bands
+    band_structs = []
+    for b in range(bands):
+        hs = range(b * rows_per_band, (b + 1) * rows_per_band)
+        keys = F.array(
+            *[F.concat_ws("=", F.lit(str(h)), F.col(f"_mh{h}")) for h in hs]
+        )
+        band_structs.append(
+            F.struct(
+                F.lit(b).alias("band"),
+                F.concat_ws("|", F.array_sort(keys)).alias("band_key"),
+            )
+        )
+    return per_doc.select(
+        "_id", *keep, F.explode(F.array(*band_structs)).alias("_b")
+    ).select("_id", *keep, "_b.band", "_b.band_key")
 
 
 def minhash_lsh_pairs(
@@ -250,51 +224,38 @@ def minhash_lsh_pairs(
 ) -> DataFrame:
     """MinHash + LSH banding near-duplicate detection.
 
-    1. signatures: num_hashes MinHash values per doc;
+    1. signatures: num_hashes MinHash values per doc, hash_h(s) =
+       md5(h ':' s) — md5 keeps the signature engine-independent (the
+       SQL oracle computes the identical one), unlike seeded-random
+       permutations;
     2. banding: rows of the signature grouped into ``bands`` keys; docs
        sharing any band key become candidate pairs (equi-join — the only
        pair-generating shuffle);
     3. verify: exact Jaccard on candidates only; keep >= threshold.
 
+    Ids are document keys: each input row is one document.
     Returns (id_1, id_2, jaccard_bp).
     """
-    rows_per_band = num_hashes // bands
-    # One tokenization pass: the shingle set feeds BOTH the signature
-    # aggregation and the verify join; localCheckpoint materializes it so
-    # the Arrow shingle stage runs once, not once per downstream scan.
-    # fanout: parallelize the Arrow shingle stage and the 8-way md5
-    # min-agg map side when the corpus arrives as fewer-than-core
-    # splits (measured 1.0s -> 0.2s warm at sf0.1; no-op at scale).
-    sh = shingle_set(fanout(df), id_col, text_col, n).localCheckpoint(eager=True)
-    # Signatures + set sizes in ONE shuffle over shingle rows: the 8
-    # minhashes are columnar MIN aggregates (map-side combined) instead of
-    # an 8x exploded (_id, h) row stream — same md5(h ':' shingle) values,
-    # 1/8th the exchanged rows.
-    # Checkpointed as well: the signature aggregate feeds three branches
-    # (banding, and both size joins of the verify step) — without the cut
-    # the 8-way md5 min-agg over every shingle row would execute 3x.
-    per_doc = sh.groupBy("_id").agg(
-        F.count(F.lit(1)).alias("sz"),
+    # One row per document carries its distinct shingles, their count and
+    # all signatures — built by per-row expressions, no shuffle. The
+    # checkpoint runs that row pass once for its three consumers (banding
+    # and both verify sides). fanout: parallelize it when the corpus
+    # arrives as fewer-than-core splits (no-op at scale). Documents
+    # without shingles are dropped: they cannot pair, and their NULL
+    # signatures would all share the band key ''.
+    docs = _doc_shingles(fanout(df), id_col, text_col, n).filter(F.size("sh") > 0)
+    per_doc = docs.select(
+        "_id",
+        "sh",
+        F.size("sh").alias("sz"),
         *[
-            F.min(F.md5(F.concat_ws(":", F.lit(h), F.col("shingle")))).alias(f"_mh{h}")
+            F.array_min(
+                F.transform("sh", lambda s: F.md5(F.concat(F.lit(f"{h}:"), s)))
+            ).alias(f"_mh{h}")
             for h in range(num_hashes)
         ],
     ).localCheckpoint(eager=True)
-    band_structs = []
-    for b in range(bands):
-        hs = range(b * rows_per_band, (b + 1) * rows_per_band)
-        keys = F.array(
-            *[F.concat_ws("=", F.lit(str(h)), F.col(f"_mh{h}")) for h in hs]
-        )
-        band_structs.append(
-            F.struct(
-                F.lit(b).alias("band"),
-                F.concat_ws("|", F.array_sort(keys)).alias("band_key"),
-            )
-        )
-    banded = per_doc.select(
-        "_id", F.explode(F.array(*band_structs)).alias("_b")
-    ).select("_id", "_b.band", "_b.band_key")
+    banded = _band_rows(per_doc, num_hashes, bands)
     ca = banded.select(F.col("_id").alias("id_1"), "band", "band_key")
     cb = banded.select(F.col("_id").alias("id_2"), "band", "band_key")
     candidates = (
@@ -304,25 +265,17 @@ def minhash_lsh_pairs(
         .distinct()
     )
     # Verify ONLY the candidate pairs (this is what makes LSH the scale
-    # path — the exact-Jaccard join never touches non-candidate docs).
-    sizes = per_doc.select("_id", "sz")
-    a = sh.select(F.col("_id").alias("id_1"), "shingle")
-    b = sh.select(F.col("_id").alias("id_2"), "shingle")
-    inter = (
-        candidates.join(a, "id_1")
-        .join(b, ["id_2", "shingle"])
-        .groupBy("id_1", "id_2")
-        .agg(F.count(F.lit(1)).alias("intersection"))
-    )
+    # path): each side joins one per-document row, and the intersection
+    # is computed on the two distinct-shingle arrays.
+    d1 = per_doc.select(F.col("_id").alias("id_1"), F.col("sh").alias("_s1"), F.col("sz").alias("_sz1"))
+    d2 = per_doc.select(F.col("_id").alias("id_2"), F.col("sh").alias("_s2"), F.col("sz").alias("_sz2"))
+    inter = F.size(F.array_intersect("_s1", "_s2"))
     return (
-        inter.join(sizes.select(F.col("_id").alias("id_1"), F.col("sz").alias("_sz1")), "id_1")
-        .join(sizes.select(F.col("_id").alias("id_2"), F.col("sz").alias("_sz2")), "id_2")
+        candidates.join(d1, "id_1")
+        .join(d2, "id_2")
         .withColumn(
             "jaccard_bp",
-            F.floor(
-                (F.col("intersection") * 10000)
-                / (F.col("_sz1") + F.col("_sz2") - F.col("intersection"))
-            ).cast("long"),
+            F.floor((inter * 10000) / (F.col("_sz1") + F.col("_sz2") - inter)).cast("long"),
         )
         .filter(F.col("jaccard_bp") >= verify_threshold_bp)
         .select("id_1", "id_2", "jaccard_bp")
@@ -369,7 +322,6 @@ def minhash_dedup_incremental(
     Index schemas: ``index_bands (_id, band, band_key, sz)``,
     ``index_shingles (_id, shingle)``. Pass None/None for a cold start.
     """
-    rows_per_band = num_hashes // bands
     sh = shingle_set(batch, id_col, text_col, n).localCheckpoint(eager=True)
     per_doc = sh.groupBy("_id").agg(
         F.count(F.lit(1)).alias("sz"),
@@ -378,21 +330,7 @@ def minhash_dedup_incremental(
             for h in range(num_hashes)
         ],
     ).localCheckpoint(eager=True)
-    band_structs = []
-    for b in range(bands):
-        hs = range(b * rows_per_band, (b + 1) * rows_per_band)
-        keys = F.array(
-            *[F.concat_ws("=", F.lit(str(h)), F.col(f"_mh{h}")) for h in hs]
-        )
-        band_structs.append(
-            F.struct(
-                F.lit(b).alias("band"),
-                F.concat_ws("|", F.array_sort(keys)).alias("band_key"),
-            )
-        )
-    banded = per_doc.select(
-        "_id", "sz", F.explode(F.array(*band_structs)).alias("_b")
-    ).select("_id", "sz", "_b.band", "_b.band_key")
+    banded = _band_rows(per_doc, num_hashes, bands, "sz")
 
     def verify(cands, sh2, sz2):
         """exact jaccard >= threshold for (id_1=other, id_2=batch doc)."""
@@ -567,13 +505,12 @@ def duplicate_span_fraction(
     # token is, or a doc flagged as duplicated here can be untouched
     # by the remover (and double spaces would inject phantom tokens)
     #
-    # Span GENERATION runs in the shared Arrow-batched shape of
-    # shingle_set (r7): Spark's interpreted higher-order lambdas made
-    # the transform+slice+array_join explode 85% of this operator's
-    # cost (3.4s of 4.0s at sf0.1) where a C-speed split + join emits
+    # Span GENERATION runs in an Arrow-batched Python stage (r7):
+    # Spark's interpreted higher-order lambdas made the
+    # transform+slice+array_join explode 85% of this operator's cost
+    # (3.4s of 4.0s at sf0.1) where a C-speed split + join emits
     # byte-identical spans. Non-integral id columns take the
-    # expression path below (the Arrow stage carries _id as long —
-    # same contract as shingle_set).
+    # expression path below (the Arrow stage carries _id as long).
     id_dtype = df.schema[id_col].dataType.simpleString()
     if id_dtype in ("bigint", "int", "smallint", "tinyint"):
         import re as _re

@@ -225,10 +225,9 @@ def prefixes6_from_cidrs(spark, rows):
         out.append(
             (s_hi, s_lo, e_hi, e_lo, net.prefixlen, cloud, service, region)
         )
-    # ONE slice: createDataFrame(list) would parallelize the feed-sized
-    # dim into defaultParallelism Python-backed slices, making every
-    # scan (the v6 sweep runs several) schedule a core-count of tasks
-    # each paying a Python-worker round-trip (see tables.local_df).
+    # ONE partition, JVM-scanned (tables.local_df): the v6 sweep scans
+    # this dim several times, and each scan is one task with no
+    # Python worker.
     from kubenetmon_spark.tables import local_df
 
     return local_df(

@@ -2347,3 +2347,111 @@ class TestLocalGraphPath:
         )
         with pytest.raises(Exception, match="CAST_INVALID_INPUT"):
             connected_components(sdf).collect()
+
+
+class TestJvmCurationPass:
+    """The curation chain (shingling, MinHash-LSH, clusters) and the
+    driver-built frames it ends in stay in the JVM."""
+
+    PYTHON_NODES = ("PythonRDD", "MapInPandas", "ArrowEvalPython")
+
+    def test_shingle_set_tokenizes_on_java_whitespace(self, spark):
+        import re
+
+        from kubenetmon_spark.operators.dedup import shingle_set
+
+        rows = [
+            (1, "a\xa0b c d"),  # NBSP is not whitespace to Java's \s
+            (2, "\tfoo bar baz"),  # trim() strips spaces only
+            (3, "a b"),  # fewer than 3 tokens
+            (4, ""),
+            (5, None),
+            (6, "x y z x y z\x0b"),  # repeated grams, trailing \v
+            (7, "p\u2028q r s"),  # U+2028 is not whitespace either
+        ]
+        java_ws = re.compile(r"[ \t\n\x0B\f\r]+")
+        want = []
+        for doc_id, text in rows:
+            if text is None:
+                continue
+            toks = java_ws.split(text.strip(" "))
+            grams = [" ".join(toks[i : i + 3]) for i in range(len(toks) - 2)]
+            want += [(doc_id, g) for g in dict.fromkeys(grams)]
+        docs = spark.createDataFrame(rows, "doc_id long, text string")
+        got = [tuple(r) for r in shingle_set(docs, "doc_id", "text").collect()]
+        assert sorted(got) == sorted(want)
+        assert (1, "a\xa0b c d") in got and (2, " foo bar") in got
+
+    def test_local_df_is_one_jvm_partition(self, spark):
+        from datetime import datetime
+
+        from pyspark.sql.types import (
+            LongType,
+            StringType,
+            StructField,
+            StructType,
+            TimestampType,
+        )
+
+        from kubenetmon_spark.tables import local_df
+
+        rows = [
+            (2**62 + 1, "a", datetime(2024, 1, 2, 3, 4, 5)),
+            (None, "b", None),
+            (7, None, datetime(1999, 12, 31, 23, 59, 59, 999999)),
+        ]
+        ddl = "v long, s string, t timestamp"
+        struct = StructType(
+            [
+                StructField("v", LongType()),
+                StructField("s", StringType()),
+                StructField("t", TimestampType()),
+            ]
+        )
+        for schema in (ddl, struct):
+            df = local_df(spark, rows, schema)
+            assert df.rdd.getNumPartitions() == 1
+            lineage = df._jdf.queryExecution().toRdd().toDebugString()
+            assert "PythonRDD" not in lineage
+            assert df.schema == struct
+            assert [tuple(r) for r in df.collect()] == rows
+        assert local_df(spark, [], ddl).collect() == []
+
+    def test_curation_chain_starts_no_python_worker(self, spark, monkeypatch):
+        from kubenetmon_spark.operators.dedup import minhash_lsh_pairs
+        from kubenetmon_spark.operators.graph import duplicate_clusters
+        from kubenetmon_spark.operators.text import with_quality
+
+        plans = []
+
+        def record(df):
+            qe = df._jdf.queryExecution()
+            plans.append(
+                qe.executedPlan().toString() + qe.toRdd().toDebugString()
+            )
+
+        docs = spark.range(24).selectExpr(
+            "id AS doc_id",
+            "concat('alpha beta gamma delta epsilon zeta eta theta ', id % 3)"
+            " AS text",
+        )
+        # every frame the operators materialize passes through here
+        frame_cls = type(docs)
+        checkpoint = frame_cls.localCheckpoint
+
+        def recording_checkpoint(self, *args, **kwargs):
+            record(self)
+            return checkpoint(self, *args, **kwargs)
+
+        monkeypatch.setattr(frame_cls, "localCheckpoint", recording_checkpoint)
+        q = with_quality(docs, "text")
+        kept = q.filter(F.col("n_tokens") > 0).select("doc_id", "text")
+        pairs = minhash_lsh_pairs(kept, "doc_id", "text")
+        clusters = duplicate_clusters(pairs)
+        for df in (q, pairs, clusters):
+            record(df)
+        assert clusters.count() == 24
+        assert len(plans) > 3  # the operators' own checkpoints were seen
+        for plan in plans:
+            for node in self.PYTHON_NODES:
+                assert node not in plan, plan
