@@ -68,9 +68,12 @@ def _committed_full_map(root, bench_name: str, sf) -> dict:
         return {}
 
 
-def load_round_baseline(root, sf):
+def load_round_baseline(root, sf, default_parallelism=None, master=None):
     """(name, queries) of the newest committed ``BENCH_r{N}.json`` at
-    the same scale factor, or ``("", {})``. Handles BOTH formats: the
+    the same scale factor, or ``("", {})``. When ``default_parallelism``
+    or ``master`` is given, the baseline must also have recorded the
+    same value: an 8-core run read against a 32-core round flags every
+    query that parallelizes. Handles BOTH formats: the
     bench's own JSON line and the driver's wrapper ``{n, rc, cpus, sf,
     tail, parsed: {...}}`` (unwrapping ``parsed``) — without the unwrap
     the queries map read empty and the round check silently never
@@ -87,8 +90,16 @@ def load_round_baseline(root, sf):
         if m
     )
     # newest-first, falling PAST rounds benched at another scale factor
-    # (one off-sf round must not silently disable the check against the
-    # latest same-sf baseline)
+    # or parallelism (one unlike round must not silently disable the
+    # check against the latest like baseline)
+    like = {
+        k: v
+        for k, v in (
+            ("default_parallelism", default_parallelism),
+            ("master", master),
+        )
+        if v is not None
+    }
     for _n, prev_path in reversed(cands):
         try:
             prev_doc = json.loads(prev_path.read_text())
@@ -98,8 +109,10 @@ def load_round_baseline(root, sf):
             prev_doc.get("parsed"), dict
         ):
             prev_doc = prev_doc["parsed"]
-        if prev_doc.get("sf") == sf and isinstance(
-            prev_doc.get("queries"), dict
+        if (
+            prev_doc.get("sf") == sf
+            and isinstance(prev_doc.get("queries"), dict)
+            and all(prev_doc.get(k) == v for k, v in like.items())
         ):
             full = _committed_full_map(root, prev_path.name, sf)
             return prev_path.name, {**full, **prev_doc["queries"]}
@@ -486,7 +499,10 @@ def main() -> int:
     # adjudications land in BENCH_DETAIL.json and PLAN_AUDIT.md.
     round_adjudications: list[dict] = []
     round_baseline, prev_queries = load_round_baseline(
-        Path(__file__).resolve().parent, sf
+        Path(__file__).resolve().parent,
+        sf,
+        spark.sparkContext.defaultParallelism,
+        spark.sparkContext.master,
     )
     if round_baseline:
         for name in flag_round_moves(prev_queries, timings):

@@ -11,7 +11,9 @@ module adds the actual BPE layer:
   longer matters), then iterate: count weighted adjacent symbol pairs
   -> take the global argmax -> splice that pair in every word's symbol
   array. Each merge round is one shuffle over the (small) word table;
-  the driver only ever receives the single winning pair, never data.
+  the driver receives only the single winning pair. A vocabulary under
+  the ``tables.driver_table`` ceiling instead moves to the driver once
+  and the whole loop runs there.
   Determinism: ties on count break lexicographically, so any engine
   and any partitioning produce the same merge list.
 - ``bpe_apply``: tokenize documents with a learned merge list. Runs in
@@ -42,6 +44,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from kubenetmon_spark.tables import driver_table
+
 if TYPE_CHECKING:  # pragma: no cover
     import pandas as pd
 
@@ -56,19 +60,8 @@ def _word_counts(df: DataFrame, text_col: str) -> DataFrame:
     )
 
 
-#: At or below this many DISTINCT WORDS the merge-training loop runs
-#: on the driver over one collected vocabulary (64k words x ~10 chars
-#: is ~1-2 MB) with incremental pair-count maintenance; above it the
-#: per-round distributed loop runs unchanged. The probe is a
-#: limit+count over the checkpointed word table — no row transfer for
-#: oversized vocabularies.
-LOCAL_BPE_VOCAB_LIMIT = 1 << 16
-
-
-def _bpe_train_driver(
-    rows, num_merges: int
-) -> list[tuple[str, str]]:
-    """bpe_train's merge loop over a collected (syms, cnt) vocabulary —
+def _bpe_train_driver(tbl, num_merges: int) -> list[tuple[str, str]]:
+    """bpe_train's merge loop over the (syms, cnt) vocabulary table —
     bit-identical to the distributed rounds: the same position-weighted
     pair counts (repeated pairs inside one word count per position),
     the same (count desc, left, right) argmax (Python code-point string
@@ -79,8 +72,8 @@ def _bpe_train_driver(
     stale word's subtract/re-add cancels exactly)."""
     from collections import defaultdict
 
-    words = [list(r["syms"]) for r in rows]
-    cnts = [r["cnt"] for r in rows]
+    words = tbl["syms"].to_pylist()
+    cnts = tbl["cnt"].to_pylist()
     pair_counts: dict = defaultdict(int)
     index: dict = defaultdict(set)
     for wi, syms in enumerate(words):
@@ -152,10 +145,12 @@ def bpe_train(
     # pattern, guide §1.2/§5): the merge loop's state is the DISTINCT
     # VOCABULARY — already bounded and corpus-size-independent — and
     # each distributed round pays an explode+shuffle+limit-collect of
-    # stage scheduling for counts a dict updates in microseconds.
-    n_vocab = words.limit(LOCAL_BPE_VOCAB_LIMIT + 1).count()
-    if n_vocab <= LOCAL_BPE_VOCAB_LIMIT:
-        return _bpe_train_driver(words.collect(), num_merges)
+    # stage scheduling for counts a dict updates in microseconds. A
+    # vocabulary row is charged 64 cells (symbol arrays vary in length):
+    # 2^16 distinct words reach the driver.
+    tbl = driver_table(words, 64)
+    if tbl is not None:
+        return _bpe_train_driver(tbl, num_merges)
 
     merges: list[tuple[str, str]] = []
     for _ in range(num_merges):

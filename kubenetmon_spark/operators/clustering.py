@@ -38,6 +38,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, IntegerType, StructField, StructType
 
+from kubenetmon_spark.tables import driver_table
+
 
 def _init_centroids(
     vectors: DataFrame, k: int, id_col: str, vec_col: str
@@ -200,19 +202,18 @@ def kmeans_inertia(assigned: DataFrame) -> float:
 # granularity; use kmeans_fit when float centroids are acceptable.
 
 
+def _quantize(m: np.ndarray, scale: int) -> np.ndarray:
+    """floor(double(x) * scale) as int64 — the one quantization of the
+    exact k-means family (IEEE-exact, the int_scaled_vec pattern)."""
+    return np.floor(m.astype(np.float64) * scale).astype(np.int64)
+
+
 def _trunc_div(s: np.ndarray, c) -> np.ndarray:
     """Truncating integer division (toward zero) — matches SQL's
     integer div in Spark and DuckDB; NumPy's // floors, so route
     through magnitudes."""
     s = np.asarray(s, dtype=np.int64)
     return np.sign(s) * (np.abs(s) // np.int64(c))
-
-
-#: At or below this many vectors the exact-integer k-means runs its
-#: Lloyd's rounds on the driver over one collected matrix (64k x
-#: dim-64 int64 is ~32 MB); above it the per-round scan/shuffle loop
-#: runs unchanged.
-LOCAL_KMEANS_VECTOR_LIMIT = 1 << 16
 
 
 def kmeans_fit_exact(
@@ -240,40 +241,26 @@ def kmeans_fit_exact(
     inputs at the default scale.
     """
     vectors = vectors.filter(F.col(vec_col).isNotNull())
-    init_rows = (
-        vectors.select(id_col, vec_col).orderBy(id_col).limit(k).collect()
-    )
-    if len(init_rows) < k:
-        raise ValueError(f"need at least k={k} vectors, got {len(init_rows)}")
-
-    def quant(m: np.ndarray) -> np.ndarray:
-        return np.floor(m.astype(np.float64) * scale).astype(np.int64)
-
-    cents = quant(np.array([list(r[1]) for r in init_rows], dtype=np.float64))
+    cents = _quantize(_init_centroids(vectors, k, id_col, vec_col), scale)
     dim = cents.shape[1]
     sc = vectors.sparkSession.sparkContext
-    # Scale-adaptive algorithm choice (guide §1.2; the graph.py
-    # LOCAL_GRAPH_EDGE_LIMIT pattern): at or below
-    # LOCAL_KMEANS_VECTOR_LIMIT vectors, all n_iter Lloyd's rounds run
-    # on the driver over ONE collected quantized matrix — the
-    # distributed loop pays a scan job + k-row shuffle + collect per
-    # round for sums numpy produces in milliseconds. Bit-identical by
-    # construction: the same quant, the same int64 distance/argmin,
-    # and per-cluster sums that the distributed path merely splits
-    # into per-batch partials (int64 addition is associative).
-    # The probe is a LIMIT collect — an oversized corpus transfers
-    # only LIMIT+1 rows and takes the distributed loop unchanged.
-    probe = (
-        vectors.select(vec_col)
-        .limit(LOCAL_KMEANS_VECTOR_LIMIT + 1)
-        .toPandas()
-    )
-    if len(probe) <= LOCAL_KMEANS_VECTOR_LIMIT:
-        q = quant(
-            np.array(
-                [np.asarray(x, dtype=np.float64) for x in probe[vec_col]]
-            )
-        )
+    # Scale-adaptive algorithm choice (guide §1.2): a vector set under
+    # the driver_table ceiling (dim cells a row) runs all n_iter Lloyd's
+    # rounds on the driver over ONE quantized matrix — the distributed
+    # loop pays a scan job + k-row shuffle + collect per round for sums
+    # numpy produces in milliseconds. Bit-identical by construction:
+    # the same quantization, the same int64 distance/argmin, and
+    # per-cluster sums that the distributed path merely splits into
+    # per-batch partials (int64 addition is associative).
+    tbl = driver_table(vectors.select(vec_col), dim)
+    if tbl is not None:
+        col = tbl[vec_col].combine_chunks()
+        # one flat buffer -> (n, dim); ragged vectors are refused, as
+        # np.stack on the distributed path refuses them
+        if (np.diff(col.offsets.to_numpy()) != dim).any():
+            raise ValueError(f"{vec_col}: every vector must have dim={dim}")
+        flat = col.flatten().to_numpy(zero_copy_only=False)
+        q = _quantize(flat.reshape(len(col), dim), scale)
         for _ in range(n_iter):
             d = ((q[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
             assign = np.argmin(d, axis=1)  # ties -> lowest cluster
@@ -295,11 +282,7 @@ def kmeans_fit_exact(
             for b in batches:
                 if not len(b):
                     continue
-                q = quant(
-                    np.array(
-                        [np.asarray(x, dtype=np.float64) for x in b[vec_col]]
-                    )
-                )
+                q = _quantize(np.stack(b[vec_col].to_numpy()), scale)
                 d = ((q[:, None, :] - c[None, :, :]) ** 2).sum(axis=2)
                 assign = np.argmin(d, axis=1)  # ties -> lowest cluster
                 rows = []
@@ -356,15 +339,7 @@ def kmeans_assign_exact(
             b = b.copy()
             b["cluster"] = pd.array([None] * len(b), dtype="Int32")
             if ok.any():
-                q = np.floor(
-                    np.array(
-                        [
-                            np.asarray(x, dtype=np.float64)
-                            for x in b[vec_col][ok]
-                        ]
-                    )
-                    * scale
-                ).astype(np.int64)
+                q = _quantize(np.stack(b[vec_col][ok].to_numpy()), scale)
                 d = ((q[:, None, :] - c[None, :, :]) ** 2).sum(axis=2)
                 b.loc[ok, "cluster"] = np.argmin(d, axis=1).astype(np.int32)
             yield b

@@ -15,17 +15,28 @@ Scale posture per round: one shuffle of the edge list keyed by node
 (join labels->edges), one groupBy(node).min aggregation. Edge count,
 not document count, drives the cost, and LSH banding already bounded
 pairs to genuinely-similar candidates. Lineage is cut each round with
-``localCheckpoint`` so the loop's plan doesn't grow (driver-side loop
-is over ITERATIONS, never over rows — each round is a distributed job;
-the only collect is the 1-row convergence count). For graphs with huge
-diameter (paths), switch to the large-star/small-star variant; dedup
-graphs don't need it.
+``localCheckpoint`` so the loop's plan doesn't grow. For graphs with
+huge diameter (paths), switch to the large-star/small-star variant;
+dedup graphs don't need it.
+
+Driver solves: every iterative operator here first asks
+``tables.driver_table`` for its (checkpointed) input. A graph under the
+one ``DRIVER_SOLVE_CELLS`` ceiling moves to the driver once, as Arrow,
+and every round runs there in numpy; a larger one moves no rows and
+takes the distributed loop, whose only collects are per-round
+scalars. Both paths give identical output, pinned by forced
+differential tests.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from kubenetmon_spark.tables import driver_table, local_df
 
 
 def connected_components(
@@ -63,84 +74,62 @@ def connected_components(
         )
         .localCheckpoint(eager=True)
     )
-    # Driver simulation under the edge limit (the pagerank/BFS/bpe
-    # pattern): each distributed round is one join+min-agg+checkpoint
-    # job over a graph whose whole symmetric closure fits in a few MB.
-    # The driver path SIMULATES the exact per-round min-label
-    # propagation — same initial labels, same per-round min over
-    # matched edges, same exact-integer sum convergence test, same
-    # max_iter RuntimeError — so behavior (including non-convergence)
-    # is bit-identical, pinned by forced differential tests. Restricted
-    # to integral node types with no NULL nodes: strings would need
-    # Spark's decimal-cast-of-string semantics in the convergence sum,
-    # and NULL nodes have join-miss semantics — both fall back to the
+    # Driver simulation under the driver_table ceiling: each
+    # distributed round is one join+min-agg+checkpoint job over a
+    # closure small enough to hold on the driver. The driver path
+    # SIMULATES the exact per-round min-label propagation — same
+    # initial labels, same per-round min over matched edges, same
+    # exact-integer sum convergence test, same max_iter RuntimeError —
+    # so behavior (including non-convergence) is bit-identical, pinned
+    # by forced differential tests. Restricted to integral node types
+    # with no NULL nodes: strings would need Spark's
+    # decimal-cast-of-string semantics in the convergence sum, and NULL
+    # nodes have join-miss semantics — both fall back to the
     # distributed loop unchanged.
     _int_nodes = all(
         f.dataType.simpleString() in ("tinyint", "smallint", "int", "bigint")
         for f in sym.schema.fields
     )
-    if _int_nodes:
-        n_sym = sym.limit(LOCAL_GRAPH_EDGE_LIMIT + 1).count()
-        if n_sym <= LOCAL_GRAPH_EDGE_LIMIT:
-            # One Arrow transfer instead of pickled Rows, and each
-            # round is one vectorized min-scatter instead of an
-            # O(edges) Python dict loop. Every node appears as `a`
-            # (the self-loop closure above), so labeling over the
-            # distinct `a` set is the dict formulation's key set.
-            tbl = sym.toArrow()
-            if (
-                tbl.column("a").null_count == 0
-                and tbl.column("b").null_count == 0
-            ):
-                import numpy as np
-                import pandas as pd
-
-                from kubenetmon_spark.tables import local_df
-
-                schema = (
-                    sym.select(F.col("a").alias("node"))
-                    .withColumn("comp", F.col("node"))
-                    .schema
+    tbl = driver_table(sym, 2) if _int_nodes else None
+    if tbl is not None and tbl["a"].null_count == tbl["b"].null_count == 0:
+        # Each round is one vectorized min-scatter. Every node appears
+        # as `a` (the self-loop closure above), so labeling over the
+        # distinct `a` set is the dict formulation's key set.
+        schema = (
+            sym.select(F.col("a").alias("node"))
+            .withColumn("comp", F.col("node"))
+            .schema
+        )
+        a_np = tbl["a"].to_numpy().astype(np.int64, copy=False)
+        b_np = tbl["b"].to_numpy().astype(np.int64, copy=False)
+        codes, uniq = pd.factorize(
+            np.concatenate([a_np, b_np]), use_na_sentinel=False
+        )
+        codes = codes.astype(np.int64, copy=False)
+        a_idx, b_idx = codes[: len(a_np)], codes[len(a_np) :]
+        uniq = uniq.astype(np.int64, copy=False)
+        _MAX = np.iinfo(np.int64).max
+        label = uniq.copy()
+        # the convergence sum must be EXACT (labels are raw node ids,
+        # whose int64 sum can overflow) — fold in Python ints like the
+        # decimal sum of the distributed loop
+        prev_sum = sum(label.tolist())
+        for _ in range(max_iter):
+            new = np.full(len(uniq), _MAX, dtype=np.int64)
+            np.minimum.at(new, a_idx, label[b_idx])
+            cur_sum = sum(new.tolist())
+            label = new
+            if cur_sum == prev_sum:
+                order = np.argsort(uniq, kind="stable")
+                return local_df(
+                    edges.sparkSession,
+                    list(zip(uniq[order].tolist(), label[order].tolist())),
+                    schema,
                 )
-                a_np = tbl.column("a").to_numpy(zero_copy_only=False)
-                b_np = tbl.column("b").to_numpy(zero_copy_only=False)
-                both = np.concatenate([a_np, b_np]).astype(
-                    np.int64, copy=False
-                )
-                codes, uniq = pd.factorize(both, use_na_sentinel=False)
-                codes = codes.astype(np.int64, copy=False)
-                m = len(a_np)
-                a_idx = codes[:m]
-                b_idx = codes[m:]
-                uniq = uniq.astype(np.int64, copy=False)
-                n = len(uniq)
-                _MAX = np.iinfo(np.int64).max
-                label = uniq.copy()
-                # the convergence sum must be EXACT (labels are raw
-                # node ids, whose int64 sum can overflow) — fold in
-                # Python ints like the dict formulation / the decimal
-                # sum of the distributed loop
-                prev_sum = sum(label.tolist())
-                for _ in range(max_iter):
-                    new = np.full(n, _MAX, dtype=np.int64)
-                    np.minimum.at(new, a_idx, label[b_idx])
-                    cur_sum = sum(new.tolist())
-                    label = new
-                    if cur_sum == prev_sum:
-                        order = np.argsort(uniq, kind="stable")
-                        return local_df(
-                            edges.sparkSession,
-                            [
-                                (int(uniq[i]), int(label[i]))
-                                for i in order
-                            ],
-                            schema,
-                        )
-                    prev_sum = cur_sum
-                raise RuntimeError(
-                    f"connected_components did not converge in "
-                    f"{max_iter} rounds"
-                )
+            prev_sum = cur_sum
+        raise RuntimeError(
+            f"connected_components did not converge in {max_iter} rounds"
+        )
     labels = (
         sym.select(F.col("a").alias("node"))
         .distinct()
@@ -210,9 +199,9 @@ def pagerank_exact(
 
     Scale posture per iteration: one shuffle joining ranks to the edge
     list on ``src`` (partitioning reused across rounds since the key
-    never changes), one groupBy(dst).sum. The driver loops over
-    ITERATIONS (a handful), never over rows; lineage is cut each round
-    with localCheckpoint so the plan stays flat.
+    never changes), one groupBy(dst).sum; lineage is cut each round
+    with localCheckpoint so the plan stays flat. A graph under the
+    ``driver_table`` ceiling moves to the driver once and iterates there.
 
     Returns (node, pr) with pr in units; sum(pr) <= unit.
     """
@@ -230,19 +219,15 @@ def pagerank_exact(
         .distinct()
         .localCheckpoint(eager=True)
     )
-    # Scale-adaptive algorithm choice (guide §1.2; the literal-dims
-    # pattern): a graph at or below LOCAL_GRAPH_EDGE_LIMIT distinct
-    # edges solves in exact int64 arithmetic ON THE DRIVER — the
-    # distributed loop pays ~10 rounds of tiny-shuffle stage
-    # scheduling (~0.3 s/round at local[32]) for work numpy finishes
-    # in milliseconds, and the integer contract (floor division on
-    # non-negative values) is engine-independent, so both paths are
-    # bit-identical by construction (pinned by test). The probe is a
-    # LIMIT collect over the already-materialized edge checkpoint:
-    # graphs past the limit transfer nothing but the first
-    # LIMIT+1 rows and take the distributed loop unchanged.
-    probe = e.limit(LOCAL_GRAPH_EDGE_LIMIT + 1).collect()
-    if len(probe) <= LOCAL_GRAPH_EDGE_LIMIT:
+    # Scale-adaptive algorithm choice (guide §1.2): a graph under the
+    # driver_table ceiling solves in exact int64 arithmetic ON THE
+    # DRIVER — the distributed loop pays ~10 rounds of tiny-shuffle
+    # stage scheduling (~0.3 s/round at local[32]) for work numpy
+    # finishes in milliseconds, and the integer contract (floor
+    # division on non-negative values) is engine-independent, so both
+    # paths are bit-identical by construction (pinned by test).
+    tbl = driver_table(e, 2)
+    if tbl is not None:
         node_type = (
             e.select(F.col("_s").alias("node"))
             .union(e.select(F.col("_d").alias("node")))
@@ -250,12 +235,7 @@ def pagerank_exact(
             .dataType
         )
         return _pagerank_driver_exact(
-            edges.sparkSession,
-            [(r["_s"], r["_d"]) for r in probe],
-            iterations,
-            damping_pct,
-            unit,
-            node_type,
+            edges.sparkSession, tbl, iterations, damping_pct, unit, node_type
         )
     out_deg = e.groupBy("_s").agg(F.count("*").alias("_deg"))
     nodes = (
@@ -297,61 +277,32 @@ def pagerank_exact(
     return pr
 
 
-#: At or below this many DISTINCT edges the exact-integer graph
-#: operators solve on the driver (numpy int64) instead of paying
-#: per-iteration distributed rounds; above it the shuffling loop runs
-#: unchanged. 2^17 edges is a few MB collected — trivial against any
-#: driver sized for a 100 TB deployment, and far below where the
-#: distributed loop starts to win.
-LOCAL_GRAPH_EDGE_LIMIT = 1 << 17
-
-#: Higher driver-solve cap for the two REACHABILITY operators
-#: (k_hop_reachability / temporal_reachability) ONLY. Their transfer
-#: is Arrow-columnar (DataFrame.toArrow — no per-row pickling; 1.2M
-#: string-pair rows measured 0.2-0.5 s vs 4.5 s via collect()), and
-#: their driver work is O(edges) TOTAL (BFS touches each adjacency
-#: list at most once across all levels; the temporal relaxation is
-#: vectorized int64 numpy per round) — unlike the pure-Python
-#: per-round loops behind LOCAL_GRAPH_EDGE_LIMIT, whose cost is
-#: O(edges * rounds) in interpreter time. 2^21 edges is ~100 MB on
-#: the wire, trivial for a driver sized for a 100 TB deployment;
-#: larger graphs take the distributed loops unchanged (the probe is
-#: still a limit+count — no row transfer until the graph is known
-#: small).
-LOCAL_REACH_EDGE_LIMIT = 1 << 21
-
-
-def _arrow_cols(df, *cols):
-    """Collect ``cols`` of ``df`` via one Arrow transfer into pandas
-    arrays — exact values (``integer_object_nulls`` keeps nullable int
-    columns as Python ints instead of lossy float64; non-null int
-    columns stay numpy int64), no per-row Row pickling and no
-    per-value to_pylist boxing (measured 0.08 s vs 1.6 s for 2.3M
-    strings)."""
-    tbl = df.toArrow()
-    return [
-        tbl.column(c).to_pandas(integer_object_nulls=True) for c in cols
-    ]
-
-
 def _np_py(v):
     """numpy scalar -> the exact equivalent Python scalar; passthrough
     for everything else. The driver graph paths hand factorized node
     ids back to ``local_df``/createDataFrame, which wants plain Python
     objects."""
-    import numpy as np
-
     return v.item() if isinstance(v, np.generic) else v
 
 
-def _factorize_codes(np, pd, parts):
-    """Factorize the concatenation of object sequences into int64
-    codes + the uniques list (numpy scalars coerced to Python).
-    NULLs get the one-past-the-end code — they form a single real
-    group (SQL GROUP BY / set semantics treat them as one)."""
-    arrs = [np.asarray(p, dtype=object) for p in parts]
+def _factorize_codes(parts, sort=False):
+    """Factorize the concatenation of Arrow columns and Python
+    sequences into int64 codes + the uniques list (Python scalars,
+    ascending when ``sort``). NULLs get the one-past-the-end code —
+    they form a single real group (SQL GROUP BY / set semantics treat
+    them as one). Non-null integer columns stay int64 (no boxing);
+    ``integer_object_nulls`` keeps nullable ones exact Python ints."""
+    arrs = [
+        np.asarray(
+            p.to_pandas(integer_object_nulls=True)
+            if isinstance(p, pa.ChunkedArray)
+            else p
+        )
+        for p in parts
+    ]
     codes, uniques = pd.factorize(
-        np.concatenate(arrs) if arrs else np.asarray([], dtype=object),
+        np.concatenate([a for a in arrs if len(a)] or [np.empty(0, object)]),
+        sort=sort,
         use_na_sentinel=True,
     )
     codes = codes.astype(np.int64, copy=False)
@@ -361,31 +312,27 @@ def _factorize_codes(np, pd, parts):
 
 
 def _pagerank_driver_exact(
-    spark, edge_rows, iterations, damping_pct, unit, node_type
+    spark, tbl, iterations, damping_pct, unit, node_type
 ) -> DataFrame:
-    """pagerank_exact's integer recurrence on collected edges —
+    """pagerank_exact's integer recurrence on the (_s, _d) edge table —
     bit-identical to the distributed loop: same floor divisions on the
     same non-negative int64 values, per-destination sums in int64
     (np.add.at — bincount would go through float64 and break exactness
     past 2^53)."""
-    import numpy as np
-
     from pyspark.sql.types import LongType, StructField, StructType
 
-    from kubenetmon_spark.tables import local_df
-
-    nodes = sorted(
-        {v for edge in edge_rows for v in edge},
-        key=lambda v: (v is None, v),
-    )
-    idx = {v: i for i, v in enumerate(nodes)}
+    # sorted node ids; a NULL node is one more node, ordered last
+    codes, nodes = _factorize_codes([tbl["_s"], tbl["_d"]], sort=True)
+    null = len(nodes)
+    if (codes == null).any():
+        nodes.append(None)
     n = len(nodes)
-    s_idx = np.fromiter(
-        (idx[a] for a, _ in edge_rows), dtype=np.int64, count=len(edge_rows)
-    )
-    d_idx = np.fromiter(
-        (idx[b] for _, b in edge_rows), dtype=np.int64, count=len(edge_rows)
-    )
+    s_idx, d_idx = codes[: tbl.num_rows], codes[tbl.num_rows :]
+    # the distributed loop's joins miss on NULL: an edge from a NULL
+    # source passes no rank, and a NULL node receives none (it keeps
+    # the teleport share alone)
+    keep = s_idx != null
+    s_idx, d_idx = s_idx[keep], d_idx[keep]
     deg = np.zeros(n, dtype=np.int64)
     np.add.at(deg, s_idx, 1)
     base = (unit * (100 - damping_pct)) // (100 * n)
@@ -395,6 +342,7 @@ def _pagerank_driver_exact(
         contrib = pr[s_idx] // deg_s
         sums = np.zeros(n, dtype=np.int64)
         np.add.at(sums, d_idx, contrib)
+        sums[null:] = 0
         pr = base + (np.int64(damping_pct) * sums) // 100
     schema = StructType(
         [
@@ -402,9 +350,7 @@ def _pagerank_driver_exact(
             StructField("pr", LongType(), True),
         ]
     )
-    return local_df(
-        spark, [(v, int(pr[idx[v]])) for v in nodes], schema
-    )
+    return local_df(spark, list(zip(nodes, pr.tolist())), schema)
 
 
 def k_hop_reachability(
@@ -435,8 +381,9 @@ def k_hop_reachability(
     Per level: one equi-join frontier⋈edges (keyed on src — the classic
     Pregel superstep), a distinct, and an anti-join against the visited
     set; each level's result is ``localCheckpoint``-ed so the loop's
-    lineage stays flat. Driver sees only the per-level emptiness scalar
-    (bounded by k iterations); rows never collect. Min-hops is implicit:
+    lineage stays flat; the driver sees only the per-level emptiness
+    scalar. A graph under the ``driver_table`` ceiling moves to the
+    driver once and the whole BFS runs there. Min-hops is implicit:
     a node joins `visited` the FIRST level it appears, and the anti-join
     keeps later sightings out.
     """
@@ -455,129 +402,84 @@ def k_hop_reachability(
         e = e.distinct()
     e = e.localCheckpoint(eager=True)
     # Scale-adaptive algorithm choice (the pagerank_exact pattern): a
-    # graph at or below LOCAL_REACH_EDGE_LIMIT edges (plus a bounded
-    # seed set) runs the whole level-synchronous BFS on the driver —
-    # the distributed loop pays (join + distinct + anti-join +
-    # checkpoint + emptiness probe) of tiny-shuffle scheduling per
-    # level for set operations the driver finishes in a fraction of
-    # one such job. Row transfer is one Arrow batch (_arrow_cols), and
-    # BFS work is O(edges) total — each node's adjacency list is
-    # scanned at most once across all levels — which is why this
-    # operator's cap sits far above LOCAL_GRAPH_EDGE_LIMIT. The
-    # driver path reproduces the SQL semantics exactly, including the
-    # null quirks (a NULL edge src matches no frontier row; a NULL
-    # destination re-enters `visited` every level because the
-    # anti-join's null comparison never matches) — pinned by a forced
-    # differential test. The size probe is a limit+count over the
-    # checkpointed edges — one tiny job, NO row transfer — so an
-    # oversized graph pays ~no overhead and takes the distributed
-    # loop unchanged (rows are only collected once the graph is known
-    # small).
-    n_edges = e.limit(LOCAL_REACH_EDGE_LIMIT + 1).count()
-    if n_edges <= LOCAL_REACH_EDGE_LIMIT:
-        s_arr, d_arr = _arrow_cols(e, "_s", "_d")
-        seed_probe = (
-            seeds.select("node")
-            .limit(LOCAL_REACH_EDGE_LIMIT + 1)
-            .collect()
-        )
-        if len(seed_probe) <= LOCAL_REACH_EDGE_LIMIT:
-            from kubenetmon_spark.tables import local_df
-
-            # result schema = the distributed loop's union schema
-            # (derived from the SAME plan shape, never executed)
-            schema = (
-                seeds.select(
-                    F.col("node"), F.lit(0).alias("hops")
-                )
-                .unionByName(
-                    e.select(
-                        F.col("_d").alias("node"),
-                        F.lit(0).alias("hops"),
-                    )
-                )
-                .schema
+    # graph and seed set under the driver_table ceiling run the whole
+    # level-synchronous BFS on the driver — the distributed loop pays
+    # (join + distinct + anti-join + checkpoint + emptiness probe) of
+    # tiny-shuffle scheduling per level for set operations the driver
+    # finishes in a fraction of one such job. BFS work is O(edges)
+    # total: each node's adjacency list is scanned at most once across
+    # all levels. The driver path reproduces the SQL semantics exactly,
+    # including the null quirks (a NULL edge src matches no frontier
+    # row; a NULL destination re-enters `visited` every level because
+    # the anti-join's null comparison never matches) — pinned by a
+    # forced differential test.
+    tbl = driver_table(e, 2)
+    seed_tbl = None if tbl is None else driver_table(frontier, 1)
+    if seed_tbl is not None:
+        # result schema = the distributed loop's union schema (derived
+        # from the SAME plan shape, never executed)
+        schema = (
+            visited.unionByName(
+                e.select(F.col("_d").alias("node"), F.lit(0).alias("hops"))
             )
-            import numpy as np
-            import pandas as pd
-
-            # Seed fold first (probe order, deduped — mirrors the
-            # distinct on the seed frame): Python objects from the
-            # tiny seed collect.
-            out: list = []
-            seed_seen: set = set()
-            seed_nodes: list = []
-            has_null_seed = False
-            for r in seed_probe:
-                n = r["node"]
-                if n is None:
-                    if not has_null_seed:
-                        has_null_seed = True
-                        out.append((None, 0))
-                elif n not in seed_seen:
-                    seed_seen.add(n)
-                    seed_nodes.append(n)
-                    out.append((n, 0))
-            # Factorize node ids (edge endpoints + seeds) to dense
-            # int64 codes; NULL gets the one-past-the-end code. CSR
-            # adjacency (stable argsort on src code + searchsorted
-            # row starts) makes each level a handful of numpy slices
-            # — BFS work is O(edges) total, in C.
-            m = len(s_arr)
-            codes, uniq_objs = _factorize_codes(
-                np, pd, [s_arr, d_arr, seed_nodes]
-            )
-            n_uniq = len(uniq_objs)
-            null_code = n_uniq
-            s_idx = codes[:m]
-            d_idx = codes[m : 2 * m]
-            seed_idx = codes[2 * m :]
-            order = np.argsort(s_idx, kind="stable")
-            ss = s_idx[order]
-            dd = d_idx[order]
-            # starts has an entry for every code INCLUDING null_code's
-            # bracket: NULL-src edges sort last and are never visited
-            # (a NULL src matches no frontier row).
-            starts = np.searchsorted(ss, np.arange(n_uniq + 2))
-            seen = np.zeros(n_uniq + 1, dtype=bool)
-            seen[seed_idx] = True
-            frontier = seed_idx
-            empty = np.empty(0, dtype=np.int64)
-            for level in range(1, k + 1):
-                if frontier.size:
-                    cand = np.unique(
-                        np.concatenate(
-                            [
-                                dd[starts[f] : starts[f + 1]]
-                                for f in frontier
-                            ]
-                        )
-                    )
-                else:
-                    cand = empty
-                # null_code is the maximum code, so a NULL destination
-                # (if any) is the last candidate
-                saw_null_dst = bool(cand.size) and cand[-1] == null_code
-                if saw_null_dst:
-                    cand = cand[:-1]
-                fresh = cand[~seen[cand]]
-                if fresh.size == 0 and not saw_null_dst:
-                    break
-                seen[fresh] = True
-                # same deterministic emit order as the set-based
-                # formulation: sorted by (type, value)
-                for n in sorted(
-                    (uniq_objs[c] for c in fresh),
-                    key=lambda v: (str(type(v)), v),
-                ):
-                    out.append((n, level))
-                if saw_null_dst:
-                    # null never equals null in the anti-join: a NULL
-                    # destination re-enters visited at EVERY level one
-                    # of its sources is on the frontier
-                    out.append((None, level))
-                frontier = fresh
-            return local_df(edges.sparkSession, out, schema)
+        ).schema
+        # the seeds are already distinct (the checkpointed `visited`);
+        # a NULL seed is reached at level 0 but matches no edge
+        seed_list = seed_tbl["node"].to_pylist()
+        out: list = [(n, 0) for n in seed_list]
+        seed_nodes = [n for n in seed_list if n is not None]
+        # Factorize node ids (edge endpoints + seeds) to dense int64
+        # codes; NULL gets the one-past-the-end code. CSR adjacency
+        # (stable argsort on src code + searchsorted row starts) makes
+        # each level a handful of numpy slices — O(edges) total, in C.
+        m = tbl.num_rows
+        codes, uniq_objs = _factorize_codes([tbl["_s"], tbl["_d"], seed_nodes])
+        n_uniq = len(uniq_objs)
+        null_code = n_uniq
+        s_idx = codes[:m]
+        d_idx = codes[m : 2 * m]
+        seed_idx = codes[2 * m :]
+        order = np.argsort(s_idx, kind="stable")
+        ss = s_idx[order]
+        dd = d_idx[order]
+        # starts has an entry for every code INCLUDING null_code's
+        # bracket: NULL-src edges sort last and are never visited (a
+        # NULL src matches no frontier row).
+        starts = np.searchsorted(ss, np.arange(n_uniq + 2))
+        seen = np.zeros(n_uniq + 1, dtype=bool)
+        seen[seed_idx] = True
+        front = seed_idx
+        empty = np.empty(0, dtype=np.int64)
+        for level in range(1, k + 1):
+            if front.size:
+                cand = np.unique(
+                    np.concatenate([dd[starts[f] : starts[f + 1]] for f in front])
+                )
+            else:
+                cand = empty
+            # null_code is the maximum code, so a NULL destination (if
+            # any) is the last candidate
+            saw_null_dst = bool(cand.size) and cand[-1] == null_code
+            if saw_null_dst:
+                cand = cand[:-1]
+            fresh = cand[~seen[cand]]
+            if fresh.size == 0 and not saw_null_dst:
+                break
+            seen[fresh] = True
+            # same deterministic emit order as the set-based
+            # formulation: sorted by (type, value)
+            for n in sorted(
+                (uniq_objs[c] for c in fresh),
+                key=lambda v: (str(type(v)), v),
+            ):
+                out.append((n, level))
+            if saw_null_dst:
+                # null never equals null in the anti-join: a NULL
+                # destination re-enters visited at EVERY level one of
+                # its sources is on the frontier
+                out.append((None, level))
+            front = fresh
+        return local_df(edges.sparkSession, out, schema)
     for level in range(1, k + 1):
         nxt = (
             frontier.join(e, frontier["node"] == e["_s"])
@@ -624,7 +526,8 @@ def temporal_reachability(
     earliest arrival.
 
     Per round: one equi-join (keyed on src) + one min-aggregation;
-    lineage cut per round; nothing collects to the driver.
+    lineage cut per round. A graph under the ``driver_table`` ceiling
+    moves to the driver once and every round runs there.
 
     ``edges_are_distinct=True``: as in :func:`k_hop_reachability` —
     duplicate edges cannot change the min-arrival result, the dedup
@@ -641,139 +544,86 @@ def temporal_reachability(
     if not edges_are_distinct:
         e = e.distinct()
     e = e.localCheckpoint(eager=True)
-    # Driver solve under the reach edge limit (the pagerank_exact /
-    # k_hop_reachability pattern): `rounds` Bellman-Ford relaxations
-    # over one Arrow-collected edge batch; the distributed loop pays a
-    # join + min-agg + checkpoint of tiny-shuffle scheduling per
-    # round. The relaxation itself is vectorized int64 numpy (node ids
-    # factorized to codes; per-round min via np.minimum.at on the
-    # round-start snapshot), which is what lets this operator share
-    # k_hop's LOCAL_REACH_EDGE_LIMIT instead of the pure-Python-loop
-    # LOCAL_GRAPH_EDGE_LIMIT. SQL semantics reproduced exactly: a NULL
-    # src/ts edge relaxes nothing (filtered before the collect — the
-    # size probe still counts them), a NULL-arrival row enables
-    # nothing, NULL destinations form ONE group whose min folds like
-    # any other (GROUP BY treats nulls as equal), and MIN ignores
-    # nulls. Pinned by a forced differential test. Probe = limit+count
-    # (no row transfer; see k_hop_reachability).
-    n_edges = e.limit(LOCAL_REACH_EDGE_LIMIT + 1).count()
-    if n_edges <= LOCAL_REACH_EDGE_LIMIT:
-        seed_probe = (
-            seeds.select(
-                "node", F.col("arrival").cast("long").alias("arrival")
-            )
-            .limit(LOCAL_REACH_EDGE_LIMIT + 1)
-            .collect()
-        )
-        if len(seed_probe) <= LOCAL_REACH_EDGE_LIMIT:
-            from kubenetmon_spark.tables import local_df
-
-            schema = (
-                seeds.select(
-                    "node", F.col("arrival").cast("long").alias("arrival")
-                )
-                .unionByName(
-                    e.select(
-                        F.col("_d").alias("node"),
-                        F.col("_t").alias("arrival"),
-                    )
-                )
-                .groupBy("node")
-                .agg(F.min("arrival").alias("arrival"))
-                .schema
-            )
-            arr: dict = {}
-            for r in seed_probe:
-                n, a = r["node"], r["arrival"]
-                if n in arr:
-                    cur = arr[n]
-                    arr[n] = (
-                        a
-                        if cur is None
-                        else cur if a is None else min(cur, a)
-                    )
-                else:
-                    arr[n] = a
-            import numpy as np
-            import pandas as pd
-
-            # NULL-src / NULL-ts edges can never relax (join on
-            # equality; ts >= arrival is never true for NULL ts) —
-            # filter them engine-side so the Arrow batch is smaller
-            # and the ts column collects as exact non-null int64.
-            tbl = e.where(
-                F.col("_s").isNotNull() & F.col("_t").isNotNull()
-            ).toArrow()
-            s_arr = tbl.column("_s").to_pandas(integer_object_nulls=True)
-            d_arr = tbl.column("_d").to_pandas(integer_object_nulls=True)
-            tt = tbl.column("_t").to_numpy(zero_copy_only=False).astype(
-                np.int64, copy=False
-            )
-            # Factorize every node id (edge endpoints + seed nodes) to
-            # a dense code; NULL destinations/seeds form ONE real
-            # group (GROUP BY treats nulls as equal) and get their own
-            # slot past the uniques.
-            seed_keys = list(arr.keys())
-            m = len(s_arr)
-            codes, uniq_objs = _factorize_codes(
-                np, pd, [s_arr, d_arr, seed_keys]
-            )
-            n_uniq = len(uniq_objs)
-            null_code = n_uniq
-            n_nodes = n_uniq + 1
-            s_idx = codes[:m]
-            d_idx = codes[m : 2 * m]
-            seed_idx = codes[2 * m :]
-            # State per node code: known (appears in arr), isnull
-            # (known with NULL arrival), vals (arrival; garbage where
-            # not known/non-null — every read is masked).
-            _INF = np.iinfo(np.int64).max
-            vals = np.full(n_nodes, _INF, dtype=np.int64)
-            known = np.zeros(n_nodes, dtype=bool)
-            isnull = np.zeros(n_nodes, dtype=bool)
-            for i, kk in enumerate(seed_keys):
-                c = seed_idx[i]
-                known[c] = True
-                a = arr[kk]
-                if a is None:
-                    isnull[c] = True
-                else:
-                    vals[c] = a
-            for _ in range(rounds):
-                # All reads use the round-start state (the dict
-                # formulation's `snapshot`); np.where/copy semantics
-                # below never mutate the arrays the mask read.
-                mask = (
-                    known[s_idx]
-                    & ~isnull[s_idx]
-                    & (tt >= vals[s_idx])
-                )
-                dm = d_idx[mask]
-                tm = tt[mask]
-                # min-fold of this round's relaxations into the
-                # arrivals: unknown / NULL-arrival targets fold from
-                # +inf (dict: arr.get(d, t) / cur is None -> t).
-                base = np.where(known & ~isnull, vals, _INF)
-                np.minimum.at(base, dm, tm)
-                hits = np.zeros(n_nodes, dtype=bool)
-                hits[dm] = True
-                vals = np.where(hits | (known & ~isnull), base, vals)
-                isnull = isnull & ~hits
-                known = known | hits
-            items = []
-            for c in np.flatnonzero(known):
-                node = None if c == null_code else uniq_objs[c]
-                items.append(
-                    (node, None if isnull[c] else int(vals[c]))
-                )
-            items.sort(key=lambda kv: (kv[0] is None, str(kv[0])))
-            return local_df(edges.sparkSession, items, schema)
     arr = (
         seeds.select("node", F.col("arrival").cast("long").alias("arrival"))
         .groupBy("node")
         .agg(F.min("arrival").alias("arrival"))
         .localCheckpoint(eager=True)
     )
+    # Driver solve under the driver_table ceiling (the k_hop_reachability
+    # pattern): `rounds` Bellman-Ford relaxations over one Arrow edge
+    # table; the distributed loop pays a join + min-agg + checkpoint of
+    # tiny-shuffle scheduling per round. The relaxation is vectorized
+    # int64 numpy (node ids factorized to codes; per-round min via
+    # np.minimum.at on the round-start snapshot). SQL semantics
+    # reproduced exactly: a NULL src/ts edge relaxes nothing (filtered
+    # engine-side, before the probe — the ceiling counts only edges
+    # that can relax), a NULL-arrival row enables nothing, NULL
+    # destinations form ONE group whose min folds like any other
+    # (GROUP BY treats nulls as equal), and MIN ignores nulls. Pinned
+    # by a forced differential test.
+    tbl = driver_table(
+        e.where(F.col("_s").isNotNull() & F.col("_t").isNotNull()), 3
+    )
+    seed_tbl = None if tbl is None else driver_table(arr, 2)
+    if seed_tbl is not None:
+        # Factorize every node id (edge endpoints + seed nodes) to a
+        # dense code; NULL destinations/seeds form ONE real group and
+        # get their own slot past the uniques.
+        m = tbl.num_rows
+        codes, uniq_objs = _factorize_codes(
+            [tbl["_s"], tbl["_d"], seed_tbl["node"]]
+        )
+        null_code = len(uniq_objs)
+        n_nodes = null_code + 1
+        s_idx = codes[:m]
+        d_idx = codes[m : 2 * m]
+        seed_idx = codes[2 * m :]
+        tt = tbl["_t"].to_numpy()
+        # State per node code: known (has an arrival row), isnull
+        # (known with NULL arrival), vals (arrival; garbage where not
+        # known/non-null — every read is masked). Seed nodes are
+        # distinct: `arr` is already min-folded per node.
+        _INF = np.iinfo(np.int64).max
+        vals = np.full(n_nodes, _INF, dtype=np.int64)
+        known = np.zeros(n_nodes, dtype=bool)
+        isnull = np.zeros(n_nodes, dtype=bool)
+        known[seed_idx] = True
+        isnull[seed_idx] = seed_tbl["arrival"].is_null().to_numpy()
+        vals[seed_idx] = seed_tbl["arrival"].fill_null(_INF).to_numpy()
+        for _ in range(rounds):
+            # All reads use the round-start state; np.where/copy
+            # semantics below never mutate the arrays the mask read.
+            mask = known[s_idx] & ~isnull[s_idx] & (tt >= vals[s_idx])
+            dm = d_idx[mask]
+            tm = tt[mask]
+            # min-fold of this round's relaxations into the arrivals:
+            # unknown / NULL-arrival targets fold from +inf.
+            base = np.where(known & ~isnull, vals, _INF)
+            np.minimum.at(base, dm, tm)
+            hits = np.zeros(n_nodes, dtype=bool)
+            hits[dm] = True
+            vals = np.where(hits | (known & ~isnull), base, vals)
+            isnull = isnull & ~hits
+            known = known | hits
+        items = [
+            (
+                None if c == null_code else uniq_objs[c],
+                None if isnull[c] else int(vals[c]),
+            )
+            for c in np.flatnonzero(known)
+        ]
+        items.sort(key=lambda kv: (kv[0] is None, str(kv[0])))
+        # result schema = the distributed loop's (never executed)
+        schema = (
+            arr.unionByName(
+                e.select(F.col("_d").alias("node"), F.col("_t").alias("arrival"))
+            )
+            .groupBy("node")
+            .agg(F.min("arrival").alias("arrival"))
+            .schema
+        )
+        return local_df(edges.sparkSession, items, schema)
     for _ in range(rounds):
         step = (
             arr.join(e, (arr["node"] == e["_s"]) & (e["_t"] >= arr["arrival"]))

@@ -38,8 +38,9 @@ def local_df(spark: SparkSession, rows, schema) -> DataFrame:
     pandas: it turns an int64 column holding a NULL into float64.
 
     One partition = one task per scan. Driver-side lists are bounded by
-    construction (≤ ~100k rows everywhere this is used), so one
-    partition is the right layout at any scale."""
+    construction: dims, and the results of driver solves, whose inputs
+    :func:`driver_table` holds under ``DRIVER_SOLVE_CELLS``. One
+    partition is the right layout for either at any scale."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.sql.types import StructType, TimestampType, _parse_datatype_string
@@ -62,6 +63,28 @@ def local_df(spark: SparkSession, rows, schema) -> DataFrame:
     )
     return spark.createDataFrame(table, schema).coalesce(1)
 
+
+
+#: The one ceiling on what an operator may move to the driver to solve
+#: an iterative problem there: 2^22 cells, about 32 MiB of 8-byte
+#: values. Past it the operator runs its distributed loop.
+DRIVER_SOLVE_CELLS = 1 << 22
+
+
+def driver_table(df: DataFrame, row_cells: int):
+    """``df`` as one ``pyarrow.Table`` when it is small enough to solve
+    on the driver, else ``None`` — the inverse of :func:`local_df`.
+
+    ``row_cells`` is the caller's estimate of 8-byte values per row;
+    the frame may hold at most ``DRIVER_SOLVE_CELLS // row_cells`` rows.
+    The size probe is a ``limit(cap + 1).count()`` job, so an
+    oversized frame moves no rows; a small one moves once, as Arrow
+    (no pickled Rows). ``df`` runs twice when small (probe, transfer):
+    pass a checkpointed frame when its plan is expensive."""
+    cap = DRIVER_SOLVE_CELLS // row_cells
+    if df.limit(cap + 1).count() > cap:
+        return None
+    return df.toArrow()
 
 def fanout(df: DataFrame, parts: int | None = None) -> DataFrame:
     """Scale-adaptive parallelism FLOOR for compute-heavy map stages —

@@ -124,6 +124,35 @@ class TestLoadRoundBaseline:
         )
         assert load_round_baseline(tmp_path, 0.1) == ("", {})
 
+    def test_other_parallelism_refused(self, tmp_path):
+        """An 8-core run is not read against a 32-core round: the
+        loader falls past it (and past a round that recorded neither
+        field) to the newest baseline benched like this run."""
+        from bench import load_round_baseline
+
+        self._write(
+            tmp_path,
+            "BENCH_r07.json",
+            {"sf": 0.1, "default_parallelism": 8, "master": "local[8]",
+             "queries": {"a": 1.0}},
+        )
+        self._write(
+            tmp_path,
+            "BENCH_r08.json",
+            {"sf": 0.1, "default_parallelism": 32, "master": "local[32]",
+             "queries": {"b": 2.0}},
+        )
+        self._write(tmp_path, "BENCH_r09.json", {"sf": 0.1, "queries": {"c": 3.0}})
+        assert load_round_baseline(tmp_path, 0.1, 8, "local[8]") == (
+            "BENCH_r07.json",
+            {"a": 1.0},
+        )
+        assert load_round_baseline(tmp_path, 0.1, 32, "local[32]")[0] == (
+            "BENCH_r08.json"
+        )
+        assert load_round_baseline(tmp_path, 0.1, 8, "local[32]") == ("", {})
+        assert load_round_baseline(tmp_path, 0.1, 4, "local[4]") == ("", {})
+
     def test_missing_or_garbage(self, tmp_path):
         from bench import load_round_baseline
 

@@ -126,6 +126,7 @@ def test_bpe_train_driver_path_identical_to_distributed(spark):
     import random
 
     import kubenetmon_spark.operators.bpe as B
+    from kubenetmon_spark import tables
 
     rng = random.Random(31)
     vocab = ["low", "lower", "lowest", "newer", "wider", "new",
@@ -138,10 +139,10 @@ def test_bpe_train_driver_path_identical_to_distributed(spark):
     rows.append((999, "singleton"))
     df = spark.createDataFrame(rows, "doc_id long, text string")
     local = B.bpe_train(df, "text", num_merges=24)
-    saved = B.LOCAL_BPE_VOCAB_LIMIT
-    B.LOCAL_BPE_VOCAB_LIMIT = 0  # force the distributed loop
+    saved = tables.DRIVER_SOLVE_CELLS
+    tables.DRIVER_SOLVE_CELLS = 0  # force the distributed loop
     try:
         dist = B.bpe_train(df, "text", num_merges=24)
     finally:
-        B.LOCAL_BPE_VOCAB_LIMIT = saved
+        tables.DRIVER_SOLVE_CELLS = saved
     assert local == dist and len(local) > 0

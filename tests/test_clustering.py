@@ -201,6 +201,7 @@ def test_kmeans_fit_exact_driver_path_identical_to_distributed(spark):
     import random
 
     import kubenetmon_spark.operators.clustering as C
+    from kubenetmon_spark import tables
 
     rng = random.Random(5)
     rows = [
@@ -209,10 +210,10 @@ def test_kmeans_fit_exact_driver_path_identical_to_distributed(spark):
     rows[17] = (17, None)
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     local = C.kmeans_fit_exact(df, k=8, n_iter=5)
-    saved = C.LOCAL_KMEANS_VECTOR_LIMIT
-    C.LOCAL_KMEANS_VECTOR_LIMIT = 0  # force the distributed loop
+    saved = tables.DRIVER_SOLVE_CELLS
+    tables.DRIVER_SOLVE_CELLS = 0  # force the distributed loop
     try:
         dist = C.kmeans_fit_exact(df, k=8, n_iter=5)
     finally:
-        C.LOCAL_KMEANS_VECTOR_LIMIT = saved
+        tables.DRIVER_SOLVE_CELLS = saved
     assert np.array_equal(local, dist)

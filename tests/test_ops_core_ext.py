@@ -2156,7 +2156,7 @@ class TestLocalGraphPath:
         string-node, and chain shapes."""
         import random
 
-        import kubenetmon_spark.operators.graph as G
+        from kubenetmon_spark import tables
         from kubenetmon_spark.operators.graph import pagerank_exact
 
         rng = random.Random(11)
@@ -2181,8 +2181,8 @@ class TestLocalGraphPath:
                 (r.node, r.pr)
                 for r in pagerank_exact(df, "s", "d", iterations=7).collect()
             )
-            saved = G.LOCAL_GRAPH_EDGE_LIMIT
-            G.LOCAL_GRAPH_EDGE_LIMIT = 0  # force the distributed loop
+            saved = tables.DRIVER_SOLVE_CELLS
+            tables.DRIVER_SOLVE_CELLS = 0  # force the distributed loop
             try:
                 dist = sorted(
                     (r.node, r.pr)
@@ -2191,7 +2191,7 @@ class TestLocalGraphPath:
                     ).collect()
                 )
             finally:
-                G.LOCAL_GRAPH_EDGE_LIMIT = saved
+                tables.DRIVER_SOLVE_CELLS = saved
             assert local == dist, name
 
     def test_bfs_driver_paths_identical_to_distributed(self, spark):
@@ -2203,7 +2203,7 @@ class TestLocalGraphPath:
         and NULL arrivals relax nothing; NULL nodes group as one)."""
         import random
 
-        import kubenetmon_spark.operators.graph as G
+        from kubenetmon_spark import tables
         from kubenetmon_spark.operators.graph import (
             k_hop_reachability,
             temporal_reachability,
@@ -2235,8 +2235,8 @@ class TestLocalGraphPath:
                  k_hop_reachability(edf, "s", "d", sdf, 4).collect()),
                 key=lambda t: (t[0] is None, str(t[0]), t[1]),
             )
-            saved = G.LOCAL_REACH_EDGE_LIMIT
-            G.LOCAL_REACH_EDGE_LIMIT = 0
+            saved = tables.DRIVER_SOLVE_CELLS
+            tables.DRIVER_SOLVE_CELLS = 0
             try:
                 dist = sorted(
                     ((r["node"], r["hops"]) for r in
@@ -2244,7 +2244,7 @@ class TestLocalGraphPath:
                     key=lambda t: (t[0] is None, str(t[0]), t[1]),
                 )
             finally:
-                G.LOCAL_REACH_EDGE_LIMIT = saved
+                tables.DRIVER_SOLVE_CELLS = saved
             assert local == dist, name
 
         tcases = {
@@ -2283,8 +2283,8 @@ class TestLocalGraphPath:
                  temporal_reachability(edf, "s", "d", "ts", sdf, 4).collect()),
                 key=lambda t: (t[0] is None, str(t[0])),
             )
-            saved = G.LOCAL_REACH_EDGE_LIMIT
-            G.LOCAL_REACH_EDGE_LIMIT = 0
+            saved = tables.DRIVER_SOLVE_CELLS
+            tables.DRIVER_SOLVE_CELLS = 0
             try:
                 dist = sorted(
                     ((r["node"], r["arrival"]) for r in
@@ -2292,7 +2292,7 @@ class TestLocalGraphPath:
                     key=lambda t: (t[0] is None, str(t[0])),
                 )
             finally:
-                G.LOCAL_REACH_EDGE_LIMIT = saved
+                tables.DRIVER_SOLVE_CELLS = saved
             assert local == dist, name
 
     def test_connected_components_driver_path_identical(self, spark):
@@ -2303,7 +2303,7 @@ class TestLocalGraphPath:
 
         import pytest
 
-        import kubenetmon_spark.operators.graph as G
+        from kubenetmon_spark import tables
         from kubenetmon_spark.operators.graph import connected_components
 
         rng = random.Random(41)
@@ -2315,14 +2315,14 @@ class TestLocalGraphPath:
         for edges in cases:
             df = spark.createDataFrame(edges, "src long, dst long")
             local = sorted(map(tuple, connected_components(df).collect()))
-            saved = G.LOCAL_GRAPH_EDGE_LIMIT
-            G.LOCAL_GRAPH_EDGE_LIMIT = 0
+            saved = tables.DRIVER_SOLVE_CELLS
+            tables.DRIVER_SOLVE_CELLS = 0
             try:
                 dist = sorted(
                     map(tuple, connected_components(df).collect())
                 )
             finally:
-                G.LOCAL_GRAPH_EDGE_LIMIT = saved
+                tables.DRIVER_SOLVE_CELLS = saved
             assert local == dist
         # non-convergence raises identically (min label moves 1 hop per
         # round; a 12-chain cannot converge in 3 rounds either way)
@@ -2331,13 +2331,13 @@ class TestLocalGraphPath:
         )
         with pytest.raises(RuntimeError, match="did not converge"):
             connected_components(chain, max_iter=3)
-        saved = G.LOCAL_GRAPH_EDGE_LIMIT
-        G.LOCAL_GRAPH_EDGE_LIMIT = 0
+        saved = tables.DRIVER_SOLVE_CELLS
+        tables.DRIVER_SOLVE_CELLS = 0
         try:
             with pytest.raises(RuntimeError, match="did not converge"):
                 connected_components(chain, max_iter=3)
         finally:
-            G.LOCAL_GRAPH_EDGE_LIMIT = saved
+            tables.DRIVER_SOLVE_CELLS = saved
         # string nodes take the distributed loop (unchanged pre-r8
         # behavior: the convergence sum's decimal cast rejects
         # non-numeric ids under ANSI — the driver path must NOT widen
@@ -2347,6 +2347,80 @@ class TestLocalGraphPath:
         )
         with pytest.raises(Exception, match="CAST_INVALID_INPUT"):
             connected_components(sdf).collect()
+
+    def test_pagerank_driver_path_null_nodes(self, spark, monkeypatch):
+        """A NULL node keeps the teleport share alone on both paths:
+        the distributed joins miss on NULL, so an edge from a NULL
+        source passes no rank and a NULL destination receives none."""
+        from kubenetmon_spark import tables
+        from kubenetmon_spark.operators.graph import pagerank_exact
+
+        df = spark.createDataFrame(
+            [(1, None), (None, 2), (1, 2), (2, 3), (3, 1)], "s long, d long"
+        )
+
+        def ranks():
+            return sorted(
+                map(tuple, pagerank_exact(df, "s", "d", iterations=4).collect()),
+                key=str,
+            )
+
+        local = ranks()
+        monkeypatch.setattr(tables, "DRIVER_SOLVE_CELLS", 0)
+        assert local == ranks()
+        base = 1_000_000_000 * 15 // (100 * 4)
+        assert (None, base) in local
+
+    def test_driver_table_boundary_takes_each_side(self, spark, monkeypatch):
+        """driver_table moves a frame of exactly cap rows and refuses
+        one row more; connected_components and pagerank_exact give the
+        same output with their graph exactly at the cap (driver) and
+        one row over it (distributed)."""
+        import kubenetmon_spark.operators.graph as G
+        from kubenetmon_spark import tables
+
+        # the real ceiling: 4096 cells a row leaves room for 1024 rows
+        assert tables.DRIVER_SOLVE_CELLS // 4096 == 1024
+        tbl = tables.driver_table(spark.range(1024), 4096)
+        assert tbl is not None and tbl.num_rows == 1024
+        assert tables.driver_table(spark.range(1025), 4096) is None
+        # patched small: 7 cells at 2 a row is a cap of 3 rows
+        monkeypatch.setattr(tables, "DRIVER_SOLVE_CELLS", 7)
+        assert tables.driver_table(spark.range(3), 2).num_rows == 3
+        assert tables.driver_table(spark.range(4), 2) is None
+
+        probes = []
+
+        def spy(df, row_cells):
+            t = tables.driver_table(df, row_cells)
+            probes.append(None if t is None else t.num_rows)
+            return t
+
+        monkeypatch.setattr(G, "driver_table", spy)
+        edges = spark.createDataFrame(
+            [(1, 2), (2, 3), (3, 1), (4, 5), (5, 6), (7, 7), (8, 4)],
+            "src long, dst long",
+        )
+        ops = {
+            "cc": lambda: sorted(map(tuple, G.connected_components(edges).collect())),
+            "pr": lambda: sorted(
+                map(tuple, G.pagerank_exact(edges, iterations=5).collect())
+            ),
+        }
+        for name, op in ops.items():
+            monkeypatch.setattr(tables, "DRIVER_SOLVE_CELLS", 1 << 22)
+            probes.clear()
+            op()
+            rows = probes[0]  # the probed graph's row count
+            monkeypatch.setattr(tables, "DRIVER_SOLVE_CELLS", 2 * rows)
+            probes.clear()
+            at_cap = op()
+            assert probes == [rows], name
+            monkeypatch.setattr(tables, "DRIVER_SOLVE_CELLS", 2 * rows - 1)
+            probes.clear()
+            over = op()
+            assert probes == [None], name
+            assert at_cap == over and at_cap, name
 
 
 class TestJvmCurationPass:
