@@ -92,14 +92,6 @@ def load_round_baseline(root, sf, default_parallelism=None, master=None):
     # newest-first, falling PAST rounds benched at another scale factor
     # or parallelism (one unlike round must not silently disable the
     # check against the latest like baseline)
-    like = {
-        k: v
-        for k, v in (
-            ("default_parallelism", default_parallelism),
-            ("master", master),
-        )
-        if v is not None
-    }
     for _n, prev_path in reversed(cands):
         try:
             prev_doc = json.loads(prev_path.read_text())
@@ -112,7 +104,8 @@ def load_round_baseline(root, sf, default_parallelism=None, master=None):
         if (
             prev_doc.get("sf") == sf
             and isinstance(prev_doc.get("queries"), dict)
-            and all(prev_doc.get(k) == v for k, v in like.items())
+            and default_parallelism in (None, prev_doc.get("default_parallelism"))
+            and master in (None, prev_doc.get("master"))
         ):
             full = _committed_full_map(root, prev_path.name, sf)
             return prev_path.name, {**full, **prev_doc["queries"]}
