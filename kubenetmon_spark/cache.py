@@ -68,20 +68,6 @@ def _plan_string(df: DataFrame) -> str:
     return df._jdf.queryExecution().optimizedPlan().toString()
 
 
-def cache_key(df: DataFrame) -> str:
-    """Plan-hash x input-signature key (hex). Raises
-    NondeterministicQueryError for volatile plans."""
-    plan = _plan_string(df)
-    low = plan.lower()
-    for marker in _NONDETERMINISTIC_MARKERS:
-        if marker in low:
-            raise NondeterministicQueryError(
-                f"plan contains volatile expression {marker!r}; pass "
-                "allow_nondeterministic=True to cache it anyway"
-            )
-    return _key_of(df, plan)
-
-
 def _key_of(df: DataFrame, plan: str) -> str:
     h = hashlib.md5(plan.encode())
     for f in sorted(df.inputFiles()):

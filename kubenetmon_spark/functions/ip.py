@@ -185,11 +185,6 @@ def ipv6_groups_sql(ip: str) -> str:
     )
 
 
-def ipv6_groups(col: Column | str) -> Column:
-    """Column form of :func:`ipv6_groups_sql`."""
-    return F.expr(ipv6_groups_sql(_sql_arg(col)))
-
-
 def ipv6_pair_sql(groups: str) -> tuple[str, str]:
     """Validated group array (:func:`ipv6_groups_sql`, ideally staged
     as a column) -> signed int64 ``(hi, lo)`` as two SQL texts.

@@ -1,6 +1,6 @@
 """URL decomposition helpers — the ClickHouse URL-function family
-(``domain``, ``topLevelDomain``, ``firstSignificantSubdomain``,
-``path``, ``queryString``, ``protocol``, ``cutQueryString``) as pure
+(``domain``, ``topLevelDomain``, ``path``, ``queryString``,
+``protocol``, ``cutQueryString``, ``extractURLParameter``) as pure
 built-in expressions.
 
 The reference's engine class (ClickHouse) ships these as first-class
@@ -44,13 +44,6 @@ def top_level_domain(url: Column | str) -> Column:
     """Last dot-separated host label — '' when the host has no dot
     (ClickHouse ``topLevelDomain``)."""
     return F.regexp_extract(domain(_c(url)), r"\.([^.]+)$", 1)
-
-
-def first_significant_subdomain(url: Column | str) -> Column:
-    """The label left of the TLD: for a.b.example.com -> 'example'
-    (ClickHouse ``firstSignificantSubdomain``, without its special
-    com.tr-style two-level public-suffix table — documented subset)."""
-    return F.regexp_extract(domain(_c(url)), r"([^.]+)\.[^.]+$", 1)
 
 
 def url_path(url: Column | str) -> Column:

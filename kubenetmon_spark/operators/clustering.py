@@ -72,7 +72,7 @@ def kmeans_fit(
     Stops early when the max centroid shift (L2) drops below ``tol``.
     Empty clusters keep their previous centroid (deterministic, no
     respawn randomness). NULL embeddings are dropped before the fit
-    (one degenerate crawl row must not kill the job — the PQ/sign-LSH
+    (one degenerate crawl row must not kill the job — the sign-LSH
     convention).
     """
     vectors = vectors.filter(F.col(vec_col).isNotNull())
@@ -153,7 +153,7 @@ def kmeans_assign(
             if not len(b):
                 continue
             # NULL embeddings keep their row with NULL cluster/sq_dist
-            # (pq_encode convention) instead of crashing the reshape
+            # instead of crashing the reshape
             ok = b[vec_col].notna().to_numpy()
             b = b.copy()
             b["cluster"] = pd.array([None] * len(b), dtype="Int32")
@@ -178,12 +178,6 @@ def kmeans_assign(
         ]
     )
     return vectors.mapInPandas(assign, schema=schema)
-
-
-def kmeans_inertia(assigned: DataFrame) -> float:
-    """Sum of squared distances of the ``kmeans_assign`` output —
-    the quantity Lloyd's iterations monotonically decrease."""
-    return assigned.agg(F.sum("sq_dist")).collect()[0][0]
 
 
 # --- exact-integer k-means ---------------------------------------------
@@ -216,6 +210,16 @@ def _trunc_div(s: np.ndarray, c) -> np.ndarray:
     return np.sign(s) * (np.abs(s) // np.int64(c))
 
 
+def _nearest_exact(q: np.ndarray, c: np.ndarray) -> np.ndarray:
+    """Nearest int64 centroid per int64 row, ties -> lowest cluster.
+
+    ``|q - c|^2 = |q|^2 - 2 q.c + |c|^2`` and ``|q|^2`` is the same for
+    every centroid, so the argmin of ``|c|^2 - 2 q.c`` is the argmin of
+    the distance: exact int64 arithmetic on an n x k block, never the
+    n x k x dim difference block."""
+    return np.argmin((c * c).sum(axis=1) - 2 * (q @ c.T), axis=1)
+
+
 def kmeans_fit_exact(
     vectors: DataFrame,
     k: int = 8,
@@ -236,9 +240,9 @@ def kmeans_fit_exact(
     convention).
 
     Overflow margins (int64): per-dim |q| <= scale * max|x|; batch
-    partial sums add len(batch) of them and distances square one
-    difference times dim — all far inside 2^63 for embedding-range
-    inputs at the default scale.
+    partial sums add len(batch) of them, and the assignment compares
+    |c|^2 - 2 q.c, dim products of two such coordinates — all far inside
+    2^63 for embedding-range inputs at the default scale.
     """
     vectors = vectors.filter(F.col(vec_col).isNotNull())
     cents = _quantize(_init_centroids(vectors, k, id_col, vec_col), scale)
@@ -262,8 +266,7 @@ def kmeans_fit_exact(
         flat = col.flatten().to_numpy(zero_copy_only=False)
         q = _quantize(flat.reshape(len(col), dim), scale)
         for _ in range(n_iter):
-            d = ((q[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
-            assign = np.argmin(d, axis=1)  # ties -> lowest cluster
+            assign = _nearest_exact(q, cents)
             new_cents = cents.copy()
             for cl in np.unique(assign):
                 mask = assign == cl
@@ -283,8 +286,7 @@ def kmeans_fit_exact(
                 if not len(b):
                     continue
                 q = _quantize(np.stack(b[vec_col].to_numpy()), scale)
-                d = ((q[:, None, :] - c[None, :, :]) ** 2).sum(axis=2)
-                assign = np.argmin(d, axis=1)  # ties -> lowest cluster
+                assign = _nearest_exact(q, c)
                 rows = []
                 for cl in np.unique(assign):
                     mask = assign == cl
@@ -340,8 +342,7 @@ def kmeans_assign_exact(
             b["cluster"] = pd.array([None] * len(b), dtype="Int32")
             if ok.any():
                 q = _quantize(np.stack(b[vec_col][ok].to_numpy()), scale)
-                d = ((q[:, None, :] - c[None, :, :]) ** 2).sum(axis=2)
-                b.loc[ok, "cluster"] = np.argmin(d, axis=1).astype(np.int32)
+                b.loc[ok, "cluster"] = _nearest_exact(q, c).astype(np.int32)
             yield b
 
     schema = StructType(

@@ -192,37 +192,3 @@ def embedding_contamination_pairs(
         pairs.select(*scored_cols)
         .filter(F.col("cosine_bp") >= F.lit(int(threshold_bp)))
     )
-
-
-def decontaminate_by_embedding(
-    corpus: DataFrame,
-    corpus_vecs: DataFrame,
-    benchmark_vecs: DataFrame,
-    threshold_bp: int = 9500,
-    corpus_id_col: str = "doc_id",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    method: str = "exact",
-) -> DataFrame:
-    """Corpus minus every document whose embedding sits within
-    ``threshold_bp`` cosine of ANY benchmark vector (corpus_vecs maps
-    ``id_col`` onto corpus ``corpus_id_col``). Flagged ids are tiny
-    and broadcast into a left anti-join — same shape as
-    :func:`decontaminate`."""
-    flagged = (
-        embedding_contamination_pairs(
-            corpus_vecs,
-            benchmark_vecs,
-            threshold_bp,
-            id_col,
-            vec_col,
-            method=method,
-        )
-        .select(F.col("corpus_id").alias("_flagged_id"))
-        .distinct()
-    )
-    return corpus.join(
-        F.broadcast(flagged),
-        corpus[corpus_id_col] == F.col("_flagged_id"),
-        "left_anti",
-    )

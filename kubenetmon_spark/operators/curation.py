@@ -242,49 +242,6 @@ def cap_per_group(
     )
 
 
-def shuffle_epoch(
-    df: DataFrame,
-    id_col: str,
-    epoch: int,
-    n_shards: int | None = None,
-) -> DataFrame:
-    """Deterministic global shuffle for one training epoch — every
-    epoch sees the whole dataset in a different but REPRODUCIBLE
-    GLOBAL ORDER: the key ``md5(id | epoch)`` is a pure function of
-    the row, so the concatenation of shards read in shard order is the
-    identical sequence on every re-run.
-
-    Determinism scope, stated precisely: the global ORDER is exact;
-    SHARD BOUNDARIES are not pinned across environments, because
-    ``repartitionByRange`` samples range bounds from the input's
-    physical partitioning — re-running after a crash on a different
-    partition layout (AQE coalesce, recompacted files, another cluster
-    size) can move boundary-adjacent rows into neighboring shards.
-    Loaders that require byte-identical PER-SHARD files across
-    environments should shard explicitly by key prefix
-    (``pmod(xxhash64(shuffle_key), n_shards)`` + sort within shard)
-    and trade away the global cross-shard order.
-
-    Scale shape: ``repartitionByRange`` on the key then
-    ``sortWithinPartitions`` — a distributed range sort (sampled range
-    exchange + local sorts), NEVER a single-partition global orderBy;
-    with ``n_shards`` the output is that many ordered shards (files
-    map 1:1 to shards on write).
-
-    Appends ``shuffle_key`` (kept so a reader can verify the order).
-    """
-    key = F.md5(
-        F.concat_ws("|", F.col(id_col).cast("string"), F.lit(str(epoch)))
-    )
-    out = df.withColumn("shuffle_key", key)
-    parts = (
-        out.repartitionByRange(n_shards, "shuffle_key")
-        if n_shards
-        else out.repartitionByRange("shuffle_key")
-    )
-    return parts.sortWithinPartitions("shuffle_key")
-
-
 def mixture_epochs(
     df: DataFrame,
     targets: dict[str, int],

@@ -23,7 +23,7 @@ data-selection recipe; on this engine it is three DataFrame stages:
 Float note: log-weights are doubles, so cross-engine value-hash parity
 is not guaranteed at the margins — the correctness evidence is the
 NumPy reference comparison in tests/test_dsir.py (same pattern as BM25
-and the PQ/IVF family). ``dsir_gumbel_sample_exact`` below is the
+and the IVF family). ``dsir_gumbel_sample_exact`` below is the
 engine-portable twin: the same sampling recipe with every log computed
 as the fixed-point integer ln of functions/fxlog.py, hash-exact on any
 engine (it carries q113's full DuckDB oracle).

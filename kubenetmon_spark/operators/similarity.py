@@ -1202,54 +1202,6 @@ def covariance_matrix_exact(
     )
 
 
-def pca_project(
-    df: DataFrame,
-    cov_rows,
-    vec_col: str = "embedding",
-    dims: int = 64,
-    k: int = 8,
-    scale: int = 1000,
-) -> DataFrame:
-    """Project embeddings onto the top-k principal components.
-    ``cov_rows`` is the collected output of ``covariance_matrix_exact``
-    (a 2080-row driver-side list — the ONLY driver-side data, fixed by
-    dimension, never by corpus size). Eigendecomposition runs in numpy
-    on the d x d matrix; component signs are canonicalized (largest-
-    magnitude coordinate positive) so the projection is deterministic.
-
-    Returns the input plus ``pca`` (array<double>, length k). The
-    projection itself is a per-row transform over the broadcast
-    component matrix — no shuffle, no UDF.
-    """
-    import numpy as np
-
-    n = cov_rows[0]["n"]
-    cov = np.zeros((dims, dims))
-    for r in cov_rows:
-        v = r["cov_num"] / (float(n) * n * scale * scale)
-        cov[r["i"], r["j"]] = v
-        cov[r["j"], r["i"]] = v
-    vals, vecs = np.linalg.eigh(cov)
-    order = np.argsort(vals)[::-1][:k]
-    comps = vecs[:, order]
-    for c in range(comps.shape[1]):
-        if comps[np.argmax(np.abs(comps[:, c])), c] < 0:
-            comps[:, c] = -comps[:, c]
-    proj_cols = []
-    for c in range(comps.shape[1]):
-        expr = F.aggregate(
-            F.zip_with(
-                F.col(vec_col),
-                F.array(*[F.lit(float(comps[d, c])) for d in range(dims)]),
-                lambda x, w: x.cast("double") * w,
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        proj_cols.append(expr)
-    return df.withColumn("pca", F.array(*proj_cols))
-
-
 def hard_negative_mining(
     vectors: DataFrame,
     queries: DataFrame,

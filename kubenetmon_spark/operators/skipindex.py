@@ -104,7 +104,8 @@ def _rel_file_col(table_dir: str) -> Column:
 
     input_file_name() returns a URL-encoded URI; decode it (protecting
     literal '+', which form-decoding would turn into a space) before
-    stripping the escaped base path — the export.py manifest idiom.
+    stripping the base path, ``re.escape``d (Java's regex engine accepts
+    a backslash before any punctuation).
     """
     decoded = F.url_decode(F.regexp_replace(F.input_file_name(), "[+]", "%2B"))
     return F.regexp_replace(
@@ -682,89 +683,4 @@ def update_skip_index(
             )
         for d in persisted:
             d.unpersist()
-    return out
-
-
-def explain_prune(
-    spark: SparkSession,
-    table_dir: str,
-    index_dir: str,
-    conditions: list[tuple[str, str, object]],
-) -> list[dict]:
-    """ClickHouse ``EXPLAIN indexes = 1`` analogue: per applicable index,
-    how many of the table's files survive its pruning for each
-    condition — the "which index is doing the work" answer an operator
-    needs before trusting a slow query to an index.
-
-    Returns one dict per (condition, index) pair:
-    ``{condition, index, kind, n_files, n_candidates, decisive}`` where
-    ``decisive`` marks indexes that actually excluded something, plus a
-    final ``{"condition": "<combined>"}`` row with the intersected
-    candidate count ``read_indexed`` would scan. Read-only: collects
-    file-name sets exactly like the read path, scans no data.
-    """
-    specs = list_indexes(index_dir)
-    by_col: dict[str, list[str]] = {}
-    for name, s in specs.items():
-        by_col.setdefault(s["column"], []).append(name)
-    actual = {
-        _rel_path(u, table_dir) for u in spark.read.parquet(table_dir).inputFiles()
-    }
-    out: list[dict] = []
-    keep: set[str] | None = None
-    known: set[str] = set()
-    for column, op, value in conditions:
-        cond_label = f"{column} {op} {value!r}"
-        for name in sorted(by_col.get(column, ())):
-            cand = candidate_files(spark, index_dir, name, op, value)
-            if cand is None:
-                out.append(
-                    {
-                        "condition": cond_label,
-                        "index": name,
-                        "kind": specs[name]["kind"],
-                        "n_files": len(actual),
-                        "n_candidates": None,
-                        "decisive": False,
-                    }
-                )
-                continue
-            idx_files = {
-                r.file
-                for r in spark.read.parquet(_join(index_dir, name))
-                .select("file")
-                .collect()
-            }
-            known |= idx_files
-            keep = cand if keep is None else (keep & cand)
-            # mirror read_indexed's fail-open: files this index has never
-            # seen (appended after build) are always kept, so they can
-            # never make an index look decisive
-            n_kept = len(cand & actual) + len(actual - idx_files)
-            out.append(
-                {
-                    "condition": cond_label,
-                    "index": name,
-                    "kind": specs[name]["kind"],
-                    "n_files": len(actual),
-                    "n_candidates": n_kept,
-                    "decisive": n_kept < len(actual),
-                }
-            )
-    if keep is None:
-        combined = len(actual)
-    else:
-        combined = len(
-            [f for f in actual if f in keep or f not in known]
-        )
-    out.append(
-        {
-            "condition": "<combined>",
-            "index": None,
-            "kind": None,
-            "n_files": len(actual),
-            "n_candidates": combined,
-            "decisive": combined < len(actual),
-        }
-    )
     return out

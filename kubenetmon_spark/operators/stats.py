@@ -24,14 +24,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def _sums(x: Column):
-    return (
-        F.count(F.lit(1)).alias("n"),
-        F.sum(x).alias("sx"),
-        F.sum(x * x).alias("sxx"),
-    )
-
-
 def welch_t_test(
     df: DataFrame,
     group_cols: list[str],

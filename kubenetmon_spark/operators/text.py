@@ -259,15 +259,6 @@ def _winnow_arrow(df: DataFrame, text_col: str, k: int, w: int) -> DataFrame:
     return df.mapInPandas(gen, out_schema)
 
 
-def with_fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Deterministic document fingerprint: md5 of the sorted distinct token
-    set (bag-of-words identity, word-order insensitive)."""
-    toks = _tokens(F.col(text_col))
-    return df.withColumn(
-        "fingerprint", F.md5(F.concat_ws(" ", F.array_sort(F.array_distinct(toks))))
-    )
-
-
 def with_simhash16(df: DataFrame, id_col: str, text_col: str = "text") -> DataFrame:
     """16-bit SimHash over distinct tokens, engine-exact.
 

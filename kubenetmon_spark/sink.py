@@ -518,37 +518,6 @@ def apply_retention(path: str, keep_days: int = 90, today: date | None = None) -
     return dropped
 
 
-def write_flows_bucketed(
-    df: DataFrame,
-    table_name: str,
-    buckets: int = 32,
-    bucket_cols: tuple[str, ...] = ("localPod",),
-) -> None:
-    """Materialize the fact table BUCKETED on a hot aggregation/join key.
-
-    Bucketing pre-shuffles the data once at write time: a catalog table
-    hash-clustered into ``buckets`` files per partition on
-    ``bucket_cols``. Every later groupBy/join on those columns then
-    reads an already-hash-partitioned scan and skips its Exchange
-    entirely — the Spark analogue of serving repeated per-workload
-    queries from ClickHouse's ORDER BY key locality (reference
-    test/network_flows_0.sql:41-42). Worth it when a key is aggregated
-    many times per day at 100 TB (e.g. top-talkers by localPod every
-    dashboard refresh); pointless for one-shot queries.
-
-    Requires a catalog (``saveAsTable``); plain ``.parquet(path)``
-    cannot carry bucket metadata.
-    """
-    key = [c for c in PRIMARY_KEY_PREFIX if c in df.columns]
-    (
-        df.write.mode("overwrite")
-        .format("parquet")
-        .bucketBy(buckets, *bucket_cols)
-        .sortBy(*key)
-        .saveAsTable(table_name)
-    )
-
-
 def table_stats(path: str) -> list[dict]:
     """Per-partition storage statistics — the ClickHouse ``system.parts``
     observability analogue (file count, compressed bytes, row count,

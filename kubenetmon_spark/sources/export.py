@@ -85,82 +85,3 @@ def export_orc(
 def read_orc(spark, path: str) -> DataFrame:
     """Read an ORC export (schema carried by the file, like parquet)."""
     return spark.read.orc(path)
-
-
-def dataset_manifest(
-    spark,
-    path: str,
-    id_col: str,
-    fmt: str = "parquet",
-) -> DataFrame:
-    """Shard-level manifest of an exported dataset: one row per file
-    with ``(file, n_rows, id_checksum)`` — the delivery contract a
-    training-data consumer verifies before a run (did every shard
-    arrive, is each one byte-complete) without re-reading values.
-
-    ``id_checksum`` is the XOR of ``xxhash64(id)`` over the file's
-    rows — ORDER-INDEPENDENT, so any re-read (different partitioning,
-    different task order) of intact data reproduces it, while one
-    missing/duplicated/corrupted row flips it. XOR (via bit_xor agg)
-    also makes the whole-dataset checksum the XOR of the shard
-    checksums — verifiable hierarchically.
-
-    One scan; grouping key is ``input_file_name()`` so the agg is
-    file-parallel. Paths are emitted root-relative for replica
-    portability (the sample_files convention).
-    """
-    import re
-
-    from pyspark.sql import functions as F
-
-    df = spark.read.format(fmt).load(path)
-    # input_file_name() returns a URL-ENCODED file URI (space -> %20), so
-    # the raw user path can never be string-matched directly. Decode the
-    # URI first — protecting literal '+' (legal in URI paths, but
-    # url_decode's form-decoding would turn it into a space) — then strip
-    # the re.escape()d literal path. re.escape only backslash-escapes
-    # non-alphanumerics, which Java's regex engine accepts for any
-    # punctuation, so metacharacter paths ('+', '(', ...) are safe.
-    decoded = F.url_decode(
-        F.regexp_replace(F.input_file_name(), "[+]", "%2B")
-    )
-    rel = F.regexp_replace(
-        decoded, ".*" + re.escape(path.rstrip("/") + "/"), ""
-    )
-    return (
-        df.select(
-            rel.alias("file"),
-            F.xxhash64(F.col(id_col)).alias("_h"),
-        )
-        .groupBy("file")
-        .agg(
-            F.count("*").alias("n_rows"),
-            F.expr("bit_xor(_h)").alias("id_checksum"),
-        )
-        .orderBy("file")
-    )
-
-
-def verify_manifest(
-    spark, path: str, id_col: str, manifest: DataFrame, fmt: str = "parquet"
-) -> DataFrame:
-    """Re-derive the manifest and diff it against a stored one:
-    returns the disagreeing rows (missing files, row-count drift,
-    checksum flips) — empty means the dataset is intact."""
-    from pyspark.sql import functions as F
-
-    fresh = dataset_manifest(spark, path, id_col, fmt)
-    m = manifest.select(
-        F.col("file"),
-        F.col("n_rows").alias("m_rows"),
-        F.col("id_checksum").alias("m_sum"),
-    )
-    return (
-        fresh.join(m, "file", "full_outer")
-        .filter(
-            F.col("n_rows").isNull()
-            | F.col("m_rows").isNull()
-            | (F.col("n_rows") != F.col("m_rows"))
-            | (F.col("id_checksum") != F.col("m_sum"))
-        )
-    )

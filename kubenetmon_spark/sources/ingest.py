@@ -88,12 +88,3 @@ def read_csv(
         .csv(path)
     )
     return _split(df)
-
-
-def dead_letter_stats(bad: DataFrame) -> DataFrame:
-    """Aggregate dead-letter volume — the observability counter the
-    reference exposes as expected-error metrics (server.go:100-113)."""
-    return bad.agg(
-        F.count(F.lit(1)).alias("n_dead"),
-        F.sum(F.length("raw")).alias("bytes_dead"),
-    )

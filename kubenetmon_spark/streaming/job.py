@@ -424,46 +424,3 @@ def start_windowed_flow_stream(
         .option("path", table_path)
     )
     return _apply_trigger(writer, trigger).start()
-
-
-def to_kafka_records(
-    flows: DataFrame,
-    key_cols: tuple[str, ...] = ("localPod", "remotePod", "direction"),
-) -> DataFrame:
-    """Aggregated flow rows -> Kafka wire shape (``key``/``value``
-    string columns, ready for ``writeStream.format("kafka")``) — the
-    outbound counterpart of ``parse_kafka_observations``. The key is
-    the canonical JSON of the routing columns so a partitioner keeps
-    each (pod pair, direction) on one Kafka partition and downstream
-    consumers see per-key ordered updates; the value is the full row
-    as JSON with map columns canonicalized (sorted-entry JSON, the
-    flags_key convention) so payloads are byte-stable.
-    """
-    cols = flows.columns
-    key = F.to_json(F.struct(*[F.col(c) for c in key_cols]))
-    value = F.to_json(F.struct(*[F.col(c) for c in cols]))
-    return flows.select(key.alias("key"), value.alias("value"))
-
-
-def write_flows_kafka(
-    flows: DataFrame,
-    bootstrap_servers: str,
-    topic: str,
-    checkpoint_dir: str,
-    trigger: dict[str, Any] | None = None,
-) -> StreamingQuery:
-    """Streaming flow rows -> a Kafka topic. AT-LEAST-ONCE: the Kafka
-    sink replays in-flight records on recovery (Kafka producers cannot
-    participate in Spark's checkpoint transaction), so downstream
-    consumers must dedup on the record key — which ``to_kafka_records``
-    makes byte-stable for exactly that purpose. Requires the
-    spark-sql-kafka package on the classpath; record shaping is
-    ``to_kafka_records`` and is unit-tested without a broker."""
-    writer = (
-        to_kafka_records(flows)
-        .writeStream.format("kafka")
-        .option("kafka.bootstrap.servers", bootstrap_servers)
-        .option("topic", topic)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    return _apply_trigger(writer, trigger).start()

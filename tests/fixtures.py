@@ -9,6 +9,13 @@ from pyspark.sql import SparkSession
 
 from kubenetmon_spark.config import RuntimeConfig
 from kubenetmon_spark.schema import NODES_SCHEMA, OBSERVATION_SCHEMA, PODS_SCHEMA
+from kubenetmon_spark.sources.feeds import (
+    AWS_FEED_SCHEMA,
+    AZURE_FEED_SCHEMA,
+    GCP_FEED_SCHEMA,
+    GOOGLE_FEED_SCHEMA,
+    build_prefixes_from_feeds,
+)
 
 CFG = RuntimeConfig(environment="development", cloud="aws", region="us-west-2", cluster="cluster")
 
@@ -39,25 +46,34 @@ def pods_df(spark: SparkSession):
     return spark.createDataFrame(rows, PODS_SCHEMA)
 
 
-def raw_prefixes_df(spark: SparkSession):
-    """Raw feed rows incl. the priority-dedup cases
-    (reference pkg/labeler/public_ranges_test.go:244-273)."""
-    rows = [
-        # prefix, cloud, service, region
-        ("1.1.0.0/16", "aws", "amazon", "us-west-2"),
-        ("1.1.1.0/24", "aws", "s3", "us-east-1"),      # nested: LPM must pick /24
-        ("2.2.2.0/24", "aws", "cloudfront", "global"),  # anycast
-        ("3.3.3.0/24", "gcp", "googleservice", "us-central1"),
-        ("4.4.4.0/24", "aws", "weird", ""),             # empty-region error case
+def prefixes_df(spark: SparkSession):
+    """The cloud prefix dimension, built by the engine's feed fold
+    (``build_prefixes_from_feeds``) from feed-shaped rows, incl. the
+    priority-dedup cases (reference pkg/labeler/public_ranges_test.go:244-273)."""
+    aws = [
+        # ip_prefix, region, service, network_border_group
+        ("1.1.0.0/16", "us-west-2", "AMAZON", None),
+        ("1.1.1.0/24", "us-east-1", "S3", None),       # nested: LPM must pick /24
+        ("2.2.2.0/24", "GLOBAL", "CLOUDFRONT", None),  # anycast
+        ("4.4.4.0/24", "", "WEIRD", None),             # empty-region error case
         # AWS service-priority dedup: same prefix under ec2/s3/amazon -> s3
-        ("5.5.5.0/24", "aws", "ec2", "us-west-2"),
-        ("5.5.5.0/24", "aws", "s3", "us-west-2"),
-        ("5.5.5.0/24", "aws", "amazon", "us-west-2"),
-        # Azure specificity dedup: named+regional beats empty+global
-        ("6.6.6.0/24", "azure", "", "global"),
-        ("6.6.6.0/24", "azure", "AzureStorage", "East US"),
+        ("5.5.5.0/24", "us-west-2", "EC2", None),
+        ("5.5.5.0/24", "us-west-2", "S3", None),
+        ("5.5.5.0/24", "us-west-2", "AMAZON", None),
     ]
-    return spark.createDataFrame(rows, "prefix string, cloud string, service string, region string")
+    gcp = [("3.3.3.0/24", None, "googleservice", "us-central1")]
+    azure = [
+        # Azure specificity dedup: named+regional beats empty+global
+        ("AzureCloud", None, {"region": "", "systemService": "", "addressPrefixes": ["6.6.6.0/24"]}),
+        ("Storage.EastUS", None, {"region": "East US", "systemService": "AzureStorage",
+                                  "addressPrefixes": ["6.6.6.0/24"]}),
+    ]
+    return build_prefixes_from_feeds(
+        spark.createDataFrame([(None, None, aws)], AWS_FEED_SCHEMA),
+        spark.createDataFrame([(None, None, gcp)], GCP_FEED_SCHEMA),
+        spark.createDataFrame([(None, None, [])], GOOGLE_FEED_SCHEMA),
+        spark.createDataFrame([(None, None, azure)], AZURE_FEED_SCHEMA),
+    )
 
 
 def _obs(node, ts, proto, osrc, osport, odst, odport, rsrc, rsport, rdst, rdport,

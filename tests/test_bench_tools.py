@@ -171,6 +171,24 @@ class TestLoadRoundBaseline:
         name, qs = load_round_baseline(Path(__file__).resolve().parents[1], 0.1)
         assert name.startswith("BENCH_r") and len(qs) > 0
 
+    def test_plan_audit_restores_only_like_run_adjudications(self, tmp_path):
+        """The committed BENCH_DETAIL.json is an 8-core record whose
+        adjudications were drawn against the 32-core BENCH_r08; the
+        rebuilt PLAN_AUDIT section must leave them out, and keep them
+        when the baseline they name is the like-for-like one."""
+        from pathlib import Path
+
+        from tools.plan_audit import round_adjudication_section
+
+        assert round_adjudication_section(Path(__file__).resolve().parents[1]) == ""
+        detail = {**DETAIL, "sf": 0.1, "default_parallelism": 8, "master": "local[8]"}
+        self._write(tmp_path, "BENCH_DETAIL.json", detail)
+        like = {"sf": 0.1, "default_parallelism": 8, "master": "local[8]", "queries": {"a": 1.0}}
+        self._write(tmp_path, "BENCH_r05.json", like)
+        assert "q294_temporal_reachability" in round_adjudication_section(tmp_path)
+        self._write(tmp_path, "BENCH_r05.json", {**like, "default_parallelism": 32})
+        assert round_adjudication_section(tmp_path) == ""
+
     def test_falls_past_off_sf_round_to_latest_same_sf(self, tmp_path):
         """One round benched at another scale factor must not silently
         disable the check — the loader falls back to the newest

@@ -6,11 +6,11 @@ from __future__ import annotations
 
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 from kubenetmon_spark.operators.clustering import (
     kmeans_assign,
     kmeans_fit,
-    kmeans_inertia,
 )
 from kubenetmon_spark.tables import load_table
 
@@ -55,7 +55,8 @@ def test_kmeans_inertia_monotone(spark, emb):
     prev = None
     for n_iter in (1, 3, 6):
         cents = kmeans_fit(emb, k=10, n_iter=n_iter, tol=0.0)
-        inertia = kmeans_inertia(kmeans_assign(emb, cents))
+        assigned = kmeans_assign(emb, cents)
+        inertia = assigned.agg(F.sum("sq_dist")).collect()[0][0]
         if prev is not None:
             assert inertia <= prev + 1e-6
         prev = inertia

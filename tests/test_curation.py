@@ -244,40 +244,6 @@ class TestHashedLinearScore:
             assert got[i] == (len(toks), sum(w(t) for t in toks)), i
 
 
-class TestShuffleEpoch:
-    def test_reproducible_and_epoch_dependent(self, spark):
-        import hashlib
-
-        from kubenetmon_spark.operators.curation import shuffle_epoch
-
-        df = spark.createDataFrame([(i,) for i in range(300)], ["id"])
-        a1 = [r.id for r in shuffle_epoch(df, "id", 3, n_shards=4).collect()]
-        a2 = [r.id for r in shuffle_epoch(df, "id", 3, n_shards=4).collect()]
-        b = [r.id for r in shuffle_epoch(df, "id", 4, n_shards=4).collect()]
-        assert a1 == a2            # reproducible
-        assert a1 != b             # epochs differ
-        assert sorted(a1) == sorted(b) == list(range(300))  # permutations
-        # the realized order IS the md5 order (global across shards)
-        want = sorted(
-            range(300),
-            key=lambda i: hashlib.md5(f"{i}|3".encode()).hexdigest(),
-        )
-        assert a1 == want
-
-    def test_no_single_partition_exchange(self, spark):
-        from kubenetmon_spark.operators.curation import shuffle_epoch
-
-        df = spark.createDataFrame([(i,) for i in range(100)], ["id"])
-        plan = (
-            shuffle_epoch(df, "id", 1, n_shards=4)
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-        )
-        assert "rangepartitioning" in plan
-        assert "SinglePartition" not in plan
-
-
 class TestHtmlStripped:
     def test_nasty_cases(self, spark):
         from kubenetmon_spark.operators.text import with_html_stripped
@@ -1103,23 +1069,6 @@ class TestEmbeddingContamination:
             embedding_contamination_pairs(
                 corpus, bench, max_benchmark=4
             )
-
-    def test_decontaminate_by_embedding(self, spark):
-        from kubenetmon_spark.operators.contamination import (
-            decontaminate_by_embedding,
-        )
-
-        corpus = spark.createDataFrame(
-            [(1, "keep"), (2, "contaminated")], "doc_id long, text string"
-        )
-        vecs = self._vecs(
-            spark, [(1, [0.0, 1.0, 0.0]), (2, [1.0, 0.0, 0.0])]
-        )
-        bench = self._vecs(spark, [(0, [2.0, 0.0, 0.0])])
-        out = decontaminate_by_embedding(
-            corpus, vecs, bench, threshold_bp=9500
-        )
-        assert [r.doc_id for r in out.collect()] == [1]
 
 
 class TestLeakageSafeSplit:

@@ -7,17 +7,16 @@ from datetime import date, datetime
 import pytest
 from pyspark.sql import functions as F
 
-from kubenetmon_spark.dims import build_cloud_prefixes
 from kubenetmon_spark.operators.flows import summing_aggregate, to_flow_rows
 from kubenetmon_spark.operators.label import label_flows, split_rejected
 from kubenetmon_spark.schema import NETWORK_FLOWS_SCHEMA
 from kubenetmon_spark.sink import apply_retention, compact, read_flows, write_flows
-from tests.fixtures import CFG, nodes_df, observations_df, pods_df, raw_prefixes_df
+from tests.fixtures import CFG, nodes_df, observations_df, pods_df, prefixes_df
 
 
 @pytest.fixture(scope="module")
 def fact(spark):
-    prefixes = build_cloud_prefixes(raw_prefixes_df(spark))
+    prefixes = prefixes_df(spark)
     labeled = label_flows(observations_df(spark), pods_df(spark), nodes_df(spark), prefixes, CFG)
     accepted, _ = split_rejected(labeled)
     df = to_flow_rows(accepted)
@@ -60,7 +59,7 @@ def test_sink_write_compact_retention(spark, fact, tmp_path):
     path = str(tmp_path / "network_flows")
     pre = to_flow_rows(split_rejected(
         label_flows(observations_df(spark), pods_df(spark), nodes_df(spark),
-                    build_cloud_prefixes(raw_prefixes_df(spark)), CFG))[0])
+                    prefixes_df(spark), CFG))[0])
     # two appends simulate two micro-batches producing unmerged "parts"
     write_flows(pre, path)
     write_flows(pre, path)
@@ -1210,14 +1209,13 @@ class TestLifecycleGuardsExtended:
 
         import kubenetmon_spark.sink as sink_mod
         from kubenetmon_spark.backfill import backfill_dates
-        from kubenetmon_spark.dims import build_cloud_prefixes
 
         path = str(tmp_path / "bf")
         write_flows(fact, path)
         fs, intent = self._stale_intent(path)
         real = sink_mod.partitions_mutation_guard
         short = functools.partial(real, drain_timeout_s=0.5)
-        prefixes = build_cloud_prefixes(raw_prefixes_df(spark))
+        prefixes = prefixes_df(spark)
         try:
             sink_mod.partitions_mutation_guard = short
             with pytest.raises(TimeoutError, match="append intents"):

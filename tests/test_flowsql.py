@@ -17,7 +17,6 @@ from dataclasses import replace
 import pytest
 from pyspark.sql import functions as F
 
-from kubenetmon_spark.dims import build_cloud_prefixes
 from kubenetmon_spark.flowsql import (
     flow_batch_sql,
     flows_agg_sql,
@@ -33,7 +32,7 @@ from kubenetmon_spark.operators.label import (
     split_rejected,
 )
 from kubenetmon_spark.operators.lpm import disjoint_prefixes
-from tests.fixtures import CFG, T0, _obs, nodes_df, observations_df, pods_df, raw_prefixes_df
+from tests.fixtures import CFG, T0, _obs, nodes_df, observations_df, pods_df, prefixes_df
 from tests.test_streaming import SF_DIR
 
 
@@ -58,7 +57,7 @@ def _same(a, b):
 
 @pytest.fixture(scope="module")
 def setup(spark):
-    prefixes = build_cloud_prefixes(raw_prefixes_df(spark))
+    prefixes = prefixes_df(spark)
     disjoint = disjoint_prefixes(prefixes).persist()
     disjoint.count()
     prepared = prepare_label_dims(pods_df(spark), nodes_df(spark))

@@ -92,50 +92,6 @@ def test_canonical_flags_json(spark):
     assert vals[0] == '{"alpha":false,"zeta":true}'
 
 
-class TestArrayReduce:
-    def test_reducers_match_python(self, spark):
-        from pyspark.sql import functions as F
-
-        from kubenetmon_spark.functions.arrays import array_reduce
-
-        arrs = [[5, 1, 3, 3], [7], [], [2, 2, 2, 2, 2]]
-        df = spark.createDataFrame(
-            [(i, a) for i, a in enumerate(arrs)], "id int, a array<bigint>"
-        )
-        names = ["sum", "min", "max", "count", "uniqExact", "avg", "median"]
-        sel = [array_reduce(n, F.col("a")).alias(n) for n in names]
-        got = {r.id: r for r in df.select("id", *sel).collect()}
-
-        def ref(a, n):
-            if n == "sum":
-                return sum(a)
-            if n == "min":
-                return min(a) if a else None
-            if n == "max":
-                return max(a) if a else None
-            if n == "count":
-                return len(a)
-            if n == "uniqExact":
-                return len(set(a))
-            if n == "avg":
-                return sum(a) // len(a) if a else None
-            if n == "median":
-                return sorted(a)[(len(a) + 1) // 2 - 1] if a else None
-
-        for i, a in enumerate(arrs):
-            for n in names:
-                assert got[i][n] == ref(a, n), (i, n)
-
-    def test_unknown_reducer_raises(self, spark):
-        import pytest
-        from pyspark.sql import functions as F
-
-        from kubenetmon_spark.functions.arrays import array_reduce
-
-        with pytest.raises(ValueError):
-            array_reduce("nope", F.lit(None))
-
-
 class TestLpm6:
     def test_nested_prefixes_and_misses(self, spark):
         import ipaddress

@@ -377,13 +377,6 @@ class TestEmptyInputs:
         dfc = spark.createDataFrame([], "k string, sign int, val long")
         assert collapsing_aggregate(dfc, ["k"], "sign", ["val"]).count() == 0
 
-    def test_pq_encode_empty(self, spark):
-        from kubenetmon_spark.operators.pq import pq_encode
-
-        df = spark.createDataFrame([], "vec_id long, embedding array<double>")
-        books = np.zeros((2, 4, 2))
-        assert pq_encode(df, books).count() == 0
-
 
 class TestSequenceNextNode:
     def _df(self, spark, rows):

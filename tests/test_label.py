@@ -6,14 +6,13 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from kubenetmon_spark.dims import build_cloud_prefixes
 from kubenetmon_spark.operators.label import label_flows, split_rejected
-from tests.fixtures import CFG, nodes_df, observations_df, pods_df, raw_prefixes_df
+from tests.fixtures import CFG, nodes_df, observations_df, pods_df, prefixes_df
 
 
 @pytest.fixture(scope="module")
 def labeled(spark):
-    prefixes = build_cloud_prefixes(raw_prefixes_df(spark))
+    prefixes = prefixes_df(spark)
     out = label_flows(observations_df(spark), pods_df(spark), nodes_df(spark), prefixes, CFG)
     out.cache()
     return out
@@ -137,8 +136,22 @@ def test_constants(labeled):
     assert row.proto == "TCP"
 
 
+def test_prefix_fixture_rows(spark):
+    # the dimension the removed raw-row fold (dims.build_cloud_prefixes)
+    # produced from the same cases; the feed fold must give it unchanged
+    assert sorted(tuple(r) for r in prefixes_df(spark).collect()) == [
+        ("1.1.0.0/16", 16842752, 16908287, 16, "aws", "amazon", "us-west-2"),
+        ("1.1.1.0/24", 16843008, 16843263, 24, "aws", "s3", "us-east-1"),
+        ("2.2.2.0/24", 33686016, 33686271, 24, "aws", "cloudfront", "global"),
+        ("3.3.3.0/24", 50529024, 50529279, 24, "gcp", "googleservice", "us-central1"),
+        ("4.4.4.0/24", 67372032, 67372287, 24, "aws", "weird", ""),
+        ("5.5.5.0/24", 84215040, 84215295, 24, "aws", "s3", "us-west-2"),
+        ("6.6.6.0/24", 101058048, 101058303, 24, "azure", "azurestorage", "eastus"),
+    ]
+
+
 def test_prefix_priority_dedup(spark):
-    dim = build_cloud_prefixes(raw_prefixes_df(spark))
+    dim = prefixes_df(spark)
     aws555 = dim.filter(F.col("prefix") == "5.5.5.0/24").collect()
     assert len(aws555) == 1 and aws555[0].service == "s3"
     az = dim.filter(F.col("cloud") == "azure").collect()
@@ -159,7 +172,7 @@ class TestIPv6Mode:
         from tests.fixtures import _obs, T0
 
         cfg = replace(CFG, ignore_ipv6=False)
-        prefixes = build_cloud_prefixes(raw_prefixes_df(spark))
+        prefixes = prefixes_df(spark)
         prefixes6 = prefixes6_from_cidrs(
             spark,
             [
@@ -291,7 +304,7 @@ def test_duplicate_node_names_never_multiply_facts(spark):
     # stale dim snapshot with duplicate names silently multiplied fact
     # rows (corrupting every downstream sum). One row per name is now
     # enforced (min zone, deterministic).
-    prefixes = build_cloud_prefixes(raw_prefixes_df(spark))
+    prefixes = prefixes_df(spark)
     obs, pods, nodes = observations_df(spark), pods_df(spark), nodes_df(spark)
     dup_nodes = nodes.unionByName(nodes)  # every name twice
     n_clean = label_flows(obs, pods, nodes, prefixes, CFG).count()

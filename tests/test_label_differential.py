@@ -22,10 +22,9 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-from kubenetmon_spark.dims import build_cloud_prefixes
 from kubenetmon_spark.operators.label import label_flows
 from kubenetmon_spark.schema import OBSERVATION_SCHEMA
-from tests.fixtures import CFG, nodes_df, pods_df, raw_prefixes_df
+from tests.fixtures import CFG, nodes_df, pods_df, prefixes_df
 
 T0 = datetime(2024, 3, 1, 12, 0, 30)
 
@@ -216,7 +215,7 @@ CMP_ACCEPTED = [
 @SLOW
 @given(rows=st.lists(_obs_strategy, min_size=1, max_size=30))
 def test_labeler_matches_sequential_reference(spark, rows):
-    prefixes = build_cloud_prefixes(raw_prefixes_df(spark))
+    prefixes = prefixes_df(spark)
     prefix_rows = [r.asDict() for r in prefixes.collect()]
 
     data, expect = [], []

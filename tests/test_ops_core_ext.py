@@ -198,28 +198,6 @@ class TestRedaction:
         assert "Exchange" not in plan
 
 
-class TestBucketedSink:
-    def test_agg_on_bucket_key_has_no_exchange(self, spark, tmp_path):
-        from kubenetmon_spark.sink import write_flows_bucketed
-
-        df = spark.createDataFrame(
-            [(f"pod-{i % 5}", i, 10 * i) for i in range(100)],
-            "localPod string, proto long, bytes long",
-        )
-        write_flows_bucketed(df, "nf_bucketed_test", buckets=4, bucket_cols=("localPod",))
-        try:
-            t = spark.table("nf_bucketed_test")
-            agg = t.groupBy("localPod").agg(F.sum("bytes").alias("b"))
-            plan = agg._jdf.queryExecution().executedPlan().toString()
-            assert "Exchange" not in plan
-            got = {r.localPod: r.b for r in agg.collect()}
-            expect = {r.localPod: r.b
-                      for r in df.groupBy("localPod").agg(F.sum("bytes").alias("b")).collect()}
-            assert got == expect
-        finally:
-            spark.sql("DROP TABLE IF EXISTS nf_bucketed_test")
-
-
 class TestQuantization:
     def test_quantize_values(self, spark):
         from kubenetmon_spark.operators.similarity import quantize_embeddings

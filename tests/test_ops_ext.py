@@ -760,35 +760,6 @@ class TestCovariancePca:
             assert r.cov_num == int(expect), (r.i, r.j)
         assert len(rows) == 10  # upper triangle of 4x4
 
-    def test_pca_projects_onto_dominant_direction(self, spark):
-        import numpy as np
-
-        from kubenetmon_spark.operators.similarity import (
-            covariance_matrix_exact,
-            pca_project,
-        )
-
-        # variance concentrated on axis 2 -> first PC ~ e2
-        rng = np.random.RandomState(3)
-        X = np.zeros((200, 4), dtype="float32")
-        X[:, 2] = rng.randn(200).astype("float32") * 10
-        X[:, 0] = rng.randn(200).astype("float32") * 0.1
-        df = spark.createDataFrame(
-            [(i, [float(v) for v in row]) for i, row in enumerate(X)],
-            "vec_id long, embedding array<float>",
-        )
-        cov_rows = [
-            r.asDict()
-            for r in covariance_matrix_exact(
-                df, "embedding", dims=4, scale=1000
-            ).collect()
-        ]
-        out = pca_project(df, cov_rows, "embedding", dims=4, k=1)
-        got = {r.vec_id: r.pca[0] for r in out.collect()}
-        # projection onto e2 (sign-canonicalized) == original axis-2 value
-        for i in range(0, 200, 37):
-            assert abs(got[i] - float(X[i, 2])) < 0.15
-
 
 class TestRemoveDuplicateSpans:
     def test_second_occurrence_removed_first_kept(self, spark):

@@ -488,10 +488,9 @@ def test_summing_aggregation_survives_90pct_one_key_skew(spark):
     # summing contract stays exact.
     from kubenetmon_spark.operators.flows import summing_aggregate, to_flow_rows
     from kubenetmon_spark.operators.label import label_flows as lf, split_rejected
-    from kubenetmon_spark.dims import build_cloud_prefixes
-    from tests.fixtures import CFG, nodes_df, observations_df, pods_df, raw_prefixes_df
+    from tests.fixtures import CFG, nodes_df, observations_df, pods_df, prefixes_df
 
-    prefixes = build_cloud_prefixes(raw_prefixes_df(spark))
+    prefixes = prefixes_df(spark)
     labeled = lf(observations_df(spark), pods_df(spark), nodes_df(spark), prefixes, CFG)
     accepted, _ = split_rejected(labeled)
     base = to_flow_rows(accepted)

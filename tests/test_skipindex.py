@@ -260,32 +260,6 @@ class TestUpdateSkipIndex:
         assert update_skip_index(spark, tbl, str(tmp_path / "noidx")) == {}
 
 
-def test_explain_prune_reports_decisive_indexes(indexed_table):
-    from kubenetmon_spark.operators.skipindex import explain_prune
-
-    spark, tbl, idx = indexed_table
-    rows = explain_prune(
-        spark, tbl, idx,
-        [("uid", "eq", 3), ("val", "eq", 5), ("text", "has_token", "word3")],
-    )
-    by_index = {r["index"]: r for r in rows if r["index"]}
-    # range-clustered uid: all three uid indexes prune
-    assert by_index["uid__minmax"]["decisive"]
-    assert by_index["uid__bloom"]["decisive"]
-    assert by_index["uid__set"]["decisive"]
-    # overflowed set index keeps everything -> not decisive
-    assert not by_index["val__set"]["decisive"]
-    assert by_index["val__set"]["n_candidates"] == by_index["val__set"]["n_files"]
-    combined = [r for r in rows if r["condition"] == "<combined>"][0]
-    assert combined["decisive"] and combined["n_candidates"] < combined["n_files"]
-    # the combined estimate matches what read_indexed actually opens
-    got = read_indexed(
-        spark, tbl, idx,
-        [("uid", "eq", 3), ("val", "eq", 5), ("text", "has_token", "word3")],
-    )
-    assert len(got.inputFiles()) == combined["n_candidates"]
-
-
 def test_cand_known_one_pass_matches_candidate_files(indexed_table):
     """r7: minmax/set probes return (candidates, known) from ONE collect —
     the known set must be the index's complete file list and the

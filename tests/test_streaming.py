@@ -310,31 +310,6 @@ def test_dim_refresh_between_batches(spark, stream_inputs, tmp_path):
     assert any(p and not p.endswith("-v2") for p in pods_seen)
 
 
-def test_to_kafka_records_shape_and_roundtrip(spark):
-    from pyspark.sql import functions as F
-
-    from kubenetmon_spark.streaming.job import to_kafka_records
-
-    df = spark.createDataFrame(
-        [("p1", "p2", "out", 100, 3)],
-        "localPod string, remotePod string, direction string,"
-        " bytes long, packets long",
-    )
-    rec = to_kafka_records(df)
-    assert rec.columns == ["key", "value"]
-    row = rec.collect()[0]
-    import json
-
-    k = json.loads(row.key)
-    v = json.loads(row.value)
-    assert k == {"localPod": "p1", "remotePod": "p2", "direction": "out"}
-    assert v["bytes"] == 100 and v["packets"] == 3
-    # value parses back through the engine too
-    schema = "localPod string, remotePod string, direction string, bytes long, packets long"
-    back = rec.select(F.from_json("value", schema).alias("o")).select("o.*")
-    assert back.collect()[0].bytes == 100
-
-
 def test_flow_stream_on_uri_roots(spark, stream_inputs, tmp_path):
     """The full q34 shape with the TABLE, CHECKPOINT, and DEAD-LETTER
     roots all URI-form (file:) — batch markers, sink appends, and

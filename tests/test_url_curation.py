@@ -14,7 +14,6 @@ from pyspark.sql.types import (
 from kubenetmon_spark.functions.url import (
     cut_query_string,
     domain,
-    first_significant_subdomain,
     protocol,
     query_string,
     top_level_domain,
@@ -71,11 +70,9 @@ class TestUrlFunctions:
             url_param("url", "p").alias("p"),
             url_param("url", "missing").alias("m"),
             cut_query_string("url").alias("cut"),
-            first_significant_subdomain("url").alias("fss"),
         ).collect()[0]
         assert r.lang == "en" and r.p == "3" and r.m == ""
         assert r.cut == "https://h.com/p"
-        assert r.fss == "h"
 
     def test_param_name_with_metacharacters(self, spark):
         # Regression: the name went into the regex unescaped, so

@@ -15,7 +15,7 @@ from pyspark.sql.types import (
 )
 
 from kubenetmon_spark.operators.zorder import with_zorder_key, zorder_write
-from kubenetmon_spark.sources.ingest import dead_letter_stats, read_csv, read_jsonl
+from kubenetmon_spark.sources.ingest import read_csv, read_jsonl
 
 
 def _morton2(x: int, y: int, bits: int) -> int:
@@ -130,8 +130,6 @@ class TestDeadLetterIngest:
         bad_rows = [r["raw"] for r in bad.collect()]
         assert len(bad_rows) == 2
         assert any("not valid json" in r for r in bad_rows)
-        stats = dead_letter_stats(bad).collect()[0]
-        assert stats["n_dead"] == 2
 
     def test_csv_split(self, spark, tmp_path):
         p = tmp_path / "docs.csv"
@@ -296,45 +294,3 @@ class TestMortonRawCodec:
         for r in out:
             assert r.z == ref(r.x, r.y), (r.x, r.y)
             assert (r.rx, r.ry) == (r.x, r.y)
-
-
-class TestDatasetManifest:
-    def test_manifest_stable_and_detects_tamper(self, spark, tmp_path):
-        from pyspark.sql import functions as F
-
-        from kubenetmon_spark.sources.export import (
-            dataset_manifest,
-            verify_manifest,
-        )
-
-        p = str(tmp_path / "ds")
-        spark.range(0, 1000).withColumn(
-            "part", (F.col("id") % 4).cast("int")
-        ).write.partitionBy("part").parquet(p)
-        m1 = dataset_manifest(spark, p, "id")
-        rows = m1.collect()
-        assert sum(r.n_rows for r in rows) == 1000
-        # re-derivation reproduces it exactly (order independence)
-        assert verify_manifest(spark, p, "id", m1).count() == 0
-        # whole-dataset checksum = XOR of shard checksums
-        total = 0
-        for r in rows:
-            total ^= r.id_checksum
-        flat = (
-            spark.read.parquet(p)
-            .agg(F.expr("bit_xor(xxhash64(id))").alias("s"))
-            .collect()[0]
-            .s
-        )
-        assert total == flat
-
-        # a stored manifest is a materialized artifact, not a live plan
-        stored = spark.createDataFrame(
-            rows, "file string, n_rows long, id_checksum long"
-        )
-        # tamper: append a duplicate row into one partition
-        spark.range(5, 6).withColumn("part", F.lit(0)).write.mode(
-            "append"
-        ).partitionBy("part").parquet(p)
-        bad = verify_manifest(spark, p, "id", stored)
-        assert bad.count() >= 1

@@ -408,6 +408,27 @@ BENCH_NOTES = {
 }
 
 
+def round_adjudication_section(root: Path) -> str:
+    """bench.py's round-over-round adjudication section, rebuilt from
+    ``root/BENCH_DETAIL.json`` — or "" unless the round baseline those
+    verdicts were made against is still the like-for-like baseline for
+    that record's own sf, parallelism and master. Verdicts drawn against
+    an unlike run (an 8-core record read against a 32-core round) are
+    not restored."""
+    import bench as _bench
+
+    try:
+        detail = json.loads((root / "BENCH_DETAIL.json").read_text())
+    except (OSError, ValueError):
+        return ""
+    name, _ = _bench.load_round_baseline(
+        root, detail.get("sf"), detail.get("default_parallelism"), detail.get("master")
+    )
+    if not name or name != detail.get("round_baseline"):
+        return ""
+    return _bench.format_round_adjudications(detail)
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     out_md = sys.argv[2] if len(sys.argv) > 2 else "PLAN_AUDIT.md"
@@ -480,18 +501,9 @@ def main() -> int:
     # Regenerating this file must not erase bench.py's auto-written
     # round-over-round adjudication section — rebuild it from
     # BENCH_DETAIL.json (the durable record).
-    detail_path = Path(__file__).resolve().parent.parent / "BENCH_DETAIL.json"
-    if detail_path.exists():
-        try:
-            import bench as _bench
-
-            section = _bench.format_round_adjudications(
-                json.loads(detail_path.read_text())
-            )
-            if section:
-                lines.append(section)
-        except Exception:
-            pass
+    section = round_adjudication_section(Path(__file__).resolve().parent.parent)
+    if section:
+        lines.append(section)
 
     Path(out_md).write_text("\n".join(lines) + "\n")
     print(f"wrote {out_md} ({len(rows)} queries, {len(flagged)} flagged)")
