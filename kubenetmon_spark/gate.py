@@ -14793,7 +14793,7 @@ def q280(spark, sf_dir):
     "incremental crawl-feed near-dup dedup "
     "(operators/dedup.py::minhash_dedup_incremental): each batch "
     "band-joins a persisted survivor index, exact-verifies candidates "
-    "only, appends survivors' bands+shingles — the corpus is never "
+    "only, appends survivors' bands+docs — the corpus is never "
     "re-shingled; cold-start single-batch semantics = drop any doc "
     "with a verified smaller-id match, which is q23's pair list as an "
     "anti-join (the oracle); the multi-batch path matches a sequential "

@@ -19,6 +19,11 @@ Scale notes (100 TB posture):
   bounded by #bands x #docs); verification joins each candidate pair to
   its two per-document shingle arrays. This is the scale path; exact
   ``jaccard_pairs`` is the small-scale/oracle path.
+- ``minhash_dedup_incremental`` runs the same per-document builder,
+  band-key join and verifier against a persisted survivor index of
+  band rows and one shingle-array row per survivor; its survivor-index
+  step (``_survivor_index``) is shared with the cosine twin
+  ``similarity.cosine_dedup_incremental``.
 """
 
 from __future__ import annotations
@@ -191,8 +196,8 @@ def jaccard_pairs(
     return out
 
 
-def _band_rows(per_doc: DataFrame, num_hashes: int, bands: int, *keep: str) -> DataFrame:
-    """(_id, *keep, band, band_key) — ``bands`` rows per document from its
+def _band_rows(per_doc: DataFrame, num_hashes: int, bands: int) -> DataFrame:
+    """(_id, band, band_key) — ``bands`` rows per document from its
     ``_mh<h>`` MinHash columns: band b's key is the sorted ``h=minhash``
     strings of its num_hashes // bands rows joined with '|'."""
     rows_per_band = num_hashes // bands
@@ -209,8 +214,64 @@ def _band_rows(per_doc: DataFrame, num_hashes: int, bands: int, *keep: str) -> D
             )
         )
     return per_doc.select(
-        "_id", *keep, F.explode(F.array(*band_structs)).alias("_b")
-    ).select("_id", *keep, "_b.band", "_b.band_key")
+        "_id", F.explode(F.array(*band_structs)).alias("_b")
+    ).select("_id", "_b.band", "_b.band_key")
+
+
+def _minhash_docs(df: DataFrame, id_col: str, text_col: str, num_hashes: int, n: int) -> DataFrame:
+    """(_id, sh, sz, _mh<h>...): one row per document with its distinct
+    shingles, their count and all signatures, built by per-row
+    expressions (no shuffle) and checkpointed once for its consumers
+    (banding and both verify sides). fanout: parallelize it when the
+    corpus arrives as fewer-than-core splits (no-op at scale). Documents
+    without shingles are dropped: they cannot pair, and their NULL
+    signatures would all share the band key ''."""
+    docs = _doc_shingles(fanout(df), id_col, text_col, n).filter(F.size("sh") > 0)
+    return docs.select(
+        "_id",
+        "sh",
+        F.size("sh").alias("sz"),
+        *[
+            F.array_min(
+                F.transform("sh", lambda s: F.md5(F.concat(F.lit(f"{h}:"), s)))
+            ).alias(f"_mh{h}")
+            for h in range(num_hashes)
+        ],
+    ).localCheckpoint(eager=True)
+
+
+def _band_pairs(banded: DataFrame, index_bands: DataFrame | None = None) -> DataFrame:
+    """Distinct (id_1, id_2) sharing a band key (every column but
+    ``_id``): the self-join of ``banded`` with id_1 < id_2, or with
+    ``index_bands`` on the id_1 side."""
+    keys = [c for c in banded.columns if c != "_id"]
+    left = banded if index_bands is None else index_bands
+    pairs = left.select(F.col("_id").alias("id_1"), *keys).join(
+        banded.select(F.col("_id").alias("id_2"), *keys), keys
+    )
+    if index_bands is None:
+        pairs = pairs.filter(F.col("id_1") < F.col("id_2"))
+    return pairs.select("id_1", "id_2").distinct()
+
+
+def _jaccard_verified(pairs: DataFrame, docs_1: DataFrame, docs_2: DataFrame, threshold_bp: int) -> DataFrame:
+    """(id_1, id_2, jaccard_bp) of the candidate pairs with exact Jaccard
+    >= threshold: each side joins one (_id, sh, sz) row per document and
+    the intersection is taken on the two shingle arrays, so only
+    candidates are verified (what makes LSH the scale path)."""
+    d1 = docs_1.select(F.col("_id").alias("id_1"), F.col("sh").alias("_s1"), F.col("sz").alias("_sz1"))
+    d2 = docs_2.select(F.col("_id").alias("id_2"), F.col("sh").alias("_s2"), F.col("sz").alias("_sz2"))
+    inter = F.size(F.array_intersect("_s1", "_s2"))
+    return (
+        pairs.join(d1, "id_1")
+        .join(d2, "id_2")
+        .withColumn(
+            "jaccard_bp",
+            F.floor((inter * 10000) / (F.col("_sz1") + F.col("_sz2") - inter)).cast("long"),
+        )
+        .filter(F.col("jaccard_bp") >= threshold_bp)
+        .select("id_1", "id_2", "jaccard_bp")
+    )
 
 
 def minhash_lsh_pairs(
@@ -236,56 +297,42 @@ def minhash_lsh_pairs(
     Ids are document keys: each input row is one document.
     Returns (id_1, id_2, jaccard_bp).
     """
-    # One row per document carries its distinct shingles, their count and
-    # all signatures — built by per-row expressions, no shuffle. The
-    # checkpoint runs that row pass once for its three consumers (banding
-    # and both verify sides). fanout: parallelize it when the corpus
-    # arrives as fewer-than-core splits (no-op at scale). Documents
-    # without shingles are dropped: they cannot pair, and their NULL
-    # signatures would all share the band key ''.
-    docs = _doc_shingles(fanout(df), id_col, text_col, n).filter(F.size("sh") > 0)
-    per_doc = docs.select(
-        "_id",
-        "sh",
-        F.size("sh").alias("sz"),
-        *[
-            F.array_min(
-                F.transform("sh", lambda s: F.md5(F.concat(F.lit(f"{h}:"), s)))
-            ).alias(f"_mh{h}")
-            for h in range(num_hashes)
-        ],
-    ).localCheckpoint(eager=True)
-    banded = _band_rows(per_doc, num_hashes, bands)
-    ca = banded.select(F.col("_id").alias("id_1"), "band", "band_key")
-    cb = banded.select(F.col("_id").alias("id_2"), "band", "band_key")
-    candidates = (
-        ca.join(cb, ["band", "band_key"])
-        .filter(F.col("id_1") < F.col("id_2"))
-        .select("id_1", "id_2")
-        .distinct()
+    per_doc = _minhash_docs(df, id_col, text_col, num_hashes, n)
+    candidates = _band_pairs(_band_rows(per_doc, num_hashes, bands))
+    return _jaccard_verified(candidates, per_doc, per_doc, verify_threshold_bp)
+
+
+def _survivor_index(batch, id_col, banded, docs, index_bands, index_docs, verify):
+    """(survivors, new_bands, new_docs) of the incremental dedup
+    operators: a batch row drops iff ``verify`` confirms a band-key
+    candidate against a smaller-id row of its batch or an indexed
+    survivor. ``banded`` is the batch's (_id, band keys...) frame,
+    ``docs`` its (_id, payload...) frame; the index frames share those
+    schemas (None/None: cold start). ``verify(pairs, docs_1)`` keeps the
+    (id_1, id_2) pairs that match, id_1 read from ``docs_1`` and id_2
+    from ``docs``. The index deltas are the survivors' rows only."""
+    dropped = verify(_band_pairs(banded), docs).select("id_2")
+    if index_bands is not None:
+        cross = _band_pairs(banded, index_bands)
+        dropped = dropped.unionByName(verify(cross, index_docs).select("id_2"))
+    # Materialized once: the survivors and both deltas derive from it,
+    # so none of them re-runs the candidate joins or re-reads the index
+    # (a stream's fold of one index store deletes files before the
+    # other store's delta is written).
+    dropped = dropped.select(F.col("id_2").alias("_drop")).distinct().localCheckpoint(eager=True)
+    survivors = batch.join(
+        dropped, batch[id_col].cast("long") == F.col("_drop"), "left_anti"
     )
-    # Verify ONLY the candidate pairs (this is what makes LSH the scale
-    # path): each side joins one per-document row, and the intersection
-    # is computed on the two distinct-shingle arrays.
-    d1 = per_doc.select(F.col("_id").alias("id_1"), F.col("sh").alias("_s1"), F.col("sz").alias("_sz1"))
-    d2 = per_doc.select(F.col("_id").alias("id_2"), F.col("sh").alias("_s2"), F.col("sz").alias("_sz2"))
-    inter = F.size(F.array_intersect("_s1", "_s2"))
-    return (
-        candidates.join(d1, "id_1")
-        .join(d2, "id_2")
-        .withColumn(
-            "jaccard_bp",
-            F.floor((inter * 10000) / (F.col("_sz1") + F.col("_sz2") - inter)).cast("long"),
-        )
-        .filter(F.col("jaccard_bp") >= verify_threshold_bp)
-        .select("id_1", "id_2", "jaccard_bp")
-    )
+    keep_ids = survivors.select(F.col(id_col).cast("long").alias("_keep"))
+    new_bands = banded.join(keep_ids, banded["_id"] == F.col("_keep"), "left_semi")
+    new_docs = docs.join(keep_ids, docs["_id"] == F.col("_keep"), "left_semi")
+    return survivors, new_bands, new_docs
 
 
 def minhash_dedup_incremental(
     batch: DataFrame,
     index_bands: DataFrame | None,
-    index_shingles: DataFrame | None,
+    index_docs: DataFrame | None,
     id_col: str,
     text_col: str,
     num_hashes: int = 8,
@@ -299,9 +346,9 @@ def minhash_dedup_incremental(
     corpus (the batch analogue of ``dedup_lines_incremental``; streamed
     by streaming/curation.py::start_minhash_dedup_stream).
 
-    Returns ``(survivors, new_bands, new_shingles)``: survivors are the
-    batch rows to keep; the band/shingle rows of the survivors are the
-    caller's index delta (append them for the next batch).
+    Returns ``(survivors, new_bands, new_docs)``: survivors are the
+    batch rows to keep; the band and document rows of the survivors are
+    the caller's index delta (append them for the next batch).
 
     Drop rule (deterministic): a batch doc is dropped iff its exact
     verified Jaccard >= threshold against (a) any indexed survivor, or
@@ -313,73 +360,24 @@ def minhash_dedup_incremental(
     With an empty index this equals "keep docs that never appear as
     id_2 in the verified pair list" — the q279 oracle.
 
-    Scale posture: identical to ``minhash_lsh_pairs`` — candidates come
-    only from band-key equi-joins (batch x batch and batch x index);
-    exact verification touches candidates only. Index growth is
-    survivors-only: bands are 4 rows/doc, shingles ~tokens/doc (the
-    same index a re-run from scratch would build).
+    Scale posture: the parts of ``minhash_lsh_pairs`` — one row per
+    document with its shingle array and signatures (no shuffle),
+    candidates only from band-key equi-joins (batch x batch and batch x
+    index), ``array_intersect`` verification of candidates only. Index
+    growth is survivors-only: ``bands`` band rows and one document row
+    per survivor (the same index a re-run from scratch would build).
+    Documents without shingles always survive and are not indexed.
 
-    Index schemas: ``index_bands (_id, band, band_key, sz)``,
-    ``index_shingles (_id, shingle)``. Pass None/None for a cold start.
+    Index schemas: ``index_bands (_id, band, band_key)``,
+    ``index_docs (_id, sh, sz)`` — ``sh`` the distinct shingles, ``sz``
+    their count. Pass None/None for a cold start.
     """
-    sh = shingle_set(batch, id_col, text_col, n).localCheckpoint(eager=True)
-    per_doc = sh.groupBy("_id").agg(
-        F.count(F.lit(1)).alias("sz"),
-        *[
-            F.min(F.md5(F.concat_ws(":", F.lit(h), F.col("shingle")))).alias(f"_mh{h}")
-            for h in range(num_hashes)
-        ],
-    ).localCheckpoint(eager=True)
-    banded = _band_rows(per_doc, num_hashes, bands, "sz")
-
-    def verify(cands, sh2, sz2):
-        """exact jaccard >= threshold for (id_1=other, id_2=batch doc)."""
-        inter = (
-            cands.join(sh2.select(F.col("_id").alias("id_1"), "shingle"), "id_1")
-            .join(sh.select(F.col("_id").alias("id_2"), "shingle"), ["id_2", "shingle"])
-            .groupBy("id_1", "id_2")
-            .agg(F.count(F.lit(1)).alias("i"))
-        )
-        return (
-            inter.join(sz2.select(F.col("_id").alias("id_1"), F.col("sz").alias("_s1")), "id_1")
-            .join(
-                per_doc.select(F.col("_id").alias("id_2"), F.col("sz").alias("_s2")),
-                "id_2",
-            )
-            .filter(
-                F.floor((F.col("i") * 10000) / (F.col("_s1") + F.col("_s2") - F.col("i")))
-                >= verify_threshold_bp
-            )
-            .select("id_2")
-        )
-
-    ca = banded.select(F.col("_id").alias("id_1"), "band", "band_key")
-    cb = banded.select(F.col("_id").alias("id_2"), "band", "band_key")
-    internal = (
-        ca.join(cb, ["band", "band_key"])
-        .filter(F.col("id_1") < F.col("id_2"))
-        .select("id_1", "id_2")
-        .distinct()
+    per_doc = _minhash_docs(batch, id_col, text_col, num_hashes, n)
+    docs = per_doc.select("_id", "sh", "sz")
+    return _survivor_index(
+        batch, id_col, _band_rows(per_doc, num_hashes, bands), docs, index_bands, index_docs,
+        lambda pairs, docs_1: _jaccard_verified(pairs, docs_1, docs, verify_threshold_bp),
     )
-    dropped = verify(internal, sh, per_doc)
-    if index_bands is not None:
-        cross = (
-            index_bands.select(F.col("_id").alias("id_1"), "band", "band_key")
-            .join(cb, ["band", "band_key"])
-            .select("id_1", "id_2")
-            .distinct()
-        )
-        idx_sizes = index_bands.select("_id", "sz").distinct()
-        dropped = dropped.unionByName(verify(cross, index_shingles, idx_sizes))
-    dropped = dropped.select(F.col("id_2").alias("_drop")).distinct()
-
-    survivors = batch.join(
-        dropped, batch[id_col] == F.col("_drop"), "left_anti"
-    )
-    keep_ids = survivors.select(F.col(id_col).cast("long").alias("_keep"))
-    new_bands = banded.join(keep_ids, banded["_id"] == F.col("_keep"), "left_semi")
-    new_shingles = sh.join(keep_ids, sh["_id"] == F.col("_keep"), "left_semi")
-    return survivors, new_bands, new_shingles
 
 
 def semantic_dedup(

@@ -438,7 +438,9 @@ def cosine_dedup_incremental(
     (same continuous-crawl shape, streamed by
     streaming/curation.py::start_cosine_dedup_stream): each arriving
     batch is checked against everything already kept without ever
-    re-banding the corpus.
+    re-banding the corpus. Both run the same survivor-index step
+    (``dedup._survivor_index``); only the banding and the verifier
+    differ.
 
     Returns ``(survivors, new_bands, new_vectors)``: survivors are the
     batch rows to keep; their band rows and vectors are the caller's
@@ -459,6 +461,8 @@ def cosine_dedup_incremental(
     id-only candidate joins (batch x batch and batch x index) + exact
     re-rank on candidates only. Index growth is survivors-only: `bands`
     rows/doc of longs plus one vector row/doc."""
+    from kubenetmon_spark.operators.dedup import _survivor_index
+
     banded = sign_band_rows(
         batch, id_col, vec_col, bands, band_bits
     ).localCheckpoint(eager=True)
@@ -476,10 +480,10 @@ def cosine_dedup_incremental(
         _norm(F.col("_v1")) * _norm(F.col("_v2")),
     )
 
-    def verify(cand_ids, vec1_src):
-        """ids of batch docs (id_2) whose exact cosine to id_1 >= thr."""
+    def verify(pairs, vec1_src):
+        """candidate pairs whose exact cosine(id_1, id_2) >= thr."""
         return (
-            cand_ids.join(
+            pairs.join(
                 vec1_src.select(
                     F.col("_id").alias("id_1"), F.col("_v").alias("_v1")
                 ),
@@ -492,44 +496,11 @@ def cosine_dedup_incremental(
             .filter(
                 (F.round(cos, 4) * 10000).cast("long") >= F.lit(threshold_bp)
             )
-            .select("id_2")
         )
 
-    a = banded.alias("a")
-    b = banded.alias("b")
-    internal = (
-        a.join(
-            b,
-            (F.col("a._band") == F.col("b._band"))
-            & (F.col("a._key") == F.col("b._key"))
-            & (F.col("a._id") < F.col("b._id")),
-        )
-        .select(F.col("a._id").alias("id_1"), F.col("b._id").alias("id_2"))
-        .dropDuplicates(["id_1", "id_2"])
+    return _survivor_index(
+        batch, id_col, banded, bv, index_bands, index_vectors, verify
     )
-    dropped = verify(internal, bv)
-    if index_bands is not None and index_vectors is not None:
-        cross = (
-            index_bands.select(F.col("_id").alias("id_1"), "_band", "_key")
-            .join(
-                banded.select(F.col("_id").alias("id_2"), "_band", "_key"),
-                ["_band", "_key"],
-            )
-            .select("id_1", "id_2")
-            .distinct()
-        )
-        dropped = dropped.unionByName(verify(cross, index_vectors))
-    dropped = dropped.select(F.col("id_2").alias("_drop")).distinct()
-
-    survivors = batch.join(
-        dropped, batch[id_col].cast("long") == F.col("_drop"), "left_anti"
-    )
-    keep_ids = survivors.select(F.col(id_col).cast("long").alias("_keep"))
-    new_bands = banded.join(
-        keep_ids, banded["_id"] == F.col("_keep"), "left_semi"
-    )
-    new_vectors = bv.join(keep_ids, bv["_id"] == F.col("_keep"), "left_semi")
-    return survivors, new_bands, new_vectors
 
 
 def ivf_topk(

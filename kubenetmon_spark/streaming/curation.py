@@ -104,6 +104,62 @@ def start_incremental_dedup_stream(
     return _apply_trigger(writer, trigger).start()
 
 
+def _start_survivor_index_stream(
+    stream: DataFrame,
+    dedup,
+    docs_store: str,
+    out_path: str,
+    index_path: str,
+    checkpoint_dir: str,
+    trigger: dict | None,
+    fold_every: int,
+) -> StreamingQuery:
+    """foreachBatch body shared by the near-dup dedup streams.
+
+    Each micro-batch reads the survivor index ``index_path/bands`` and
+    ``index_path/<docs_store>`` minus its own ``_bid`` (a replayed
+    batch must not see its own partial writes), runs
+    ``dedup(batch, index_bands, index_docs) -> (survivors, new_bands,
+    new_docs)``, overwrites the survivors into ``out_path/_bid=<n>``
+    and writes both index deltas through ``write_batch_state`` (same
+    ``_bid=<n>``, folded every ``fold_every`` batches). Every write is
+    batch-id-deterministic, so an at-least-once retry overwrites its
+    own output."""
+    from pyspark.sql import functions as F
+
+    from kubenetmon_spark.streaming.job import _apply_trigger
+
+    stores = ("bands", docs_store)
+
+    def process(batch_df: DataFrame, batch_id: int) -> None:
+        spark = batch_df.sparkSession
+
+        def read_index(store):
+            # absent = first batch; unreadable EXISTING index raises (a
+            # silent None would re-admit known duplicates)
+            df = read_batch_state(spark, f"{index_path}/{store}")
+            if df is None:
+                return None
+            return df.filter(F.col("_bid") != batch_id).drop("_bid")
+
+        index = [read_index(store) for store in stores]
+        if any(df is None for df in index):
+            index = [None] * len(stores)
+        survivors, *deltas = dedup(batch_df, *index)
+        bounded_coalesce(survivors).write.mode("overwrite").parquet(
+            f"{out_path}/_bid={batch_id}"
+        )
+        for store, delta in zip(stores, deltas):
+            write_batch_state(
+                delta, f"{index_path}/{store}", batch_id, fold_every=fold_every
+            )
+
+    writer = stream.writeStream.foreachBatch(process).option(
+        "checkpointLocation", checkpoint_dir
+    )
+    return _apply_trigger(writer, trigger).start()
+
+
 def start_minhash_dedup_stream(
     docs_stream: DataFrame,
     out_path: str,
@@ -121,52 +177,37 @@ def start_minhash_dedup_stream(
     """foreachBatch wiring of ``minhash_dedup_incremental``: NEAR-dup
     (not just exact-line) dedup of a crawl feed against a persisted
     survivor index. Survivors land in ``out_path/_bid=<n>``; their band
-    keys and shingle sets append to ``index_path/bands|shingles/_bid=<n>``
-    — deterministic per-batch dirs, so an at-least-once retry overwrites
-    its own output (same contract as start_incremental_dedup_stream).
-    The corpus is never re-shingled: each batch pays its own shingling
-    plus a band-key equi-join against the index."""
-    from pyspark.sql import functions as F
+    keys and ``(_id, sh, sz)`` document rows append to
+    ``index_path/bands|docs/_bid=<n>`` — deterministic per-batch dirs,
+    so an at-least-once retry overwrites its own output (same contract
+    as start_incremental_dedup_stream). The corpus is never
+    re-shingled: each batch pays its own shingling plus a band-key
+    equi-join against the index.
 
+    Raises ValueError before the query starts when ``index_path`` holds
+    an old-layout ``shingles`` store: the stream would read no ``docs``
+    store there, take the index for empty and re-admit every indexed
+    near-duplicate. MIGRATION.md item 13 converts such an index."""
+    from kubenetmon_spark import fs as _fsm
     from kubenetmon_spark.operators.dedup import minhash_dedup_incremental
-    from kubenetmon_spark.streaming.job import _apply_trigger
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-
-        def read_index(sub):
-            # absent = first batch; unreadable EXISTING index raises (a
-            # silent None would re-admit known duplicates)
-            df = read_batch_state(spark, f"{index_path}/{sub}")
-            if df is None:
-                return None
-            # a replayed batch must not see its own partial writes
-            return df.filter(F.col("_bid") != batch_id).drop("_bid")
-
-        ib, ish = read_index("bands"), read_index("shingles")
-        if ib is None or ish is None:
-            ib = ish = None
-        survivors, new_bands, new_shingles = minhash_dedup_incremental(
-            batch_df, ib, ish, id_col, text_col,
+    legacy = _fsm.join(index_path, "shingles")
+    if _fsm.get_fs(legacy, docs_stream.sparkSession).exists(legacy):
+        raise ValueError(
+            f"start_minhash_dedup_stream: {legacy} is a MinHash index store "
+            "in the old one-row-per-shingle layout; convert it to "
+            "index_path/docs (MIGRATION.md item 13) before streaming "
+            "against this index"
+        )
+    return _start_survivor_index_stream(
+        docs_stream,
+        lambda batch, index_bands, index_docs: minhash_dedup_incremental(
+            batch, index_bands, index_docs, id_col, text_col,
             num_hashes=num_hashes, bands=bands, n=n,
             verify_threshold_bp=verify_threshold_bp,
-        )
-        bounded_coalesce(survivors).write.mode("overwrite").parquet(
-            f"{out_path}/_bid={batch_id}"
-        )
-        write_batch_state(
-            new_bands, f"{index_path}/bands", batch_id,
-            fold_every=fold_every,
-        )
-        write_batch_state(
-            new_shingles, f"{index_path}/shingles", batch_id,
-            fold_every=fold_every,
-        )
-
-    writer = docs_stream.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
+        ),
+        "docs", out_path, index_path, checkpoint_dir, trigger, fold_every,
     )
-    return _apply_trigger(writer, trigger).start()
 
 
 def start_cosine_dedup_stream(
@@ -183,49 +224,17 @@ def start_cosine_dedup_stream(
     fold_every: int = FOLD_EVERY_DEFAULT,
 ) -> StreamingQuery:
     """foreachBatch wiring of ``cosine_dedup_incremental`` — the
-    embedding-space twin of :func:`start_minhash_dedup_stream`, same
-    at-least-once contract: survivors land in ``out_path/_bid=<n>``;
-    their band keys and vectors append to
-    ``index_path/bands|vectors/_bid=<n>`` (deterministic per-batch dirs
-    so a replayed batch overwrites its own output, and the index read
-    filters the current batch id out before deduping against it)."""
-    from pyspark.sql import functions as F
-
+    embedding-space twin of :func:`start_minhash_dedup_stream`, with
+    the same foreachBatch body and at-least-once contract: survivors
+    land in ``out_path/_bid=<n>``; their band keys and vectors append
+    to ``index_path/bands|vectors/_bid=<n>``."""
     from kubenetmon_spark.operators.similarity import cosine_dedup_incremental
-    from kubenetmon_spark.streaming.job import _apply_trigger
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-
-        def read_index(sub):
-            # absent = first batch; unreadable EXISTING index raises (a
-            # silent None would re-admit known duplicates)
-            df = read_batch_state(spark, f"{index_path}/{sub}")
-            if df is None:
-                return None
-            # a replayed batch must not see its own partial writes
-            return df.filter(F.col("_bid") != batch_id).drop("_bid")
-
-        ib, iv = read_index("bands"), read_index("vectors")
-        if ib is None or iv is None:
-            ib = iv = None
-        survivors, new_bands, new_vectors = cosine_dedup_incremental(
-            batch_df, ib, iv, id_col, vec_col,
+    return _start_survivor_index_stream(
+        vecs_stream,
+        lambda batch, index_bands, index_vectors: cosine_dedup_incremental(
+            batch, index_bands, index_vectors, id_col, vec_col,
             threshold_bp=threshold_bp, bands=bands, band_bits=band_bits,
-        )
-        bounded_coalesce(survivors).write.mode("overwrite").parquet(
-            f"{out_path}/_bid={batch_id}"
-        )
-        write_batch_state(
-            new_bands, f"{index_path}/bands", batch_id,
-            fold_every=fold_every,
-        )
-        write_batch_state(
-            new_vectors, f"{index_path}/vectors", batch_id,
-            fold_every=fold_every,
-        )
-
-    writer = vecs_stream.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
+        ),
+        "vectors", out_path, index_path, checkpoint_dir, trigger, fold_every,
     )
-    return _apply_trigger(writer, trigger).start()

@@ -9,6 +9,7 @@ import os
 import re
 import time
 
+import pytest
 from pyspark.sql import functions as F
 
 from kubenetmon_spark.operators.dedup import minhash_dedup_incremental
@@ -148,3 +149,106 @@ def test_streaming_minhash_dedup_matches_spec(spark, tmp_path):
     got = sorted(r.doc_id for r in spark.read.parquet(out).collect())
     assert got == _spec([BATCH1, BATCH2, BATCH3])
     assert 10 not in got and 11 in got
+
+
+def test_index_deltas_are_survivors_only(spark):
+    s1, b1, d1 = minhash_dedup_incremental(
+        _df(spark, BATCH1), None, None, "doc_id", "text"
+    )
+    surv = {r.doc_id for r in s1.collect()}
+    texts = dict(BATCH1)
+    # shingle-less survivors (doc 5) can match nothing and are not indexed
+    indexed = {i for i in surv if _shingles(texts[i])}
+    assert surv == {1, 3, 5} and indexed == {1, 3}
+    docs = d1.collect()
+    assert sorted(r._id for r in docs) == sorted(indexed)  # one row each
+    for r in docs:
+        assert r.sz == len(r.sh) and set(r.sh) == _shingles(texts[r._id])
+    bands = b1.collect()
+    assert sorted(r._id for r in bands) == sorted(sorted(indexed) * BANDS)
+    for i in indexed:
+        got = {(r.band, r.band_key) for r in bands if r._id == i}
+        assert got == _band_keys(_shingles(texts[i]))
+
+
+def test_incremental_plans_have_no_shingle_rows(spark, monkeypatch):
+    """Both the cold-start and the index-backed pass keep one row per
+    document: no plan explodes the shingle array or aggregates
+    signatures by document id."""
+    plans = []
+
+    def record(df):
+        qe = df._jdf.queryExecution()
+        plans.append(qe.executedPlan().toString() + qe.toRdd().toDebugString())
+
+    b1, b2 = _df(spark, BATCH1), _df(spark, BATCH2)
+    frame_cls = type(b1)
+    checkpoint = frame_cls.localCheckpoint
+
+    def recording_checkpoint(self, *args, **kwargs):
+        record(self)
+        return checkpoint(self, *args, **kwargs)
+
+    monkeypatch.setattr(frame_cls, "localCheckpoint", recording_checkpoint)
+    out1 = minhash_dedup_incremental(b1, None, None, "doc_id", "text")
+    out2 = minhash_dedup_incremental(b2, out1[1], out1[2], "doc_id", "text")
+    for df in out1 + out2:
+        df.count()
+        record(df)
+    assert len(plans) >= 8  # the operators' own checkpoints + six outputs
+    for plan in plans:
+        assert not re.search(r"explode\(sh#\d+", plan), plan
+        assert not re.search(r"Aggregate\(keys=\[_id#\d+", plan), plan
+
+
+def test_stream_refuses_legacy_shingles_index(spark, tmp_path):
+    from kubenetmon_spark.streaming.curation import start_minhash_dedup_stream
+
+    src, idx = str(tmp_path / "src"), str(tmp_path / "idx")
+    _df(spark, BATCH1).write.parquet(src)
+    spark.createDataFrame(
+        [(1, 0, "k", 9)], "_id long, band int, band_key string, sz long"
+    ).write.parquet(f"{idx}/bands/_bid=0")
+    spark.createDataFrame(
+        [(1, "the quick brown")], "_id long, shingle string"
+    ).write.parquet(f"{idx}/shingles/_bid=0")
+    stream = spark.readStream.schema("doc_id long, text string").parquet(src)
+    with pytest.raises(ValueError, match="MIGRATION.md item 13"):
+        start_minhash_dedup_stream(
+            stream, str(tmp_path / "out"), idx, str(tmp_path / "ckpt"),
+            trigger={"availableNow": True},
+        )
+    assert not spark.streams.active
+    assert not (tmp_path / "ckpt").exists() and not (tmp_path / "out").exists()
+
+
+def test_streaming_minhash_dedup_across_index_folds(spark, tmp_path):
+    """fold_every=1 folds both index stores at every batch after the
+    first; the fold of one store deletes files that the rest of the
+    batch must no longer need."""
+    from kubenetmon_spark.streaming.curation import start_minhash_dedup_stream
+
+    src, out = str(tmp_path / "src"), str(tmp_path / "out")
+    base = time.time()
+    for k, rows in enumerate((BATCH1, BATCH2, BATCH3)):
+        _df(spark, rows).coalesce(1).write.mode("append").parquet(src)
+        mtime = base - 300 + 100 * k
+        for root, _, files in os.walk(src):
+            for f in files:
+                p = os.path.join(root, f)
+                if os.path.getmtime(p) > mtime:
+                    os.utime(p, (mtime, mtime))
+    stream = (
+        spark.readStream.schema("doc_id long, text string")
+        .option("maxFilesPerTrigger", "1")
+        .parquet(src)
+    )
+    q = start_minhash_dedup_stream(
+        stream, out, str(tmp_path / "idx"), str(tmp_path / "ckpt"),
+        trigger={"availableNow": True}, fold_every=1,
+    )
+    q.awaitTermination(300)
+    assert q.exception() is None
+    got = sorted(r.doc_id for r in spark.read.parquet(out).collect())
+    assert got == _spec([BATCH1, BATCH2, BATCH3])
+    assert (tmp_path / "idx" / "docs" / "_state_manifest.json").exists()

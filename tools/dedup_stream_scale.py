@@ -37,6 +37,7 @@ def main() -> int:
         start_cosine_dedup_stream,
         start_minhash_dedup_stream,
     )
+    from kubenetmon_spark.streaming.state import read_batch_state
 
     spark = get_spark("dedup_stream_scale")
     spark.sparkContext.setLogLevel("ERROR")
@@ -89,8 +90,10 @@ def main() -> int:
         if p.get("numInputRows", 0) > 0 or p["durationMs"].get("triggerExecution", 0) > 0
     ]
     survivors = spark.read.parquet(out).count()
-    index_rows = spark.read.parquet(
-        f"{idx}/bands" if cosine else f"{idx}/shingles"
+    # manifest-aware: a bare read of the store would also count a
+    # crashed fold's orphan generation dir
+    index_rows = read_batch_state(
+        spark, f"{idx}/bands" if cosine else f"{idx}/docs"
     ).count()
     print(f"{table}={n_docs} batches={len(files)} survivors={survivors} "
           f"index_rows={index_rows} wall={wall:.1f}s")

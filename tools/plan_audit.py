@@ -64,7 +64,8 @@ KNOWN = {
     "separate keyed stages by design (SCALE.md MinHash notes)",
     "q279_minhash_dedup_incremental": "q23's exact plan family (cold-start "
     "single-batch path): band-key candidate self-join + exact-verify "
-    "shingle SMJ over DERIVED candidate tables (no pre-AQE stats, no "
+    "joins of per-document shingle arrays over DERIVED candidate "
+    "tables (no pre-AQE stats, no "
     "broadcastable side by construction), then one anti-join of the doc "
     "table against the dropped-id list; ~linear at sf1 (30.5s, same "
     "cost envelope as q23 + anti-join)",
