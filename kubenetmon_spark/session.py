@@ -13,6 +13,12 @@ as Spark conf:
 - ``nanosAsLong`` — the driver's ``events`` table carries
   TIMESTAMP(NANOS) which Spark's vectorized parquet reader refuses by
   default; we read as long and convert (see tables.py).
+- Driver-side file listing on ``local*`` masters — past 32 paths Spark
+  lists files as a job, whose tasks run in this same JVM. That only
+  adds a job to every stream trigger that picks up more than 32 landed
+  files, and to every read of a table with more than 32 date
+  partitions. Cluster masters keep Spark's default threshold, where
+  the job spreads listing over executors; ``extra_conf`` overrides it.
 """
 
 from __future__ import annotations
@@ -97,6 +103,11 @@ def get_spark(
         # context away. Re-enable ad hoc when chasing a plan bug.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
+    if master.startswith("local"):
+        builder = builder.config(
+            "spark.sql.sources.parallelPartitionDiscovery.threshold",
+            str(2**31 - 1),
+        )
     if fair_scheduler:
         builder = builder.config("spark.scheduler.mode", "FAIR")
     for k, v in (extra_conf or {}).items():

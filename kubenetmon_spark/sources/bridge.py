@@ -10,7 +10,12 @@ varint-delimited ``Observation`` frames (protobuf's standard
 lands parquet files with a ``value binary`` column ATOMICALLY into the
 streaming source directory — exactly the shape the q267 wire pipeline
 reads (``readStream.schema("value binary").parquet(...)`` ->
-``parse_proto_observations``).
+``parse_proto_observations``), and the bridge's stream reader decodes
+it on executors each trigger. This is NOT the HTTP/gRPC receivers'
+shape: they land decoded, typed observation rows
+(``receiver.read_received_observations``). The bridge keeps binary
+landing because ``validate=False`` lands frames undecoded by contract,
+so only the stream can decode (and drop) them.
 
 What stays out of scope: gRPC/HTTP-2 framing itself (no h2 stack in
 this environment, and the Spark side gains nothing from it). An agent

@@ -11,11 +11,11 @@ installed:
 
 - **Handler logic is transport-free and fully tested**:
   :class:`FlowHandlerServicer`.``submit(message_iter)`` consumes raw
-  ``Observation`` bytes, validates each at the door
+  ``Observation`` bytes, decodes each once at the door
   (``decode_observation`` — skip-and-continue accounting like the
   reference server's per-observation error handling,
-  server.go:100-113), lands accepted bytes through the SAME atomic
-  parquet writer the HTTP receiver uses
+  server.go:100-113), lands the decoded rows through the SAME atomic
+  typed parquet writer the HTTP receiver uses
   (:class:`~kubenetmon_spark.sources.receiver.ObservationReceiver`),
   and returns the encoded ``ObservationSummary``. Everything a unit
   test needs runs without grpcio.
@@ -32,8 +32,9 @@ installed:
 
 Scale posture: identical to the HTTP receiver — this is the EDGE, one
 instance per ingest zone; batching is client-side (the agent's
-batchSize/batchSendTimeout); decode of accepted bytes happens on
-executors via the Arrow-batched stream decoder, not here.
+batchSize/batchSendTimeout); each message is decoded once, here, and
+the stream reads the landed typed columns
+(``receiver.read_received_observations``).
 """
 
 from __future__ import annotations
@@ -74,8 +75,8 @@ def decode_observation_summary(buf: bytes) -> int:
 class FlowHandlerServicer:
     """Transport-free ``Submit`` handler over a landing directory.
 
-    Reuses :class:`ObservationReceiver` purely for its atomic parquet
-    landing (``_land``) and stats — the HTTP server half is never
+    Reuses :class:`ObservationReceiver` purely for its atomic typed
+    parquet landing (``_land``) and stats — the HTTP server half is never
     started. One ``submit`` call = one client stream = one landed file
     PER ``batch_size`` flush (an unbounded agent stream must not buffer
     unboundedly, so a 25k-message stream at the default 10k lands 3
@@ -113,20 +114,22 @@ class FlowHandlerServicer:
         error and no summary at all, so no count can diverge."""
         received = 0
         batch: list[bytes] = []
+        rows: list[dict] = []
         for msg in message_iter:
             received += 1
             try:
-                decode_observation(msg)
+                row = decode_observation(msg)
             except (ValueError, UnicodeDecodeError):
                 with self._rx._lock:
                     self._rx.stats["rejected"] += 1
                 continue
             batch.append(msg)
+            rows.append(row)
             if len(batch) >= self.batch_size:
-                self._rx._land(batch)
-                batch = []
+                self._rx._land(batch, rows)
+                batch, rows = [], []
         if batch:
-            self._rx._land(batch)
+            self._rx._land(batch, rows)
         return encode_observation_summary(received)
 
 
@@ -149,9 +152,10 @@ def serve(
         raise ImportError(
             "grpcio is not installed; the supported wire transports are "
             "the HTTP receiver (sources/receiver.py, varint-framed "
-            "protobuf batches) and the TCP bridge (sources/bridge.py) — "
-            "both land the identical parquet shape. Install grpcio to "
-            "serve the reference's native grpc.FlowHandler/Submit."
+            "protobuf batches, landed as typed observation rows) and the "
+            "TCP bridge (sources/bridge.py, landed as binary frames). "
+            "Install grpcio to serve the reference's native "
+            "grpc.FlowHandler/Submit."
         ) from exc
 
     from concurrent import futures

@@ -48,6 +48,8 @@ _VARINT, _FIXED64, _LEN, _FIXED32 = 0, 1, 2, 5
 
 _I64_MAX = (1 << 63) - 1
 _I32_MAX = (1 << 31) - 1
+# Spark holds a timestamp as int64 microseconds
+_TS_MAX_SECONDS = _I64_MAX // 1_000_000
 
 
 def _i64(val: int, what: str) -> int:
@@ -196,7 +198,11 @@ def decode_observation(buf: bytes) -> dict[str, Any]:
         elif fnum == 2 and wt == _LEN:
             node_name = bytes(val).decode("utf-8")
         elif fnum == 3 and wt == _VARINT:
-            ts = _i64(val, "timestamp")
+            # past this, timestamp_seconds overflows (ArithmeticException)
+            # on every retry of the batch: one message would stop the stream
+            if val > _TS_MAX_SECONDS:
+                raise ValueError(f"timestamp {val} s exceeds the microsecond range")
+            ts = int(val)
     return {
         "node_name": node_name,
         "ts_seconds": ts,

@@ -210,3 +210,15 @@ def test_framing_roundtrip_arbitrary_bytes(tmp_path):
             for v in pq.read_table(os.path.join(landing, name))["value"].to_pylist()
         ]
     assert sorted(got) == sorted(frames)
+
+
+def test_timestamp_past_microseconds_dropped(tmp_path, wire_frames):
+    from kubenetmon_spark.sources.proto import encode_observation
+
+    _, frames = wire_frames
+    evil = encode_observation({"node_name": "n", "ts_seconds": 2**62, "proto": 6})
+    with IngestBridge(str(tmp_path / "landing"), flush_interval_s=0.2) as bridge:
+        send_frames(bridge._host, bridge._port, [frames[0], evil, frames[1]])
+        _wait(lambda: bridge.stats["received"] == 3)
+    assert bridge.stats["dropped"] == 1
+    assert bridge.stats["landed"] == 2

@@ -130,6 +130,20 @@ class TestSubmitHandler:
         assert servicer.stats["files"] == 3
         assert servicer.stats["accepted"] == 25
 
+    def test_timestamp_past_microseconds_skipped_and_counted(self, tmp_path):
+        from kubenetmon_spark.sources.grpc_server import (
+            FlowHandlerServicer,
+            decode_observation_summary,
+        )
+        from kubenetmon_spark.sources.proto import encode_observation
+
+        good = encode_observation({"node_name": "n", "ts_seconds": 7, "proto": 6})
+        evil = encode_observation({"node_name": "n", "ts_seconds": 2**62, "proto": 6})
+        servicer = FlowHandlerServicer(str(tmp_path / "landing"))
+        summary = servicer.submit(iter([good, evil]))
+        assert decode_observation_summary(summary) == 2
+        assert servicer.stats == {"accepted": 1, "rejected": 1, "files": 1}
+
 
 class TestGrpcShell:
     @pytest.mark.skipif(HAVE_GRPC, reason="grpcio present: shell serves")

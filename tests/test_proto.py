@@ -184,6 +184,22 @@ class TestSparkRoundtrip:
         got = {r.node_name for r in parse_proto_observations(df).collect()}
         assert got == {"node"}
 
+    def test_timestamp_past_microseconds_dropped_batch_survives(self, spark):
+        # 2^62 s fits int64 but not int64 microseconds: kept, it failed
+        # timestamp_seconds with a long overflow on every retry
+        edge = (2**63 - 1) // 1_000_000
+        rows = [
+            (bytearray(GOLDEN),),
+            (bytearray(encode_observation({"node_name": "evil", "ts_seconds": 2**62})),),
+            (bytearray(encode_observation({"node_name": "edge", "ts_seconds": edge})),),
+        ]
+        df = spark.createDataFrame(rows, "value binary")
+        out = parse_proto_observations(df).select(
+            "node_name", F.col("ts").cast("long").alias("s")
+        )
+        got = {r.node_name: r.s for r in out.collect()}
+        assert set(got) == {"node", "edge"} and got["edge"] == edge
+
 
 class TestFuzz:
     """Adversarial decode robustness: arbitrary bytes must either decode
