@@ -728,28 +728,6 @@ def _apply_ops(df: DataFrame, ops: list[dict]) -> DataFrame:
     return df
 
 
-def apply_schema_log(df: DataFrame, path: str) -> DataFrame:
-    """Replay the table's recorded ALTERs onto ``df`` — the streaming
-    entry point: a ``readStream`` started with the mergeSchema-union
-    schema (:func:`evolved_schema`) applies the log per micro-batch
-    (pure projections are streaming-legal and stateless).
-
-    **Streaming schema boundary (be honest about it):** a Spark file
-    stream pins its SOURCE schema at start. ALTERs that only reshape
-    existing physical columns — DROP, MODIFY, and any op over columns
-    the pinned schema already carries — apply live, batch by batch. An
-    ADD or RENAME issued *after* the stream started introduces a NEW
-    physical column in newly written files that the pinned schema
-    cannot see: post-ALTER rows would read the DEFAULT (ADD) or NULL
-    (RENAME) instead of their real values. Restart the stream (same
-    checkpoint — offsets carry over) after such ALTERs so the pinned
-    schema re-derives; until the restart the stream is behind the
-    ALTER, never wrong about pre-ALTER data. Batch callers use
-    :func:`read_evolved`, which has no pinned schema and no such
-    boundary."""
-    return _apply_ops(df, schema_log(path))
-
-
 def read_evolved(spark: SparkSession, path: str) -> DataFrame:
     """Read the table with every recorded ALTER applied, in order.
 
@@ -775,13 +753,6 @@ def read_evolved(spark: SparkSession, path: str) -> DataFrame:
                 ops = fresh  # materialize_schema won the race; replay anew
                 continue
             raise
-
-
-def evolved_schema(spark: SparkSession, path: str):
-    """The mergeSchema-union PHYSICAL schema of the table's files — what
-    a ``readStream`` should be given before :func:`apply_schema_log`
-    (the stream reads raw generations; the replay evolves them)."""
-    return spark.read.option("mergeSchema", "true").parquet(path).schema
 
 
 def materialize_schema(

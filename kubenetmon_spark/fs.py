@@ -363,11 +363,14 @@ class HadoopFS(FS):
                 "paths are resolved through the JVM Hadoop FileSystem)"
             )
         self._jvm = spark._jvm
+        # resolved once: each JVM class lookup through py4j is a
+        # roundtrip, and every operation below builds a Path
+        self._Path = spark._jvm.org.apache.hadoop.fs.Path
         self._gateway = spark.sparkContext._gateway
         self._conf = spark._jsc.hadoopConfiguration()
 
     def _jpath(self, path: str):
-        return self._jvm.org.apache.hadoop.fs.Path(str(path))
+        return self._Path(str(path))
 
     def _fs(self, jpath):
         return jpath.getFileSystem(self._conf)

@@ -4885,8 +4885,7 @@ def _kmv_oracle_sql(k: int) -> str:
     "per-day mergeable k-minimum-values states (52-bit md5 hashes) "
     "unioned into range distinct counts without a fact rescan — "
     "operators/sketch.py::kmv_state/kmv_merge. Unlike HLL (whose "
-    "packing varies per library/merge order — the uniq_state HLL twin "
-    "stays for interop, tests/test_ops_core_ext.py), the KMV state is "
+    "packing varies per library/merge order), the KMV state is "
     "a pure set function, so the DuckDB oracle reproduces the exact "
     "estimates: merging per-day top-k minima equals the global top-k",
 )

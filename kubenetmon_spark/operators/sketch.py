@@ -84,49 +84,6 @@ def heavy_hitters(
     return exact.orderBy(F.desc("n"), F.asc(key_col)).limit(k)
 
 
-def uniq_state(
-    df: DataFrame,
-    group_cols: list[str],
-    value_col: str,
-    lg_k: int = 12,
-    out_col: str = "uniq_sketch",
-) -> DataFrame:
-    """ClickHouse ``uniqState`` analogue: per group, a MERGEABLE
-    distinct-count sketch (Apache DataSketches HLL via Spark's
-    ``hll_sketch_agg``) stored as bytes. Persist these per partition
-    (e.g. per day) and distinct counts over any date range become a
-    sketch union instead of a fact rescan — exactly what
-    AggregatingMergeTree buys ClickHouse with the -State/-Merge
-    combinators.
-
-    One hash aggregation, map-side combined; sketch size is O(2^lg_k)
-    bytes per group regardless of cardinality.
-    """
-    return df.groupBy(*group_cols).agg(
-        F.hll_sketch_agg(F.col(value_col), F.lit(lg_k)).alias(out_col)
-    )
-
-
-def uniq_merge(
-    sketches: DataFrame,
-    group_cols: list[str],
-    sketch_col: str = "uniq_sketch",
-    out_col: str = "n_distinct_est",
-) -> DataFrame:
-    """ClickHouse ``uniqMerge``: union per-partition sketches and
-    estimate. The shuffle carries one sketch per (partition, group) —
-    bytes, not rows. HLL union is associative/commutative at the set
-    level, but Spark's sketch packing can vary slightly with merge
-    order, so estimates from different partitionings agree within the
-    configured error (~1.6% at lg_k=12), not bit-for-bit — treat the
-    result as an estimate, never a grouping key."""
-    return sketches.groupBy(*group_cols).agg(
-        F.hll_sketch_estimate(
-            F.hll_union_agg(F.col(sketch_col), F.lit(True))
-        ).alias(out_col)
-    )
-
-
 def heavy_hitters_weighted(
     df: DataFrame,
     key_col: str,
@@ -180,8 +137,8 @@ def heavy_hitters_weighted(
 
 # --- KMV (k-minimum-values) distinct-count sketch ----------------------
 #
-# The ENGINE-EXACT twin of uniq_state/uniq_merge: where HLL packing
-# varies with merge order (and across libraries), the KMV synopsis —
+# The ENGINE-EXACT form of ClickHouse's uniqState/uniqMerge: where HLL
+# packing varies with merge order (and across libraries), the KMV synopsis —
 # the k smallest distinct 52-bit md5-derived hash values — is a pure
 # SET function of the input: any engine, any partitioning, any merge
 # tree produces byte-identical states and estimates. That makes it safe
@@ -485,7 +442,7 @@ def kmv_overlap(
 # contract: every quantity is integer arithmetic over the shared 52-bit
 # md5 hash, so registers AND estimates are bit-identical across engines,
 # partitionings, and merge orders — unlike library HLLs (Spark's
-# hll_sketch_agg, uniq_state above), whose packed bytes vary per
+# hll_sketch_agg), whose packed bytes vary per
 # implementation (q56's gate therefore hashes accuracy-contract
 # booleans rather than the sketch values themselves).
 #

@@ -15,7 +15,7 @@ Storage layout mirrors what the reference's DDL buys from ClickHouse
 
 from __future__ import annotations
 
-from contextlib import contextmanager
+from contextlib import contextmanager, nullcontext
 from datetime import date, timedelta
 
 from pyspark.sql import DataFrame, SparkSession
@@ -84,11 +84,12 @@ def _list_date_partitions(fs: "_fsm.FS", path: str) -> list[str]:
 #   heartbeat/fencing lease elsewhere), then WAIT until no append
 #   intent is in flight for the partition;
 # - appenders publish a per-partition APPEND INTENT file before
-#   checking for locks, write, then retract the intent. Publishing
-#   BEFORE checking is what closes the race on a linearizable store:
-#   whichever side's visibility check runs second sees the other side.
-#   An appender that finds a lock retracts its intents (so it never
-#   deadlocks the mutator) and retries until the lock clears.
+#   checking for locks, rename their staged files in, then retract the
+#   intent (commit_flow_batch). Publishing BEFORE checking is what
+#   closes the race on a linearizable store: whichever side's
+#   visibility check runs second sees the other side. An appender that
+#   finds a lock retracts its intents (so it never deadlocks the
+#   mutator) and retries until the lock clears.
 #
 # Common-path cost for the stream: one intent PUT + one lock existence
 # check + one DELETE per touched date per micro-batch — no data-plane
@@ -322,25 +323,89 @@ def append_intent(path: str, partitions: list[str], wait_s: float = 120.0):
         _retract()
 
 
-def write_flows(
-    df: DataFrame, path: str, mode: str = "append", files_per_partition: int = 1
+_STAGING_DIR = "_staging"
+
+
+def _move_in(fs: "_fsm.FS", src: str, dst: str) -> None:
+    """Rename a staged file into place. A ``dst`` that already exists
+    is this very file: Spark's part names are unique per write job, and
+    an object-store rename (copy, then delete) interrupted between its
+    two halves leaves both copies."""
+    try:
+        fs.rename_no_replace(src, dst)
+    except FileExistsError:
+        if not fs.exists(dst):
+            raise
+        fs.remove_file(src)
+
+
+def commit_flow_batch(
+    table_path: str,
+    marker: str,
+    stream: str,
+    batch_id: int,
+    write_stage,
+    dead_letter_path: str | None = None,
+    spark: SparkSession | None = None,
 ) -> None:
+    """Make one micro-batch visible exactly once: stage, publish, mark.
+
+    ``write_stage(flow_stage[, dead_stage])`` writes the batch once: its
+    flow rows (``write_flows``) and, with ``dead_letter_path``, its
+    dead-letter counts, each under ``<root>/_staging/<stream>/<batch_id>``
+    (hidden from scans; ``stream`` is unique per writer, since two
+    streams can write one table). The stage is complete once its last
+    write has ``_SUCCESS``. Publish takes append intents on the staged
+    ``date=`` dirs, renames each staged file into place, writes
+    ``marker`` and deletes the stage. A retry skips a marked batch,
+    resumes the publish of a complete stage (moved files have left it)
+    and rewrites an incomplete one: the counterpart of ClickHouse's
+    ``insert_deduplication_token`` (reference pkg/inserter/worker.go:248).
+    """
+    mfs = _fsm.get_fs(marker, spark)
+    if mfs.exists(marker):  # a retry of a published batch
+        return
+    tail = _join(_STAGING_DIR, stream, str(batch_id))
+    stages = [
+        (_fsm.get_fs(root, spark), root, _join(root, tail))
+        for root in (table_path, dead_letter_path)
+        if root is not None
+    ]
+    last_fs, _, last = stages[-1]
+    if not last_fs.exists(_join(last, "_SUCCESS")):
+        for fs, _, d in stages:
+            fs.delete_dir(d)
+        write_stage(*(d for _, _, d in stages))
+    tfs, _, stage = stages[0]
+    dates = [n for n in tfs.list_names(stage) if n.startswith("date=")]
+    moves = [(tfs, _join(stage, p), _join(table_path, p)) for p in dates]
+    moves += [(fs, d, root) for fs, root, d in stages[1:]]
+    with append_intent(table_path, dates) if dates else nullcontext():
+        for fs, src, dst in moves:
+            fs.mkdirs(dst)
+            for n in fs.list_names(src):
+                if n.endswith(".parquet"):  # not _SUCCESS or .crc
+                    _move_in(fs, _join(src, n), _join(dst, n))
+    mfs.mkdirs(_fsm.parent(marker))
+    mfs.write_bytes_atomic(marker, b"")
+    for fs, _, d in stages:
+        fs.delete_dir(d)
+
+
+def write_flows(df: DataFrame, path: str) -> None:
     """Append fact rows, partitioned by date, sorted for data skipping.
 
-    Rows are shuffled to ``(date, salt)`` before the write so each task
-    owns whole date partitions: without this, every one of N shuffle
-    tasks appends a sliver to every date, producing N x dates tiny files
-    per batch (measured 960 files -> 30 at sf0.1). ``files_per_partition``
-    is the scale knob: 1 file per date per batch locally; on a large
-    cluster raise it so a single hot date fans out across that many
-    writer tasks instead of serializing through one.
+    Rows are shuffled to ``date`` before the write so each task owns
+    whole date partitions: one file per date per batch. Without it,
+    every one of N shuffle tasks appends a sliver to every date,
+    producing N x dates tiny files per batch (measured 960 files -> 30
+    at sf0.1).
     """
     key = [c for c in PRIMARY_KEY_PREFIX if c in df.columns]
-    salt = F.pmod(F.xxhash64(*key), F.lit(files_per_partition)).alias("_salt")
     (
-        df.repartition(F.col("date"), salt)
+        df.repartition("date")
         .sortWithinPartitions(*key)
-        .write.mode(mode)
+        .write.mode("append")
         .partitionBy("date")
         .parquet(path)
     )
@@ -423,7 +488,7 @@ def compact(
 
     ``presummed=True`` declares that EVERY append to this table was
     ``summing_aggregate`` output (the streaming sink's posture — one
-    pre-summed, key-sorted file per (batch, salt), exactly ClickHouse
+    pre-summed, key-sorted file per (batch, date), exactly ClickHouse
     summing rows at insert-block formation). Under that declaration
     compact's cost becomes proportional to MERGE DEBT, like MergeTree
     merges (which only select partitions holding >1 part): a date

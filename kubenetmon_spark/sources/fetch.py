@@ -7,7 +7,8 @@ The injectable-HTTP-client design keeps every branch testable offline:
 ``fetch(url) -> str`` returns the response body or raises on any
 failure (the reference's ``fetchAndParse`` treats non-200 / transport
 errors identically, public_ranges.go:340-358). Production callers pass
-:func:`urllib_fetch`; tests pass a dict-backed fake.
+a GET with the reference's 10-second timeout (public_ranges.go:341-343)
+that raises on non-2xx statuses; tests pass a dict-backed fake.
 
 Feed endpoints (reference pkg/labeler/remote.go:188-210):
 
@@ -43,18 +44,6 @@ AZURE_FALLBACK_DATE = "20240805"
 AZURE_MAX_PROBE_DAYS = 90
 
 Fetch = Callable[[str], str]
-
-
-def urllib_fetch(url: str, timeout_s: float = 10.0) -> str:
-    """Default production fetch: GET with the reference's 10-second
-    timeout (public_ranges.go:341-343); raises on transport errors and
-    non-2xx statuses alike."""
-    import urllib.request
-
-    with urllib.request.urlopen(url, timeout=timeout_s) as resp:  # noqa: S310
-        if not 200 <= resp.status < 300:
-            raise OSError(f"GET {url} -> {resp.status}")
-        return resp.read().decode("utf-8")
 
 
 def azure_url_candidates(today: date) -> Iterator[str]:

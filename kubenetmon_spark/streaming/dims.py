@@ -15,11 +15,16 @@ instead of duplicating — same contract as streaming/curation.py):
     <scd2_path>/closed/_bid=<n>/   intervals CLOSED by batch n (append-only)
     <scd2_path>/open/_bid=<n>/     the FULL open set after batch n
 
+The open-set write is batch n's commit point: ``closed/_bid=n`` is
+written first, and a reader keeps only closed dirs up to the newest
+open dir's batch, so a read between the two writes (or after a crash
+between them) sees batch n-1 whole, never half of batch n.
+
 Per-batch cost: the closed history is never re-read or re-written —
 O(batch + open set) work per refresh, where the open set is the live
 key cardinality (a dimension, small by construction), not the
-accumulated history. Reading the table = all closed dirs + the single
-newest open dir.
+accumulated history. Reading the table = the closed dirs up to the
+newest open dir's batch + that open dir.
 """
 
 from __future__ import annotations
@@ -32,10 +37,10 @@ from kubenetmon_spark.streaming.state import read_state_or_none
 
 def _latest_open(
     spark: SparkSession, scd2_path: str, exclude_bid: int | None = None
-) -> DataFrame | None:
-    """The open set as of the newest completed batch (optionally
-    excluding a batch id — a replayed batch must not see its own
-    partial writes)."""
+) -> tuple[DataFrame, int] | None:
+    """The open set as of the newest completed batch, with that batch's
+    id (optionally excluding a batch id — a replayed batch must not see
+    its own partial writes)."""
     df = read_state_or_none(
         spark, f"{scd2_path}/open", base_path=f"{scd2_path}/open"
     )
@@ -46,7 +51,8 @@ def _latest_open(
     bids = [r._bid for r in df.select("_bid").distinct().collect()]
     if not bids:
         return None
-    return df.filter(F.col("_bid") == max(bids)).drop("_bid")
+    bid = max(bids)
+    return df.filter(F.col("_bid") == bid).drop("_bid"), bid
 
 
 def start_scd2_stream(
@@ -69,8 +75,10 @@ def start_scd2_stream(
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        prev_open = _latest_open(spark, scd2_path, exclude_bid=batch_id)
-        if prev_open is None:
+        latest = _latest_open(spark, scd2_path, exclude_bid=batch_id)
+        if latest is not None:
+            prev_open = latest[0]
+        else:
             prev_open = spark.createDataFrame(
                 [], batch_df.select(*key_cols, *attr_cols).schema
             ).select(
@@ -104,15 +112,19 @@ def start_scd2_stream(
 
 
 def read_scd2(spark: SparkSession, scd2_path: str) -> DataFrame:
-    """The maintained SCD2 table: every closed interval + the newest
-    open set. Identical to ``scd2_from_snapshots`` over the full
-    snapshot history (asserted in tests/test_streaming_dims.py)."""
-    open_df = _latest_open(spark, scd2_path)
-    if open_df is None:
+    """The maintained SCD2 table as of its newest committed batch: the
+    newest open set + every interval closed up to that batch. Identical
+    to ``scd2_from_snapshots`` over the snapshot history of the batches
+    committed so far (asserted in tests/test_streaming_dims.py)."""
+    latest = _latest_open(spark, scd2_path)
+    if latest is None:
         raise FileNotFoundError(f"no open set under {scd2_path}/open")
+    open_df, bid = latest
     closed = read_state_or_none(
         spark, f"{scd2_path}/closed", base_path=f"{scd2_path}/closed"
     )
     if closed is None:  # nothing ever closed yet
         return open_df
-    return closed.drop("_bid").unionByName(open_df)
+    return (
+        closed.filter(F.col("_bid") <= bid).drop("_bid").unionByName(open_df)
+    )

@@ -14,10 +14,12 @@ SummingMergeTree semantics (reference test/network_flows_0.sql:39-44):
    reference's behavior (reference pkg/inserter/worker.go:134-147 writes
    whatever timestamp arrives; SURVEY.md §2.9).
 
-   Delivery: the file-source checkpoint makes input exactly-once; the
-   write is made idempotent under foreachBatch retries with a per-batch
-   commit marker (the analogue of the reference's per-batch
-   ``insert_deduplication_token``, reference pkg/inserter/worker.go:248).
+   Delivery: the file-source checkpoint makes input exactly-once, and
+   ``sink.commit_flow_batch`` commits each batch once: one staged write
+   under the table's hidden ``_staging`` dir, published by rename, then
+   a marker under ``<checkpoint>/_committed_batches`` (the analogue of
+   the reference's per-batch ``insert_deduplication_token``, reference
+   pkg/inserter/worker.go:248).
 
 2. ``start_windowed_flow_stream`` — **eager path** (stronger-than-
    reference). The whole labeler runs inside the streaming DSL (possible
@@ -37,6 +39,7 @@ Spark's executor parallelism replaces the 20 inserter workers
 
 from __future__ import annotations
 
+from functools import partial
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -49,7 +52,7 @@ from kubenetmon_spark.functions.flags import canonical_flags_json
 from kubenetmon_spark.operators.label import label_flows, split_rejected
 from kubenetmon_spark.operators.lpm import disjoint_prefixes
 from kubenetmon_spark.schema import DIM_COLS, OBSERVATION_SCHEMA
-from kubenetmon_spark.sink import append_intent, write_flows
+from kubenetmon_spark.sink import commit_flow_batch, write_flows
 
 
 def read_observations(
@@ -144,6 +147,11 @@ def start_flow_stream(
 ) -> StreamingQuery:
     """Merge-time path: full labeler per micro-batch via foreachBatch.
 
+    Each batch is labeled and written once, into a stage, and becomes
+    visible by rename (``sink.commit_flow_batch``: stage -> publish ->
+    mark): a crash anywhere in its commit, then a restart on the same
+    checkpoint, counts it once in the table and in ``dead_letter_path``.
+
     ``dim_loader`` (optional): a zero-arg callable returning fresh
     ``(pods, nodes, prefixes)`` DataFrames. When set with
     ``dim_refresh_batches = N > 0``, dimensions reload every N batches —
@@ -230,17 +238,9 @@ def start_flow_stream(
         "n": 0,
     }
 
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        fs = _fsm.get_fs(markers, batch_df.sparkSession)
-        marker = _fsm.join(markers, str(batch_id))
-        if fs.exists(marker):  # foreachBatch retry of a written batch
-            return
-        # One source scan per batch, pinned: the intent-dates probe and
-        # the write job both consume the batch, and a second scan would
-        # double-count the stream's numInputRows metric (and re-read
-        # the files). A micro-batch is small by construction, so the
-        # eager localCheckpoint is one cheap materialization.
-        batch_df = batch_df.localCheckpoint(eager=True)
+    def write_stage(
+        batch_df: DataFrame, batch_id: int, flow_stage: str, dead_stage=None
+    ) -> None:
         if dim_loader is not None and dim_refresh_batches > 0:
             dims["n"] += 1
             if dims["n"] % dim_refresh_batches == 0:
@@ -259,63 +259,58 @@ def start_flow_stream(
         spark = batch_df.sparkSession
         sqltexts = dims["sql"]
         batch_df.createOrReplaceTempView(obs_view)
-        if dead_letter_path is None:
-            labeled = None
-            flows = spark.sql(sqltexts["flows"])
-        else:
-            # Persist only when a second consumer (the dead-letter
-            # write) exists: with one consumer, materializing all 40
-            # labeled columns into the cache is pure per-batch overhead.
-            labeled = spark.sql(sqltexts["labeled"]).persist()
+        if dead_stage is None:
+            # the staged write is the batch's only consumer: the source
+            # is scanned once, inside the write job
+            write_flows(spark.sql(sqltexts["flows"]), flow_stage)
+            return
+        # Persist only when a second consumer (the dead-letter write)
+        # exists, so the source scan and the labeler still run once per
+        # batch; with one consumer, materializing all 40 labeled
+        # columns into the cache is pure per-batch overhead.
+        labeled = spark.sql(sqltexts["labeled"]).persist()
         try:
-            if labeled is not None:
-                # Aggregate over the PERSISTED labeled frame (the
-                # cache-manager matches the view's subtree), so the
-                # labeler still executes once per batch.
-                lview = f"_flow_labeled_{_tag}"
-                labeled.createOrReplaceTempView(lview)
-                dead = labeled.filter(F.col("reject_reason").isNotNull())
-                flows = spark.sql(
+            # Aggregate over the PERSISTED labeled frame (the
+            # cache-manager matches the view's subtree).
+            lview = f"_flow_labeled_{_tag}"
+            labeled.createOrReplaceTempView(lview)
+            write_flows(
+                spark.sql(
                     flows_agg_sql(
                         f"(SELECT * FROM {lview} "
                         "WHERE reject_reason IS NULL)"
                     )
-                )
-            # Publish per-date append intents before writing so a
-            # concurrent compaction/retention of the same partition
-            # either waits for this batch or this batch waits for it —
-            # never a silent lost-append (sink.partition_mutation_guard
-            # is the other side). r8: the intent dates come from the
-            # RAW batch (one tiny scan of ts only) — a superset of the
-            # written dates (a date whose rows all reject is declared
-            # but not written, which only makes a concurrent mutator of
-            # that date wait; intents retract on exit either way). The
-            # labeler+aggregation then run exactly ONCE, inside the
-            # write job, instead of once into cache (a 36-column
-            # materialization) plus a cache-read in the write.
-            dates = [
-                f"date={r['d']}"
-                for r in batch_df.select(
-                    F.to_date("ts").alias("d")
-                ).distinct().collect()
-                if r["d"] is not None
-            ]
-            if dates:
-                with append_intent(table_path, dates):
-                    write_flows(flows, table_path)
-            if dead_letter_path is not None:
-                (
-                    dead.groupBy("reject_reason")
-                    .agg(F.count(F.lit(1)).alias("n"))
-                    .withColumn("batch_id", F.lit(batch_id))
-                    .write.mode("append")
-                    .parquet(dead_letter_path)
-                )
+                ),
+                flow_stage,
+            )
+            (
+                labeled.filter(F.col("reject_reason").isNotNull())
+                .groupBy("reject_reason")
+                .agg(F.count(F.lit(1)).alias("n"))
+                .withColumn("batch_id", F.lit(batch_id))
+                .write.parquet(dead_stage)
+            )
         finally:
-            if labeled is not None:
-                labeled.unpersist()
-        fs.mkdirs(markers)
-        fs.write_bytes_atomic(marker, b"")
+            labeled.unpersist()
+
+    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
+        spark = batch_df.sparkSession
+        if "stream" not in dims:
+            # Spark's own id for this query, kept in the checkpoint and
+            # stable across restarts: it keys the batch's stage, since
+            # two streams can write one table
+            dims["stream"] = _fsm.get_fs(checkpoint_path, spark).read_json(
+                _fsm.join(checkpoint_path, "metadata")
+            )["id"]
+        commit_flow_batch(
+            table_path,
+            _fsm.join(markers, str(batch_id)),
+            dims["stream"],
+            batch_id,
+            partial(write_stage, batch_df, batch_id),
+            dead_letter_path=dead_letter_path,
+            spark=spark,
+        )
 
     writer = (
         observations.writeStream.queryName(query_name)

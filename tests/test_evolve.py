@@ -271,47 +271,3 @@ def test_empty_log_is_plain_read(spark, tmp_path):
     _v1(spark, tbl)
     assert schema_log(tbl) == []
     assert read_evolved(spark, tbl).count() == 100
-
-
-def test_streaming_read_applies_log(spark, tmp_path):
-    # a running stream consumes a table ACROSS an ALTER: generation 1
-    # lands, ALTERs happen, generation 2 appends in the new schema —
-    # the streamed union must equal the batch read_evolved answer
-    from kubenetmon_spark.evolve import apply_schema_log, evolved_schema
-
-    tbl = str(tmp_path / "t")
-    _v1(spark, tbl)
-    add_column(tbl, "region", "string", default="'unassigned'")
-    rename_column(tbl, "grp", "cohort")
-    spark.range(100, 120).selectExpr(
-        "id", "CAST(id % 7 AS INT) AS cohort", "id * 10 AS amount",
-        "'eu' AS region",
-    ).write.mode("append").parquet(tbl)
-
-    stream = spark.readStream.schema(evolved_schema(spark, tbl)).option(
-        "mergeSchema", "true"
-    ).parquet(tbl)
-    out = []
-
-    def collect(batch, _):
-        out.extend(
-            tuple(r)
-            for r in apply_schema_log(batch, tbl)
-            .select("id", "cohort", "amount", "region")
-            .collect()
-        )
-
-    q = stream.writeStream.foreachBatch(collect).trigger(
-        availableNow=True
-    ).option(
-        "checkpointLocation", str(tmp_path / "ckpt")
-    ).start()
-    assert q.awaitTermination(120), q.exception()
-
-    batch = sorted(
-        tuple(r)
-        for r in read_evolved(spark, tbl)
-        .select("id", "cohort", "amount", "region")
-        .collect()
-    )
-    assert sorted(out) == batch and len(batch) == 120

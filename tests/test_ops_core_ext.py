@@ -592,47 +592,6 @@ class TestExactMoments:
         assert got == ref == {"a": 2, "b": 0}
 
 
-class TestUniqStateMerge:
-    def test_union_of_parts_equals_whole_and_close_to_exact(self, spark):
-        from kubenetmon_spark.operators.sketch import uniq_merge, uniq_state
-
-        rows = [(d, f"u{i % 500}") for d in ("d1", "d2", "d3") for i in range(1000)]
-        df = spark.createDataFrame(rows, ["day", "user"]).withColumn(
-            "grp", F.lit("all")
-        )
-        # per-day sketch states (the persisted partial aggregate)
-        states = uniq_state(df, ["grp", "day"], "user")
-        merged = uniq_merge(states, ["grp"]).collect()[0].n_distinct_est
-        whole = uniq_state(df, ["grp"], "user")
-        direct = whole.select(
-            F.hll_sketch_estimate("uniq_sketch").alias("e")
-        ).collect()[0].e
-        assert merged == direct  # union associativity: parts == whole
-        assert abs(merged - 500) / 500 < 0.05
-
-    def test_partitioning_invariance(self, spark):
-        from kubenetmon_spark.operators.sketch import uniq_merge, uniq_state
-
-        rows = [("g", f"v{i}") for i in range(2000)]
-        a = uniq_merge(
-            uniq_state(
-                spark.createDataFrame(rows, ["grp", "v"]).repartition(2),
-                ["grp"],
-                "v",
-            ),
-            ["grp"],
-        ).collect()[0].n_distinct_est
-        b = uniq_merge(
-            uniq_state(
-                spark.createDataFrame(rows, ["grp", "v"]).repartition(13),
-                ["grp"],
-                "v",
-            ),
-            ["grp"],
-        ).collect()[0].n_distinct_est
-        assert abs(a - b) / 2000 < 0.02  # estimates agree within error
-
-
 class TestWeightedHeavyHitters:
     def test_matches_exact_on_skewed_weights(self, spark):
         from kubenetmon_spark.operators.sketch import heavy_hitters_weighted

@@ -394,3 +394,122 @@ def test_live_stream_vs_lifecycle_ops_no_lost_rows(spark, stream_inputs, tmp_pat
     compact(spark, table)
     expected = build_network_flows(spark, SF_DIR)
     assert _sorted_rows(read_flows(spark, table)) == _sorted_rows(expected)
+
+
+# ---------------------------------------------------------------------------
+# Forced crashes inside the flow sink's commit (stage -> publish -> mark)
+# ---------------------------------------------------------------------------
+
+def _staged_batch(path: str) -> str | None:
+    """The batch id of a path under ``_staging/<stream>/<batch>``."""
+    if "/_staging/" not in path:
+        return None
+    parts = path.split("/_staging/", 1)[1].split("/")
+    return parts[1] if len(parts) > 1 else None
+
+
+def _sink_totals(spark, table, dead):
+    total = read_flows(spark, table).agg(F.sum("bytes")).collect()[0][0]
+    by_reason = {
+        r.reject_reason: r.total
+        for r in spark.read.parquet(dead)
+        .groupBy("reject_reason")
+        .agg(F.sum("n").alias("total"))
+        .collect()
+    }
+    return total, by_reason
+
+
+@pytest.fixture(scope="module")
+def crash_inputs(spark, stream_inputs, tmp_path_factory):
+    """Three observation files, each carrying rejectable rows, and the
+    table sum and dead-letter counts of one clean run over them."""
+    obs_dir, pods, nodes, prefixes = stream_inputs
+    port = F.col("orig_src_port")
+    mixed = (
+        spark.read.schema(OBSERVATION_SCHEMA).parquet(obs_dir)
+        .withColumn("proto", F.when(port % 7 == 0, F.lit(1)).otherwise(F.col("proto")))
+        .withColumn(
+            "orig_src_ip",
+            F.when(port % 11 == 0, F.lit("127.0.0.1")).otherwise(F.col("orig_src_ip")),
+        )
+    )
+    root = tmp_path_factory.mktemp("crash")
+    mixed_dir = str(root / "obs")
+    mixed.repartition(3).write.parquet(mixed_dir)
+    start_flow_stream(
+        read_observations(spark, mixed_dir, max_files_per_trigger=1),
+        str(root / "flows"), str(root / "ckpt"), pods, nodes, prefixes, DEMO_CFG,
+        dead_letter_path=str(root / "dead"), trigger={"availableNow": True},
+    ).awaitTermination(300)
+    total, by_reason = _sink_totals(spark, str(root / "flows"), str(root / "dead"))
+    assert total > 0 and {"unsupported_proto", "localhost"} <= set(by_reason)
+    return mixed_dir, total, by_reason
+
+
+@pytest.mark.parametrize(
+    "fault", ["stage_write", "before_publish", "after_first_rename", "marker_write"]
+)
+def test_flow_sink_crash_then_restart_counts_each_batch_once(
+    spark, stream_inputs, crash_inputs, tmp_path, monkeypatch, fault
+):
+    """Batch 1 crashes at one point of its commit; a restart on the same
+    checkpoint must leave exactly the clean run's table sum and
+    dead-letter counts — nothing lost, nothing published twice — and no
+    staged files behind."""
+    from kubenetmon_spark import fs as fsm
+    from kubenetmon_spark.streaming import job
+
+    _, pods, nodes, prefixes = stream_inputs
+    mixed_dir, clean_total, clean_dead = crash_inputs
+    table, dead = str(tmp_path / "flows"), str(tmp_path / "dead")
+    fired: list[str] = []
+
+    def crash(where: str):
+        fired.append(where)
+        raise OSError(f"injected crash: {fault} at {where}")
+
+    if fault == "stage_write":
+        real_write = job.write_flows
+
+        def write_flows(df, path):
+            real_write(df, path)  # the flow rows land; the stage is not complete
+            if not fired and _staged_batch(path) == "1":
+                crash(path)
+
+        monkeypatch.setattr(job, "write_flows", write_flows)
+    elif fault in ("before_publish", "after_first_rename"):
+        real_rename = fsm.LocalFS.rename_no_replace
+
+        def rename_no_replace(self, src, dst):
+            if not fired and _staged_batch(src) == "1":
+                if fault == "after_first_rename":
+                    real_rename(self, src, dst)
+                crash(src)
+            real_rename(self, src, dst)
+
+        monkeypatch.setattr(fsm.LocalFS, "rename_no_replace", rename_no_replace)
+    else:
+        real_put = fsm.LocalFS.write_bytes_atomic
+
+        def write_bytes_atomic(self, path, data):
+            if not fired and path.endswith("_committed_batches/1"):
+                crash(path)
+            real_put(self, path, data)
+
+        monkeypatch.setattr(fsm.LocalFS, "write_bytes_atomic", write_bytes_atomic)
+
+    def run():
+        start_flow_stream(
+            read_observations(spark, mixed_dir, max_files_per_trigger=1),
+            table, str(tmp_path / "ckpt"), pods, nodes, prefixes, DEMO_CFG,
+            dead_letter_path=dead, trigger={"availableNow": True},
+        ).awaitTermination(300)
+
+    with pytest.raises(Exception, match="injected crash"):
+        run()
+    assert len(fired) == 1
+    run()  # restart on the same checkpoint: batch 1 is retried
+    assert _sink_totals(spark, table, dead) == (clean_total, clean_dead)
+    assert not list((tmp_path / "flows").glob("_staging/*/*"))
+    assert not list((tmp_path / "dead").glob("_staging/*/*"))

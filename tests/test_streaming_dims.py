@@ -7,6 +7,7 @@ import os
 import time
 from datetime import datetime
 
+import pytest
 from pyspark.sql import functions as F
 
 from kubenetmon_spark.operators.scd import scd2_from_snapshots
@@ -122,3 +123,47 @@ def test_streaming_scd2_asof_matches_snapshot(spark, tmp_path):
         ).collect()
     }
     assert at4 == {"k0": "b", "k1": "a", "k2": "x"}
+
+
+def test_scd2_read_between_closed_and_open_writes_sees_last_batch(
+    spark, tmp_path, monkeypatch
+):
+    """Batch 2 crashes after writing its closed intervals and before its
+    open set: a read then must equal batch 1's answer (k0's 'b'
+    interval is not both closed and open), and a restart completes the
+    history."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    src = str(tmp_path / "src")
+    scd2_path = str(tmp_path / "scd2")
+    ckpt = str(tmp_path / "ckpt")
+    base = time.time()
+    by_day = lambda lo, hi: [t for t in SNAPS if lo <= t[1] <= hi]  # noqa: E731
+    _write_batch(spark, src, by_day(1, 2), base - 300)
+    _write_batch(spark, src, by_day(3, 4), base - 200)
+    _write_batch(spark, src, by_day(5, 6), base - 100)
+
+    real_parquet = DataFrameWriter.parquet
+    fired: list[str] = []
+
+    def parquet(self, path, *args, **kwargs):
+        if not fired and path.endswith("open/_bid=2"):
+            fired.append(path)
+            raise OSError("injected crash before the open-set write")
+        return real_parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+    with pytest.raises(Exception, match="injected crash"):
+        _run(spark, src, scd2_path, ckpt)
+    assert fired and os.path.isdir(f"{scd2_path}/closed/_bid=2")
+
+    def rebuild(lo, hi):
+        return _table(
+            scd2_from_snapshots(
+                spark.createDataFrame(_rows(by_day(lo, hi)), SCHEMA), ["k"], ["app"]
+            )
+        )
+
+    assert _table(read_scd2(spark, scd2_path)) == rebuild(1, 4)
+    _run(spark, src, scd2_path, ckpt)  # restart: batch 2 is retried
+    assert _table(read_scd2(spark, scd2_path)) == rebuild(1, 6)
