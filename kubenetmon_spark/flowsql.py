@@ -61,7 +61,7 @@ from kubenetmon_spark.operators.lpm import (
     lpm6_narrow_on_sql,
     lpm6_wide_on_sql,
 )
-from kubenetmon_spark.schema import DIM_COLS
+from kubenetmon_spark.schema import DIM_COLS, PRIMARY_KEY_PREFIX
 
 _POD_FIELDS = ["name", "namespace", "node_name", "label_app", "label_k8s_app", "label_control_plane_id"]
 
@@ -627,4 +627,20 @@ def flow_batch_sql(
         "WITH _labeled AS (" + body + "),\n"
         "_accepted AS (SELECT * FROM _labeled WHERE reject_reason IS NULL)\n"
         + flows_agg_sql("_accepted")
+    )
+
+
+def dated_write_sql(flows: str) -> str:
+    """``flows`` (:func:`flow_batch_sql` or :func:`flows_agg_sql` text)
+    laid out for a plain ``partitionBy("date")`` write: each date's rows
+    in one task (one file per date per write), sorted on ``(date,
+    PRIMARY_KEY_PREFIX…)`` for row-group skipping. The sort leads with
+    ``date`` because Spark's planned write requires that order: a sort on
+    the key alone is replaced by a sort on ``date`` and never reaches the
+    file. In the same text, one analysis covers the labeler and the
+    layout; added as DataFrame operations they cost a second analysis of
+    the whole plan (75-90 ms a steady stream trigger on 4 vCPUs)."""
+    return (
+        flows
+        + f"DISTRIBUTE BY date SORT BY date, {', '.join(PRIMARY_KEY_PREFIX)}\n"
     )

@@ -83,7 +83,6 @@ __all__ = [
     "join",
     "parent",
     "basename",
-    "strip_scheme",
 ]
 
 
@@ -118,18 +117,6 @@ def _is_hidden_segment(name: str) -> bool:
     ``.``-prefixed names are ALWAYS hidden (Spark hides ``.k=v`` too —
     verified against its reader)."""
     return (name.startswith("_") and "=" not in name) or name.startswith(".")
-
-
-def strip_scheme(path: str) -> str:
-    """Local filesystem path for a ``file:`` URI (identity otherwise).
-    Useful where a local library (pyarrow footer reads) needs an
-    OS path for data that lives on the local store."""
-    p = str(path)
-    if p.startswith("file://"):
-        return p[len("file://") :] or "/"
-    if p.startswith("file:/"):
-        return p[len("file:") :]
-    return p
 
 
 class FS:

@@ -6,8 +6,8 @@ Storage layout mirrors what the reference's DDL buys from ClickHouse
 - ``PARTITION BY toDate(...)``      -> parquet ``partitionBy('date')``
 - SummingMergeTree background merge -> ``compact()`` re-aggregating a
   partition with the same groupBy-sum contract (operators/flows.py)
-- sparse PRIMARY KEY index          -> ``sortWithinPartitions`` on the key
-  prefix so parquet row-group min/max stats skip data the same way
+- sparse PRIMARY KEY index          -> each file sorted on ``(date, key
+  prefix)`` so parquet row-group min/max stats skip data the same way
 - ``TTL ... toIntervalDay(90)`` with ``ttl_only_drop_parts=1``
                                     -> ``apply_retention()`` dropping whole
   date partitions (exact analogue: whole-part drops)
@@ -392,23 +392,83 @@ def commit_flow_batch(
         fs.delete_dir(d)
 
 
+def _by_date(df: DataFrame, key: list[str]) -> DataFrame:
+    """``df`` laid out for a ``partitionBy("date")`` write: each date's
+    rows in one task (one file per date per write), sorted on ``(date,
+    *key)``. The sort leads with ``date`` because Spark's planned write
+    requires that order and, when a child sort does not give it, puts a
+    sort on ``date`` alone in its place, so the key never reaches the
+    file."""
+    return df.repartition("date").sortWithinPartitions("date", *key)
+
+
+def _flow_key(df: DataFrame) -> list[str]:
+    return [c for c in PRIMARY_KEY_PREFIX if c in df.columns]
+
+
+def append_by_date(df: DataFrame, path: str) -> None:
+    """Append ``df`` as it is laid out, partitioned by date: the one
+    append of both ``write_flows`` and the flow stream, whose SQL text
+    carries its own distribution and order (flowsql.dated_write_sql)."""
+    df.write.mode("append").partitionBy("date").parquet(path)
+
+
+def _rewrite_by_date(df: DataFrame, path: str, key: list[str]) -> None:
+    """Overwrite the date partitions present in ``df``, each with one
+    file sorted on ``(date, *key)``. The overwrite mode is pinned per
+    write: under the default "static" mode a rewrite of some dates would
+    wipe every OTHER date partition."""
+    (
+        _by_date(df, key)
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("date")
+        .parquet(path)
+    )
+
+
+def checkpoint_stream_id(checkpoint: str, spark=None) -> str | None:
+    """Spark's id for the query of ``checkpoint`` (its ``metadata``
+    file, written when the query first starts and kept across
+    restarts), or None before that. It names the query's stages."""
+    fs = _fsm.get_fs(checkpoint, spark)
+    meta = _join(checkpoint, "metadata")
+    return fs.read_json(meta)["id"] if fs.exists(meta) else None
+
+
+def drop_orphan_stages(
+    root: str, checkpoints: list[str], spark=None
+) -> list[str]:
+    """Delete ``<root>/_staging/<stream>/`` for every stream that none of
+    ``checkpoints`` names — what a query whose checkpoint was deleted for
+    good leaves of a cut commit (hidden from scans, never published).
+    ``root`` is a flow table or a dead-letter root; ``checkpoints`` must
+    list EVERY live query that writes it, since a live query's stage
+    deleted mid-commit loses that batch. The stages are listed before the
+    checkpoints are read, so a query that starts meanwhile is not taken
+    for an orphan. Returns the deleted stream ids."""
+    fs = _fsm.get_fs(root, spark)
+    stages = _join(root, _STAGING_DIR)
+    found = fs.list_names(stages) if fs.is_dir(stages) else []
+    live = {checkpoint_stream_id(c, spark) for c in checkpoints}
+    orphans = sorted(n for n in found if n not in live)
+    for n in orphans:
+        fs.delete_dir(_join(stages, n))
+    return orphans
+
+
 def write_flows(df: DataFrame, path: str) -> None:
-    """Append fact rows, partitioned by date, sorted for data skipping.
+    """Append fact rows, partitioned by date, sorted on ``(date,
+    PRIMARY_KEY_PREFIX…)`` for data skipping.
 
     Rows are shuffled to ``date`` before the write so each task owns
     whole date partitions: one file per date per batch. Without it,
     every one of N shuffle tasks appends a sliver to every date,
     producing N x dates tiny files per batch (measured 960 files -> 30
-    at sf0.1).
+    at sf0.1). The flow stream gets the same layout from its SQL text
+    instead (flowsql.dated_write_sql).
     """
-    key = [c for c in PRIMARY_KEY_PREFIX if c in df.columns]
-    (
-        df.repartition("date")
-        .sortWithinPartitions(*key)
-        .write.mode("append")
-        .partitionBy("date")
-        .parquet(path)
-    )
+    append_by_date(_by_date(df, _flow_key(df)), path)
 
 
 def read_flows(
@@ -541,18 +601,8 @@ def compact(
         # Materialize before overwriting the same path we read from — the
         # write must never delete input files while the read is still lazy.
         compacted = summing_aggregate(df).localCheckpoint(eager=True)
-        key = [c for c in PRIMARY_KEY_PREFIX if c in compacted.columns]
         fence()  # abort (loud) if a lease moved during the long read
-        (
-            compacted.repartition(F.col("date"))
-            .sortWithinPartitions(*key)
-            .write.mode("overwrite")
-            # pinned per-write: under the default "static" overwrite mode a
-            # target_date compaction would wipe every OTHER date partition
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("date")
-            .parquet(path)
-        )
+        _rewrite_by_date(compacted, path, _flow_key(compacted))
 
 
 def apply_retention(path: str, keep_days: int = 90, today: date | None = None) -> list[str]:
@@ -646,15 +696,7 @@ def write_projection(
     src = spark.read.parquet(base_path)
     if target_date is not None:
         src = src.filter(F.col("date") == target_date)
-    cols = [c for c in sort_cols if c in src.columns]
-    (
-        src.repartition(F.col("date"))
-        .sortWithinPartitions(*cols)
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("date")
-        .parquet(proj_path)
-    )
+    _rewrite_by_date(src, proj_path, [c for c in sort_cols if c in src.columns])
 
 
 def scan_flows(
@@ -752,18 +794,8 @@ def mutate(
                 ),
             )
         updated = updated.localCheckpoint(eager=True)
-        key = [c for c in PRIMARY_KEY_PREFIX if c in updated.columns]
         fence()
-        out = updated.repartition(F.col("date"))
-        if key:  # non-flow tables may carry none of the sort-key columns
-            out = out.sortWithinPartitions(*key)
-        (
-            out.write.mode("overwrite")
-            # pinned per-write (mutations touch only affected partitions)
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("date")
-            .parquet(path)
-        )
+        _rewrite_by_date(updated, path, _flow_key(updated))
     return sorted(f"date={d}" for d in affected)
 
 
@@ -811,20 +843,12 @@ def delete_where(
         # a fully-deleted partition writes no rows, so drop it explicitly.
         kept = {r.date for r in remaining.select("date").distinct().collect()}
         emptied = [d for d in affected if d not in kept]
-        key = [c for c in PRIMARY_KEY_PREFIX if c in remaining.columns]
         fence()
         if kept:
-            out = remaining.filter(F.col("date").isin(list(kept))).repartition(
-                F.col("date")
-            )
-            if key:  # non-flow tables may carry none of the sort keys
-                out = out.sortWithinPartitions(*key)
-            (
-                out.write.mode("overwrite")
-                # pinned per-write (deletes touch only affected partitions)
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("date")
-                .parquet(path)
+            _rewrite_by_date(
+                remaining.filter(F.col("date").isin(list(kept))),
+                path,
+                _flow_key(remaining),
             )
         fs = _fsm.get_fs(path, spark)
         for d in emptied:
@@ -918,20 +942,11 @@ def deduplicate(
         deduped = deduped.localCheckpoint(eager=True)
         # non-flow tables share none of the flow primary key — fall back to
         # the dedup key so the rewrite is still deterministically ordered
-        sort_key = [c for c in PRIMARY_KEY_PREFIX if c in deduped.columns] or [
-            c for c in key if c in deduped.columns
+        sort_key = _flow_key(deduped) or [
+            c for c in key if c in deduped.columns and c != "date"
         ]
-        out = deduped.repartition(F.col("date"))
-        if sort_key:
-            out = out.sortWithinPartitions(*sort_key)
         fence()
-        (
-            out.write.mode("overwrite")
-            # pinned per-write (dedup touches only duplicate-bearing partitions)
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("date")
-            .parquet(path)
-        )
+        _rewrite_by_date(deduped, path, sort_key)
     return sorted(f"date={d}" for d in dup_dates)
 
 
@@ -1071,18 +1086,9 @@ def apply_rollup_ttl(
                     "so the new rows fold in as an aged source; nothing "
                     "was rewritten"
                 )
-        key = [c for c in PRIMARY_KEY_PREFIX if c in rolled.columns]
         for f in fences:
             f()
-        (
-            rolled.repartition(F.col("date"))
-            .sortWithinPartitions(*key)
-            .write.mode("overwrite")
-            # pinned per-write (rollup-TTL touches only aged partitions)
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("date")
-            .parquet(path)
-        )
+        _rewrite_by_date(rolled, path, _flow_key(rolled))
         # source partitions the dynamic overwrite didn't rewrite (their
         # rows moved to the bucket's first day) must be dropped
         # explicitly (same contract as delete_where)
@@ -1394,15 +1400,8 @@ def clear_column_in_partition(
         cleared = sub.withColumn(
             column, F.expr(default_sql).cast(dict(sub.dtypes)[column])
         ).localCheckpoint(eager=True)  # never delete inputs under a lazy read
-        key = [c for c in PRIMARY_KEY_PREFIX if c in cleared.columns]
-        out = cleared.repartition(F.col("date"))
-        if key:  # non-flow tables may have none of the sort-key columns
-            out = out.sortWithinPartitions(*key)
         fence()
-        # pinned per-write (clears exactly one date partition)
-        out.write.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        ).partitionBy("date").parquet(path)
+        _rewrite_by_date(cleared, path, _flow_key(cleared))
 
 
 def apply_column_ttl(

@@ -52,7 +52,11 @@ from kubenetmon_spark.functions.flags import canonical_flags_json
 from kubenetmon_spark.operators.label import label_flows, split_rejected
 from kubenetmon_spark.operators.lpm import disjoint_prefixes
 from kubenetmon_spark.schema import DIM_COLS, OBSERVATION_SCHEMA
-from kubenetmon_spark.sink import commit_flow_batch, write_flows
+from kubenetmon_spark.sink import (
+    append_by_date,
+    checkpoint_stream_id,
+    commit_flow_batch,
+)
 
 
 def read_observations(
@@ -152,6 +156,13 @@ def start_flow_stream(
     mark): a crash anywhere in its commit, then a restart on the same
     checkpoint, counts it once in the table and in ``dead_letter_path``.
 
+    The stage write is one SQL text per table, rendered once per
+    dimension refresh: the labeler, the summing aggregation and the
+    file layout (one file per date, sorted on ``(date, key…)``,
+    flowsql.dated_write_sql), so each trigger analyses one plan. The
+    batches run without adaptive execution: it is switched off on the
+    session Spark clones for each run of the query, not on the caller's.
+
     ``dim_loader`` (optional): a zero-arg callable returning fresh
     ``(pods, nodes, prefixes)`` DataFrames. When set with
     ``dim_refresh_batches = N > 0``, dimensions reload every N batches —
@@ -178,6 +189,7 @@ def start_flow_stream(
     # pure per-trigger fixed cost (measured ~0.3s/batch at sf0.1).
     from kubenetmon_spark.flowsql import (
         collect_lpm_segments,
+        dated_write_sql,
         flow_batch_sql,
         flows_agg_sql,
         labeled_sql,
@@ -195,6 +207,7 @@ def start_flow_stream(
     # per trigger, measured).
     _tag = "".join(c if c.isalnum() else "_" for c in query_name)
     obs_view = f"_flow_obs_{_tag}"
+    labeled_view = f"_flow_labeled_{_tag}"
 
     def _build_sql(prepared, disjoint) -> dict:
         spark = pods.sparkSession
@@ -206,8 +219,16 @@ def start_flow_stream(
         )
         args = (cfg, prepared, obs_view, pod_view, banded_view, segments)
         return {
-            "flows": flow_batch_sql(*args),
+            "flows": dated_write_sql(flow_batch_sql(*args)),
             "labeled": labeled_sql(*args),
+            # the dead-letter branch aggregates the PERSISTED labeled
+            # frame (the cache manager matches the view's subtree)
+            "accepted_flows": dated_write_sql(
+                flows_agg_sql(
+                    f"(SELECT * FROM {labeled_view} "
+                    "WHERE reject_reason IS NULL)"
+                )
+            ),
         }
 
     # repartition(1): see prepare_label_dims — the persisted dimension
@@ -259,10 +280,13 @@ def start_flow_stream(
         spark = batch_df.sparkSession
         sqltexts = dims["sql"]
         batch_df.createOrReplaceTempView(obs_view)
+        # Each stage write is one spark.sql text whose layout (one file
+        # per date, sorted on (date, key…)) is in the text: no DataFrame
+        # operation follows it, so the plan is analysed once.
         if dead_stage is None:
             # the staged write is the batch's only consumer: the source
             # is scanned once, inside the write job
-            write_flows(spark.sql(sqltexts["flows"]), flow_stage)
+            append_by_date(spark.sql(sqltexts["flows"]), flow_stage)
             return
         # Persist only when a second consumer (the dead-letter write)
         # exists, so the source scan and the labeler still run once per
@@ -270,38 +294,29 @@ def start_flow_stream(
         # columns into the cache is pure per-batch overhead.
         labeled = spark.sql(sqltexts["labeled"]).persist()
         try:
-            # Aggregate over the PERSISTED labeled frame (the
-            # cache-manager matches the view's subtree).
-            lview = f"_flow_labeled_{_tag}"
-            labeled.createOrReplaceTempView(lview)
-            write_flows(
-                spark.sql(
-                    flows_agg_sql(
-                        f"(SELECT * FROM {lview} "
-                        "WHERE reject_reason IS NULL)"
-                    )
-                ),
-                flow_stage,
-            )
-            (
-                labeled.filter(F.col("reject_reason").isNotNull())
-                .groupBy("reject_reason")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .withColumn("batch_id", F.lit(batch_id))
-                .write.parquet(dead_stage)
-            )
+            labeled.createOrReplaceTempView(labeled_view)
+            append_by_date(spark.sql(sqltexts["accepted_flows"]), flow_stage)
+            spark.sql(
+                f"SELECT reject_reason, count(1) AS n, {int(batch_id)} AS batch_id"
+                f" FROM {labeled_view} WHERE reject_reason IS NOT NULL"
+                " GROUP BY reject_reason"
+            ).write.parquet(dead_stage)
         finally:
             labeled.unpersist()
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
+        # This is the clone of the caller's session that Spark makes for
+        # each run of the query (see register_flow_dim_views), so the
+        # caller keeps adaptive execution. A micro-batch's plan is small
+        # and its shapes repeat: re-optimizing it after every stage, one
+        # job per exchange, costs more than it can win back.
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
         if "stream" not in dims:
             # Spark's own id for this query, kept in the checkpoint and
             # stable across restarts: it keys the batch's stage, since
             # two streams can write one table
-            dims["stream"] = _fsm.get_fs(checkpoint_path, spark).read_json(
-                _fsm.join(checkpoint_path, "metadata")
-            )["id"]
+            dims["stream"] = checkpoint_stream_id(checkpoint_path, spark)
         commit_flow_batch(
             table_path,
             _fsm.join(markers, str(batch_id)),

@@ -145,3 +145,22 @@ def observations_df(spark: SparkSession):
              ob=500, op=5, rb=600, rp=6),
     ]
     return spark.createDataFrame(rows, OBSERVATION_SCHEMA)
+
+
+def unsorted_files(root, key: list[str]) -> list[str]:
+    """The data files under ``root``'s ``date=`` dirs whose rows are not
+    ordered on ``key`` (Spark's ascending order, nulls first)."""
+    from pathlib import Path
+
+    import pyarrow.parquet as pq
+
+    def rank(row):
+        return tuple((0, "") if v is None else (1, v) for v in row)
+
+    bad = []
+    for f in sorted(Path(root).glob("date=*/*.parquet")):
+        cols = pq.read_table(f, columns=key).to_pydict()
+        rows = [rank(r) for r in zip(*(cols[c] for c in key))]
+        if rows != sorted(rows):
+            bad.append(str(f))
+    return bad

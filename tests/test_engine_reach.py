@@ -39,7 +39,6 @@ EXEMPT = {
 # text to code references. Each is to be deleted or given a caller
 # (ROADMAP); the list may only shrink.
 PROSE_ONLY = {
-    "strip_scheme",
     "BatchMetricsListener",
     "append_metrics_parquet",
     "reference_counters",

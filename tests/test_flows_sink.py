@@ -81,6 +81,70 @@ def test_sink_write_compact_retention(spark, fact, tmp_path):
     assert not list(Path(path).glob("date=*"))  # whole-part drop, like ttl_only_drop_parts
 
 
+def _scrambled_flows(spark, n: int = 6000):
+    """``n`` flow rows over three dates with varied key columns, in an
+    order that is not the key order."""
+    from kubenetmon_spark.schema import NETWORK_FLOWS_SCHEMA as S
+
+    def gen(c: str, k: int) -> str:
+        return f"pmod(hash(id, '{c}'), {k})"
+
+    exprs = {
+        "date": "date_add(DATE'2024-03-01', CAST(id % 3 AS INT))",
+        "intervalStartTime": "timestamp_seconds(1709294400 + 86400 * (id % 3)"
+        f" + 60 * {gen('t', 30)})",
+        "intervalSeconds": "60",
+        "connectionFlags": "map('syn', id % 2 = 0)",
+        "direction": f"IF({gen('d', 2)} = 0, 'in', 'out')",
+        "proto": f"IF({gen('p', 2)} = 0, 'TCP', 'UDP')",
+        "localPort": gen("lp", 50),
+        "remotePort": gen("rp", 50),
+        "bytes": "id",
+        "packets": "id % 7",
+    }
+    cols = []
+    for f in S.fields:
+        expr = exprs.get(f.name, f"concat('{f.name}', {gen(f.name, 5)})")
+        cols.append(f"CAST({expr} AS {f.dataType.simpleString()}) AS {f.name}")
+    return spark.range(0, n, 1, 4).selectExpr(*cols)
+
+
+def test_every_sorted_writer_orders_files_on_date_and_key(spark, tmp_path):
+    """Each writer that sorts a date-partitioned rewrite leaves every
+    file ordered on its key: the sort leads with ``date``, which Spark's
+    planned write requires, so its own sort on ``date`` does not replace
+    the key sort."""
+    from kubenetmon_spark.schema import PRIMARY_KEY_PREFIX as KEY
+    from kubenetmon_spark.sink import (
+        apply_rollup_ttl,
+        clear_column_in_partition,
+        deduplicate,
+        delete_where,
+        mutate,
+        write_projection,
+    )
+    from tests.fixtures import unsorted_files
+
+    rows = _scrambled_flows(spark)
+    path, proj = str(tmp_path / "flows"), str(tmp_path / "proj")
+    steps = [
+        ("write_flows", lambda: write_flows(rows, path)),
+        ("write_flows again", lambda: write_flows(rows, path)),
+        ("compact", lambda: compact(spark, path)),
+        ("mutate", lambda: mutate(spark, path, "localPort % 3 = 0", {"bytes": "bytes + 1"})),
+        ("delete_where", lambda: delete_where(spark, path, "localPort % 5 = 0")),
+        ("deduplicate", lambda: (write_flows(rows, path), deduplicate(spark, path))),
+        ("clear_column", lambda: clear_column_in_partition(spark, path, "date=2024-03-02", "remoteService")),
+        ("rollup_ttl", lambda: apply_rollup_ttl(spark, path, age_days=7, granularity_seconds=3600, today=date(2024, 3, 20))),
+    ]
+    for name, step in steps:
+        step()
+        assert unsorted_files(path, KEY) == [], name
+    write_projection(spark, path, proj, ["remoteApp", "remotePod"])
+    assert unsorted_files(proj, ["remoteApp", "remotePod"]) == []
+    assert read_flows(spark, path).select("date").distinct().count() == 3
+
+
 class TestCompactMergeDebt:
     """r8: under ``presummed=True`` (every append was summing_aggregate
     output — the streaming sink's posture) compact cost is proportional

@@ -19,7 +19,6 @@ from kubenetmon_spark.fs import (
     is_uri,
     join,
     parent,
-    strip_scheme,
 )
 
 
@@ -52,11 +51,6 @@ class TestPathHelpers:
         assert parent("s3a://bkt/t/date=x") == "s3a://bkt/t"
         assert basename("/a/b") == "b"
         assert parent("/a/b") == "/a"
-
-    def test_strip_scheme(self):
-        assert strip_scheme("file:/tmp/x") == "/tmp/x"
-        assert strip_scheme("file:///tmp/x") == "/tmp/x"
-        assert strip_scheme("/tmp/x") == "/tmp/x"
 
     def test_get_fs_dispatch(self, spark):
         assert isinstance(get_fs("/tmp/x"), LocalFS)

@@ -6,6 +6,7 @@ Both must converge to the same answer as the batch pipeline.
 from __future__ import annotations
 
 from datetime import datetime, timedelta
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
@@ -470,14 +471,14 @@ def test_flow_sink_crash_then_restart_counts_each_batch_once(
         raise OSError(f"injected crash: {fault} at {where}")
 
     if fault == "stage_write":
-        real_write = job.write_flows
+        real_write = job.append_by_date
 
-        def write_flows(df, path):
+        def append_by_date(df, path):
             real_write(df, path)  # the flow rows land; the stage is not complete
             if not fired and _staged_batch(path) == "1":
                 crash(path)
 
-        monkeypatch.setattr(job, "write_flows", write_flows)
+        monkeypatch.setattr(job, "append_by_date", append_by_date)
     elif fault in ("before_publish", "after_first_rename"):
         real_rename = fsm.LocalFS.rename_no_replace
 
@@ -513,3 +514,73 @@ def test_flow_sink_crash_then_restart_counts_each_batch_once(
     assert _sink_totals(spark, table, dead) == (clean_total, clean_dead)
     assert not list((tmp_path / "flows").glob("_staging/*/*"))
     assert not list((tmp_path / "dead").glob("_staging/*/*"))
+
+
+def test_stage_write_runs_its_text_as_planned(spark, stream_inputs, tmp_path, monkeypatch):
+    """Each stage write is one SQL text run without adaptive execution,
+    sorted on (date, key…), one file per date; the caller's session
+    keeps adaptive execution."""
+    import re
+
+    from kubenetmon_spark.schema import PRIMARY_KEY_PREFIX
+    from kubenetmon_spark.streaming import job
+    from tests.fixtures import unsorted_files
+
+    obs_dir, pods, nodes, prefixes = stream_inputs
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+    plans, files_per_date = [], []
+    real_write = job.append_by_date
+
+    def append_by_date(df, path):
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        real_write(df, path)
+        files_per_date.extend(
+            len(list(d.glob("*.parquet"))) for d in Path(path).glob("date=*")
+        )
+
+    monkeypatch.setattr(job, "append_by_date", append_by_date)
+    table = tmp_path / "flows"
+    start_flow_stream(
+        read_observations(spark, obs_dir, max_files_per_trigger=1),
+        str(table), str(tmp_path / "ckpt"), pods, nodes, prefixes, DEMO_CFG,
+        trigger={"availableNow": True},
+    ).awaitTermination(300)
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+    assert len(plans) == 3 and files_per_date and set(files_per_date) == {1}
+    for plan in plans:
+        # (a cached dimension inside may keep the adaptive plan it was
+        # built with; the micro-batch's own plan is not wrapped in one)
+        assert "AdaptiveSparkPlan" not in plan.splitlines()[0]
+        top_sort = re.search(r"Sort \[([^\]]*)\]", plan).group(1)
+        assert re.findall(r"(\w+)#\d+", top_sort) == ["date", *PRIMARY_KEY_PREFIX]
+    assert unsorted_files(table, PRIMARY_KEY_PREFIX) == []
+
+
+def test_drop_stages_spares_listed_checkpoints(spark, stream_inputs, tmp_path, monkeypatch):
+    """``maintain.py drop-stages`` deletes the stage of a stream whose
+    checkpoint is gone and never the stage of a listed live one."""
+    import sys
+
+    from kubenetmon_spark.sink import checkpoint_stream_id
+    from tools.maintain import main
+
+    obs_dir, pods, nodes, prefixes = stream_inputs
+    table, ckpt = tmp_path / "flows", str(tmp_path / "ckpt")
+    start_flow_stream(
+        read_observations(spark, obs_dir), str(table), ckpt, pods, nodes,
+        prefixes, DEMO_CFG, trigger={"availableNow": True},
+    ).awaitTermination(300)
+    live = checkpoint_stream_id(ckpt)
+    # a cut commit of the live stream and one of a stream long gone
+    for stream in (live, "0f0f0f0f-gone"):
+        batch = table / "_staging" / stream / "7" / "date=2024-03-01"
+        batch.mkdir(parents=True)
+        (batch / "part-0.parquet").write_bytes(b"staged")
+    data = sorted(p.name for p in table.glob("date=*/*.parquet"))
+
+    argv = ["maintain.py", "drop-stages", str(table), "--checkpoints", ckpt]
+    monkeypatch.setattr(sys, "argv", argv)
+    assert main() == 0
+    assert [p.name for p in (table / "_staging").iterdir()] == [live]
+    assert (table / "_staging" / live / "7" / "date=2024-03-01" / "part-0.parquet").exists()
+    assert sorted(p.name for p in table.glob("date=*/*.parquet")) == data

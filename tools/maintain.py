@@ -24,6 +24,8 @@ Usage:
   python tools/maintain.py move-partition <src> <dst> <YYYY-MM-DD>
   python tools/maintain.py replace-partition <dst> <src> <YYYY-MM-DD>
   python tools/maintain.py estimate <table_path> [--min-date D] [--max-date D]
+  python tools/maintain.py drop-stages <root> --checkpoints C1,C2 \\
+      # drop stages that no live stream's checkpoint owns
 """
 
 from __future__ import annotations
@@ -132,6 +134,17 @@ def main() -> int:
     es.add_argument("table_path")
     es.add_argument("--min-date", default=None)
     es.add_argument("--max-date", default=None)
+    ds = sub.add_parser(
+        "drop-stages",
+        help="delete the _staging/<stream> dirs of a flow table or "
+        "dead-letter root whose stream no listed checkpoint owns",
+    )
+    ds.add_argument("root")
+    ds.add_argument(
+        "--checkpoints",
+        required=True,
+        help="comma-separated checkpoints of EVERY live stream writing root",
+    )
     args = ap.parse_args()
 
     from kubenetmon_spark.session import get_spark
@@ -173,6 +186,12 @@ def main() -> int:
 
         replace_partition(args.dst_path, args.src_path, args.partition)
         print(f"replaced date={args.partition} in {args.dst_path}")
+        return 0
+    if args.cmd == "drop-stages":
+        from kubenetmon_spark.sink import drop_orphan_stages
+
+        dropped = drop_orphan_stages(args.root, args.checkpoints.split(","))
+        print(f"dropped {len(dropped)} orphaned stages: {dropped}")
         return 0
     if args.cmd == "estimate":
         from kubenetmon_spark.guards import estimate_scan
